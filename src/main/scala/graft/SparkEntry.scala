@@ -58,14 +58,14 @@ object SparkEntry {
     * rebuilds); a shared deployment would key by job id on the
     * cluster store instead. */
   private def knnIndex(s: SparkSession, d: String): DataFrame =
-    cachedKnn(s, d, "v1", embeddings(s, d))
+    cachedKnn(s, d, "v2", embeddings(s, d))
 
   /** The 80% base-subset graph the incremental-insert query extends
     * (vec_id % 5 != 0 — the other 20% is q_knn_ins's arrival batch),
     * cached like [[knnIndex]] so the registry measures the INSERT
     * path (search + sliver merge), never the base build. */
   private def knnBaseIndex(s: SparkSession, d: String): DataFrame =
-    cachedKnn(s, d, "v1b",
+    cachedKnn(s, d, "v2b",
       embeddings(s, d).filter(pmod(col("vec_id"), lit(5)) =!= 0))
 
   private def cachedKnn(s: SparkSession, d: String, tag: String,
@@ -77,10 +77,7 @@ object SparkEntry {
     val fp = s"${fpRow.getLong(0)}_${fpRow.getLong(1)}"
     val dir =
       s"/tmp/graft_knn_${tag}_${new java.io.File(d).getName}_$fp"
-    // r16: saveKnn publishes through the manifest, so completion is
-    // _ledger/CURRENT — a pre-r16 cached dir (meta/_SUCCESS layout)
-    // counts as unpublished and is rebuilt in place
-    publishCached(dir, marker = "_ledger/CURRENT") { stage =>
+    publishCached(s, dir) { stage =>
       graft.vector.IndexStore.saveKnn(stage,
         graft.vector.NnDescent.build(emb, k = 10,
           maxRounds = 6, convergedFrac = 0.01), 10)
@@ -89,10 +86,10 @@ object SparkEntry {
   }
 
 
-  /** Run independent store appends as CONCURRENT jobs (r17): the
-    * snapshot stores' append path commutes under the optimistic-retry
-    * commit (two concurrent appenders both land, equal to the
-    * sequential result — SnapshotStoreSpec/Bm25SnapshotSpec pins), so
+  /** Run independent store appends as CONCURRENT jobs (r17): appends
+    * commute, and the snapshot stores' put-if-absent manifest commit
+    * lands every concurrent appender, equal to the sequential result
+    * (SnapshotStoreConcurrencySpec/Bm25SnapshotSpec pins), so
     * the lifecycle queries run their independent arrival batches in
     * parallel instead of serializing three full append latencies. */
   private def inParallel(actions: Seq[() => Unit]): Unit = {
@@ -109,18 +106,17 @@ object SparkEntry {
     f.delete(); ()
   }
 
-  /** Build-once publish of a /tmp artifact dir: `build` writes into a
-    * staged dir whose LAST write must create `marker` (the relative
-    * completion marker — `meta/_SUCCESS` for the parts stores,
-    * `_ledger/CURRENT` for the manifest stores), then an atomic rename
-    * publishes. Torn-dir replacement is serialized through a lock
-    * file so two racers cannot delete each other's freshly published
-    * artifact; the lock loser waits for the winner's publish instead
-    * of deleting. */
-  private def publishCached(dir: String, marker: String = "meta/_SUCCESS")
+  /** Build-once publish of a /tmp manifest-store artifact dir: `build`
+    * writes into a staged dir whose LAST write commits the store's
+    * manifest (a committed manifest is the completion marker), then
+    * an atomic rename publishes. Torn-dir replacement is serialized
+    * through a lock file so two racers cannot delete each other's
+    * freshly published artifact; the lock loser waits for the
+    * winner's publish instead of deleting. */
+  private def publishCached(s: SparkSession, dir: String)
                            (build: String => Unit): Unit = {
     val target = new java.io.File(dir)
-    def published = new java.io.File(s"$dir/$marker").exists()
+    def published = graft.sources.SnapshotStore.currentGen(s, dir) > 0L
     if (published) return
     val stage = new java.io.File(
       dir + ".stage." + java.lang.ProcessHandle.current().pid())
@@ -128,7 +124,7 @@ object SparkEntry {
     if (!stage.renameTo(target)) {
       // rename refuses when the target exists: either another process
       // published a complete artifact (keep theirs), or a crashed run
-      // left a torn dir (no _SUCCESS). Every failed rename re-checks
+      // left a torn dir (no manifest). Every failed rename re-checks
       // published and throws rather than returning a missing artifact.
       if (!published) {
         val lock = new java.io.File(dir + ".lock")
@@ -158,9 +154,8 @@ object SparkEntry {
     * of the %11 corpus built once per dataset) and the id threshold —
     * so the
     * registry q_icorpus measures the INCREMENT path, never the base
-    * build, exactly like [[knnBaseIndex]] for q_knn_ins. The store's
-    * own `_ledger/CURRENT` (written by the build's manifest publish,
-    * which is its LAST write) doubles as the publish-completion
+    * build, exactly like [[knnBaseIndex]] for q_knn_ins. The build's
+    * manifest commit, its LAST write, doubles as the publish-completion
     * marker. */
   private val icorpusBaseCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
@@ -194,8 +189,8 @@ object SparkEntry {
     val base = corpus.filter(col("doc_id") <= t)
     val fp = s"${kRow.getLong(1)}_${kRow.getLong(2)}"
     val dir =
-      s"/tmp/graft_icorpus_v4_${new java.io.File(d).getName}_$fp"
-    publishCached(dir, marker = "_ledger/CURRENT") { stage =>
+      s"/tmp/graft_icorpus_v5_${new java.io.File(d).getName}_$fp"
+    publishCached(s, dir) { stage =>
       graft.text.CorpusIncrement.build(base,
         docs.filter(col("doc_id") % 11 === 0), stage,
         rates = Map("en" -> 0.25, "zh" -> 0.8))
@@ -210,10 +205,9 @@ object SparkEntry {
     * here are hundreds of small files, driver-side and IO-bound, so
     * the sequential walk was pure latency. Files HARD-LINK instead of
     * byte-copying (r17): every store file is immutable once written —
-    * a mutating increment only ADDS parts, and ledger updates land as
-    * fresh tmp files renamed over the old name, which repoints the
-    * directory entry without touching the linked original — so the
-    * link-share is invisible to both trees and skips the data IO
+    * a mutating increment only ADDS parts and manifests, and
+    * retirement only unlinks names — so the link-share is invisible
+    * to both trees and skips the data IO
     * (falls back to a byte copy across filesystems). */
   private def copyTree(src: java.io.File, dst: java.io.File): Unit = {
     if (src.isDirectory) {

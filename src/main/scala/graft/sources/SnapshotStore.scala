@@ -3,100 +3,67 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** MVCC-lite versioned-manifest store — the reader-isolation upgrade
-  * the rollback journal deliberately left out (single-writer
-  * maintenance serializes WRITERS; a live READER overlapping a
-  * compaction's delete-then-rename window could still observe a
-  * partial store). Model: the snapshot-isolation half of an iceberg/
-  * delta-style table, at the engine's parts-store grain:
+/** MVCC-lite versioned-manifest store: the snapshot-isolation half of
+  * an iceberg/delta-style table, at the engine's parts-store grain.
   *
-  *  - data lives in immutable part directories under `parts/` — a
-  *    writer only ever CREATES new ones, never mutates or deletes a
-  *    published file. IMMUTABILITY IS THE STORE CONTRACT, stated here
-  *    because more than readers depends on it (r18, the r17 advisor's
-  *    finding): every write path in every store on this protocol must
-  *    stay strictly create-new (data/marker files) or tmp+rename
-  *    (ledger files — the rename repoints the directory entry, never
-  *    writing through an existing inode). That is what makes
-  *    HARD-LINK CLONES of a store safe (the bench's copyTree shares
-  *    inodes between base and work tree): any future
-  *    `fs.create(path, overwrite=true)` of an EXISTING store file
-  *    would truncate through the shared inode and silently corrupt
-  *    every clone. HardLinkCloneSpec pins it end-to-end: a mutated
-  *    hard-link clone leaves its base byte-identical;
-  *  - the committed file set is a MANIFEST LIST (r16 — iceberg's
-  *    manifest/manifest-list split at this grain): `_ledger/mp_<id>`
-  *    files are immutable manifest PARTS, each listing a batch of
-  *    live data files (store-relative); `_ledger/manifest.N` lists
-  *    the generation's parts as `@mp_<id>` reference lines (plus any
-  *    legacy direct file lines — both grammars read forever; r17
-  *    writers prepend a `#fence=<E>` comment line attributing the
-  *    manifest to its writer epoch, which collision handling reads
-  *    and every reader skips); and `_ledger/CURRENT` names N. An
-  *    append therefore publishes ONE new manifest part + one small
-  *    list — O(delta), not O(live files) — and an edit (bucket
-  *    compaction, retirement) rewrites only the parts whose files it
-  *    touches, reusing every other part BY REFERENCE across
-  *    generations (SnapshotStoreSpec pins the reuse). Publication is
-  *    one atomic rename of CURRENT — before it readers resolve
-  *    generation N-1 complete, after it N complete, never a mix (the
-  *    concurrent-reader spec's pin);
-  *  - [[read]] resolves CURRENT once and plans over that exact file
-  *    list, so a query keeps its snapshot for its whole lifetime even
-  *    across concurrent appends/compactions (files it references
-  *    outlive it — see retire); `read(dir, gen)` serves any COMMITTED
-  *    generation still inside the grace window (AS-OF time travel;
-  *    r17 — generations above CURRENT, i.e. torn manifests whose swap
-  *    never ran, are excluded from the time-travel surface so a
-  *    pinned AS-OF manifest is never delete-and-replaced underneath
-  *    its reader);
-  *  - [[compact]] folds the current generation into one new part and
-  *    publishes the next manifest; superseded files are NOT deleted
-  *    at publish time — [[retire]] deletes parts unreferenced by the
-  *    last `keepGenerations` manifests, the grace window in-flight
-  *    readers run inside (the same bargain iceberg's
-  *    expire-snapshots strikes). A crash ANYWHERE leaves either the
-  *    old CURRENT (unpublished parts are invisible orphans retire
-  *    sweeps) or the new one (complete by construction) — no journal
-  *    replay needed, which is why this store needs no rollback journal.
+  * Layout:
+  *  - data lives in immutable files under the store's data subtrees
+  *    (`parts/`, or a bucketed store's own artifact dirs). A writer
+  *    only ever CREATES new files. No write path opens an existing
+  *    store file for writing, which is what makes HARD-LINK CLONES of
+  *    a store safe (the bench's copyTree shares inodes between base
+  *    and work tree); HardLinkCloneSpec pins it;
+  *  - `_ledger/mp_<id>` files are immutable manifest PARTS, each
+  *    listing a batch of live data files (store-relative);
+  *  - `_ledger/manifest.N` is generation N: a `#op=<op> parent=<gen>
+  *    id=<uid> parent_id=<parent's uid>` header line, then the
+  *    generation's parts as `@mp_<id>` lines.
+  *    An append publishes ONE new part plus a small list, O(delta);
+  *    an edit rewrites only the parts whose files it touches and
+  *    reuses every other part BY REFERENCE (SnapshotStoreSpec pins
+  *    the reuse).
   *
-  * CONCURRENT WRITERS (r16 fencing, r17 retry + hardening): every
-  * mutating operation claims a fencing epoch (`_ledger/fence.E`)
-  * BEFORE reading the state it transforms, and `publish` refuses
-  * (throws the stale-writer error) when a newer epoch exists — at
-  * entry, again on a manifest-name collision, and once more
-  * immediately before the CURRENT swap (alongside a committed-
-  * generation re-check), so the check-then-act window is the single
-  * rename/swap step, not the whole publish. Because the epoch claim
-  * and the swap are separate filesystem operations, the guarantee is
-  * FAIL-FAST WITH A NARROW RESIDUAL WINDOW, not mutual exclusion: a
-  * split-brain writer that passes its final pre-swap check in the
-  * instant before a newer claim lands can still swap CURRENT — what
-  * the fencing buys is that every wider interleaving (the ones real
-  * schedulers actually produce) fails loudly instead of silently
-  * dropping lines. Claims are themselves race-hardened for
-  * filesystems whose create-without-overwrite is not atomic
-  * (RawLocalFileSystem, object stores): the claimant writes a unique
-  * token and re-reads it — a lost duel reads the winner's token and
-  * retries one epoch higher. On rename-atomic filesystems (HDFS) the
-  * claim itself is atomic and the token check never fires.
+  * COMMIT (the log-store put-if-absent of the Delta Lake protocol):
+  * a writer that read generation N stages
+  * `_ledger/manifest.<N+1>.<uuid>.tmp` in full, then publishes it with
+  * an operation that fails when the target exists — link(2) on the
+  * local filesystem, `rename` on HDFS, which refuses an existing
+  * target atomically. So generation N+1 exists iff exactly one writer
+  * created it, and the committed generation is the highest
+  * `manifest.N` on disk: there is no pointer file to swap and a
+  * present manifest is complete. Object stores without an atomic
+  * no-overwrite rename are unsupported.
   *
-  * APPEND-SHAPED operations COMMUTE (each adds fresh immutable files
-  * and keeps whatever else is live), so [[append]] /
-  * [[publishAppend]] resolve a lost fence race by OPTIMISTIC RETRY
-  * (the iceberg commit loop): re-claim, re-read CURRENT, recompute
-  * the delta lines — the data files are already written and immutable,
-  * only the manifest work repeats — and re-publish, so two concurrent
-  * appenders BOTH land and the result equals the sequential one.
-  * Read-modify-write operations (compaction, changelog merge,
-  * retirement) keep [[publishNext]]'s fail-fast: their output was
-  * computed FROM the generation a concurrent writer just replaced, so
-  * retrying blind would be wrong — the caller re-runs from fresh
-  * state.
+  * CONFLICTS: a writer whose slot N+1 is taken lost to a concurrent
+  * commit. Read-modify-write operations (compaction, changelog merge,
+  * tombstone retirement, table replacement) throw the `stale writer`
+  * error through [[publishNext]] — their output was computed from
+  * the generation the winner replaced — and the caller re-runs from
+  * fresh state. Appends COMMUTE, so [[publishAppend]] re-reads the
+  * head and retries with no sleep and no cap: every conflict proves
+  * another commit landed. Retirement deletes old manifests, so a
+  * writer whose base+1 slot was freed could link below the head. A
+  * writer that finds a higher manifest after its link, other than one
+  * built on its own (named by `parent_id`), deletes its manifest and
+  * treats the commit as a conflict. Retirement always keeps the newest
+  * manifest and deletes in ascending order, so that check is
+  * sufficient.
   *
-  * Write amplification is unchanged vs the journaled stores (one new
-  * part per append/compaction); the cost of isolation is deferred
-  * space reclamation, bounded by the grace window.
+  * READS: [[read]] resolves the head once and plans over that exact
+  * file list, so a query keeps its snapshot for its lifetime across
+  * concurrent writers. `read(dir, gen)` serves any generation still
+  * inside the grace window (AS-OF time travel).
+  *
+  * RECLAMATION: [[retire]] keeps the newest `keepGenerations`
+  * manifests — the grace window in-flight readers run inside, the
+  * bargain iceberg's expire-snapshots strikes. A file referenced only
+  * by manifests it drops is superseded and deleted at once; a file no
+  * manifest on disk references is an orphan (a torn or in-flight
+  * writer's output) and is deleted only once older than
+  * [[TmpGraceMs]] — the orphan rule of Delta's VACUUM and iceberg's
+  * deleteOrphanFiles. A crash anywhere leaves either the old head
+  * (unpublished files are invisible orphans) or the new one, complete
+  * by construction, so the store needs no rollback journal.
   */
 object SnapshotStore {
 
@@ -107,27 +74,45 @@ object SnapshotStore {
   }
 
   private def ledger(root: Path) = new Path(root, "_ledger")
-  private def currentPath(root: Path) = new Path(ledger(root), "CURRENT")
+  private def manifestPath(root: Path, gen: Long) =
+    new Path(ledger(root), s"manifest.$gen")
+  private def uid(n: Int) = java.util.UUID.randomUUID().toString.take(n)
+  private def isLocal(p: Path) = p.toUri.getScheme == "file"
+  private def nio(p: Path) = java.nio.file.Paths.get(p.toUri)
 
-  private def writeAtomic(fs: FileSystem, p: Path, content: String): Unit = {
-    // tmp names are writer-unique (r17): with a SHARED tmp name two
-    // concurrent publishers of the same target could rename each
-    // other's half-written content — e.g. writer A swapping CURRENT to
-    // the value writer B was staging
-    val tmp = new Path(p.getParent, p.getName +
-      s".${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val o = fs.create(tmp, true)
-    try o.write(content.getBytes("UTF-8")) finally o.close()
-    if (!fs.rename(tmp, p)) {
-      // rename-over-existing fails on some local FS implementations;
-      // a delete+rename pair still leaves only {old absent, new
-      // present} faces because the tmp write completed first
-      fs.delete(p, false)
-      if (!fs.rename(tmp, p))
-        throw new java.io.IOException(s"manifest rename failed: $tmp -> $p")
+  /** Create a new ledger file. Local files are written through
+    * java.nio, the API [[putIfAbsent]] links with, so no checksum
+    * sidecar is written beside a file that is later linked or
+    * deleted. */
+  private def writeNew(fs: FileSystem, p: Path, content: String): Unit = {
+    val bytes = content.getBytes("UTF-8")
+    if (isLocal(p))
+      java.nio.file.Files.write(nio(p), bytes,
+        java.nio.file.StandardOpenOption.CREATE_NEW)
+    else {
+      val o = fs.create(p, false)
+      try o.write(bytes) finally o.close()
     }
     ()
   }
+
+  /** Publish the fully staged `tmp` as `target` unless `target`
+    * exists; false when another writer holds it. The local filesystem
+    * links (link(2) refuses an existing target atomically — Hadoop's
+    * local `rename` replaces it); other filesystems rename, which HDFS
+    * refuses atomically. The tmp name is removed either way. */
+  private def putIfAbsent(fs: FileSystem, tmp: Path, target: Path): Boolean =
+    if (isLocal(target)) {
+      try { java.nio.file.Files.createLink(nio(target), nio(tmp)); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      finally { java.nio.file.Files.deleteIfExists(nio(tmp)); () }
+    } else if (fs.rename(tmp, target)) true
+    else {
+      fs.delete(tmp, false)
+      if (!fs.exists(target))
+        throw new java.io.IOException(s"manifest rename failed: $tmp -> $target")
+      false
+    }
 
   private def readFile(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
@@ -135,133 +120,95 @@ object SnapshotStore {
     finally in.close()
   }
 
-  /** The CURRENT file's committed generation, None when absent (fresh
-    * store, or the mid-publish window on rename-refuses-to-replace
-    * filesystems). */
-  private def committedGen(fs: FileSystem, root: Path): Option[Long] =
-    if (fs.exists(currentPath(root)))
-      readFile(fs, currentPath(root)).trim.toLongOption
-    else None
-
-  /** Newest `manifest.N` on disk, 0 when none. */
-  private def newestManifest(fs: FileSystem, root: Path): Long =
-    if (!fs.exists(ledger(root))) 0L
+  /** Every `manifest.N` on disk, ascending (staged `*.tmp` names do
+    * not parse as a generation). */
+  private def manifestGens(fs: FileSystem, root: Path): Seq[Long] =
+    if (!fs.exists(ledger(root))) Nil
     else fs.listStatus(ledger(root)).iterator
       .map(_.getPath.getName)
       .filter(_.startsWith("manifest."))
       .flatMap(_.stripPrefix("manifest.").toLongOption)
-      .maxOption.getOrElse(0L)
+      .toSeq.sorted
 
-  /** The current generation number, 0 when the store is empty.
-    *
-    * An ABSENT `CURRENT` does not mean an empty store: on HDFS and the
-    * object-store filesystems `FileSystem.rename` refuses to replace
-    * an existing destination, so [[writeAtomic]]'s delete-then-rename
-    * pair is the NORMAL publication path there — every publish has a
-    * window where CURRENT is missing (and a crash inside it loses
-    * CURRENT until the next publish). Readers therefore fall back to
-    * the newest `manifest.N` on disk: manifests are themselves
-    * rename-published (a present manifest is complete), the newest one
-    * is either the committed generation or the one whose CURRENT swap
-    * was in flight — and in the latter case its part files were fully
-    * written before `publish` ran, so resolving it early is safe. */
+  private def head(fs: FileSystem, root: Path): Long =
+    manifestGens(fs, root).lastOption.getOrElse(0L)
+
+  /** The committed generation — the highest manifest on disk — 0 when
+    * the store is empty. */
   def currentGen(spark: SparkSession, dir: String): Long = {
     val (fs, root) = fsOf(spark, dir)
-    committedGen(fs, root).getOrElse(newestManifest(fs, root))
+    head(fs, root)
   }
 
-  /** COMMITTED generations still resolvable on disk (ascending) — the
-    * AS-OF surface: any of these can be pinned by `read(dir, gen)` /
-    * [[filesAsOf]] until retirement drops it past the grace window.
-    * Manifests ABOVE the current generation are excluded (r17): they
-    * are torn attempts whose CURRENT swap never ran, and a writer
-    * retrying that generation delete-and-replaces them in place —
-    * time travel only serves generations that actually committed,
-    * whose manifests are immutable until retired. */
+  /** Generations still resolvable on disk (ascending) — the AS-OF
+    * surface: any of these can be pinned by `read(dir, gen)` /
+    * [[filesAsOf]] until retirement drops it past the grace window. */
   def generations(spark: SparkSession, dir: String): Seq[Long] = {
     val (fs, root) = fsOf(spark, dir)
-    if (!fs.exists(ledger(root))) Nil
-    else {
-      val head = currentGen(spark, dir)
-      fs.listStatus(ledger(root)).iterator
-        .map(_.getPath.getName)
-        .filter(_.startsWith("manifest."))
-        .flatMap(_.stripPrefix("manifest.").toLongOption)
-        .filter(_ <= head)
-        .toSeq.sorted
-    }
+    manifestGens(fs, root)
   }
 
-  /** Generation metadata (r17): the `_ledger/meta.N` line stamped by
-    * the publish that produced generation `gen` — `op=<operation>
-    * fence=<writer epoch> parent=<the generation the op transformed>`
-    * — so [[generations]] can answer "what changed when" for AS-OF
-    * debugging. None for pre-r17 generations (no stamp was written)
-    * or retired ones (the stamp is dropped with its manifest). */
+  /** The `op=<operation> parent=<generation it transformed> id=…
+    * parent_id=…` header of generation `gen`'s manifest, so
+    * [[generations]] can answer "what changed when" for AS-OF
+    * debugging. None once retired. */
   def generationMeta(spark: SparkSession, dir: String,
                      gen: Long): Option[String] = {
     val (fs, root) = fsOf(spark, dir)
-    val p = new Path(ledger(root), s"meta.$gen")
-    if (fs.exists(p)) Some(readFile(fs, p).trim) else None
+    val p = manifestPath(root, gen)
+    if (!fs.exists(p)) None
+    else readFile(fs, p).linesIterator.map(_.trim)
+      .collectFirst { case l if l.startsWith("#") => l.drop(1).trim }
   }
 
   // ---- manifest-list internals ---------------------------------------
 
-  /** RAW manifest lines of generation `gen`: `@mp_<id>` part
-    * references and/or legacy direct file lines; `#`-comment lines
-    * (the r17 fence attribution) are skipped. */
-  private def manifestLines(fs: FileSystem, root: Path, gen: Long): Seq[String] =
-    if (gen == 0L) Nil
-    else readFile(fs, new Path(ledger(root), s"manifest.$gen"))
-      .linesIterator.map(_.trim)
-      .filter(l => l.nonEmpty && !l.startsWith("#")).toSeq
+  /** Generation `gen`'s `#` header fields and `@mp_<id>` part
+    * references; empty for generation 0, and throws once retired. */
+  private def manifest(fs: FileSystem, root: Path,
+                       gen: Long): (Map[String, String], Seq[String]) = {
+    val (header, refs) =
+      if (gen == 0L) (Nil, Nil)
+      else readFile(fs, manifestPath(root, gen)).linesIterator.map(_.trim)
+        .filter(_.nonEmpty).toSeq.partition(_.startsWith("#"))
+    (header.flatMap(_.drop(1).trim.split("\\s+")).map(_.split("=", 2))
+      .collect { case Array(k, v) => k -> v }.toMap, refs)
+  }
 
-  /** The writer epoch a manifest attributes itself to (its `#fence=`
-    * header), None for pre-r17 manifests. */
-  private def manifestFence(fs: FileSystem, root: Path, gen: Long): Option[Long] =
-    readFile(fs, new Path(ledger(root), s"manifest.$gen"))
-      .linesIterator.map(_.trim)
-      .collectFirst { case l if l.startsWith("#fence=") =>
-        l.stripPrefix("#fence=").toLongOption }.flatten
+  /** [[manifest]], empty once retired. */
+  private def manifestOrEmpty(fs: FileSystem, root: Path,
+                              gen: Long): (Map[String, String], Seq[String]) =
+    try manifest(fs, root, gen)
+    catch { case _: java.io.FileNotFoundException => (Map.empty, Nil) }
 
   /** The data files listed by one manifest part. */
   private def partLines(fs: FileSystem, root: Path, ref: String): Seq[String] =
     readFile(fs, new Path(ledger(root), ref.stripPrefix("@")))
       .linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
 
-  /** Expand a manifest's raw lines to its data-file list. */
-  private def expand(fs: FileSystem, root: Path, lines: Seq[String]): Seq[String] =
-    lines.flatMap { l =>
-      if (l.startsWith("@")) partLines(fs, root, l) else Seq(l)
-    }
-
-  /** Store-relative live files of generation `gen` (expanded). */
+  /** Store-relative live files of generation `gen`. */
   private def manifestFiles(fs: FileSystem, root: Path, gen: Long): Seq[String] =
-    expand(fs, root, manifestLines(fs, root, gen))
+    manifest(fs, root, gen)._2.flatMap(partLines(fs, root, _))
 
   /** Write one immutable manifest part; returns its `@` reference. */
   private def writeManifestPart(fs: FileSystem, root: Path,
                                 files: Seq[String]): String = {
-    val name = s"mp_${java.util.UUID.randomUUID().toString.take(12)}"
-    writeAtomic(fs, new Path(ledger(root), name),
-      files.sorted.mkString("\n"))
+    val name = s"mp_${uid(12)}"
+    writeNew(fs, new Path(ledger(root), name), files.sorted.mkString("\n"))
     "@" + name
   }
 
-  /** The next generation's raw lines for a target file set `files`,
-    * REUSING the previous generation's manifest parts: a part none of
+  /** The next generation's part references for a target file set
+    * `files`, REUSING the previous generation's parts: a part none of
     * whose files left the set rides through by reference (zero
     * writes); a touched part is rewritten once with its survivors;
     * files new to the set land in one fresh part. Publish cost is
     * thus O(delta + touched parts), never O(live files). */
   private def deltaLines(fs: FileSystem, root: Path,
-                         prevRaw: Seq[String], files: Seq[String]): Seq[String] = {
+                         prevRefs: Seq[String], files: Seq[String]): Seq[String] = {
     val target = files.toSet
-    val (refs, directs) = prevRaw.partition(_.startsWith("@"))
-    val keptDirect = directs.filter(target)
     val covered = scala.collection.mutable.Set.empty[String]
-    covered ++= keptDirect
-    val outRefs = refs.flatMap { r =>
+    val outRefs = prevRefs.flatMap { r =>
       val fl = partLines(fs, root, r)
       val kept = fl.filter(f => target.contains(f) && !covered.contains(f))
       covered ++= kept
@@ -270,115 +217,33 @@ object SnapshotStore {
       else Some(writeManifestPart(fs, root, kept))
     }
     val added = files.distinct.filterNot(covered)
-    val addRef =
-      if (added.nonEmpty) Seq(writeManifestPart(fs, root, added)) else Nil
-    (keptDirect.sorted ++ outRefs ++ addRef)
+    outRefs ++ (if (added.nonEmpty) Seq(writeManifestPart(fs, root, added)) else Nil)
   }
 
-  // ---- writer fencing --------------------------------------------------
-
-  private def maxFence(fs: FileSystem, root: Path): Long =
-    if (!fs.exists(ledger(root))) 0L
-    else fs.listStatus(ledger(root)).iterator
-      .map(_.getPath.getName)
-      .filter(_.startsWith("fence."))
-      .flatMap(_.stripPrefix("fence.").toLongOption)
-      .maxOption.getOrElse(0L)
-
-  /** Claim the store's next writer epoch — call BEFORE reading the
-    * state the operation transforms, pass the token to the fenced
-    * publish. The claim file is created WITHOUT overwrite (atomic on
-    * HDFS — the same trick CURRENT's rename publication uses) and
-    * holds a unique token the claimant re-reads (r17): on filesystems
-    * whose exclusive create is check-then-act (RawLocalFileSystem,
-    * object stores) two racers can both "create" the file, but only
-    * one body survives — the claimant whose read-back disagrees lost
-    * the duel and retries one epoch higher, so two writers never both
-    * proceed under one epoch. */
-  private[graft] def acquireFence(spark: SparkSession, dir: String): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    fs.mkdirs(ledger(root))
-    val token = java.util.UUID.randomUUID().toString
-    var tries = 0
-    while (tries < 64) {
-      val next = maxFence(fs, root) + 1
-      try {
-        val o = fs.create(new Path(ledger(root), s"fence.$next"), false)
-        try o.write(token.getBytes("UTF-8")) finally o.close()
-        if (readFile(fs, new Path(ledger(root), s"fence.$next")).trim == token)
-          return next
-        tries += 1 // lost a non-atomic-create duel: the epoch is theirs
-      } catch { case _: java.io.IOException => tries += 1 }
+  /** Commit generation `base + 1` with the part references `next`
+    * derives from the base generation's; false on a conflict. The
+    * slot may be taken, or it may have been freed by
+    * retirement below an existing head. In that case the next manifest
+    * was not built on ours (its `parent_id` differs), or retirement
+    * deleted it, which its ascending order does only after deleting
+    * our slot's earlier occupant — so ours, still present, is stale
+    * and is withdrawn. */
+  private def commit(fs: FileSystem, root: Path, base: Long,
+                     next: Seq[String] => Seq[String], op: String): Boolean = {
+    val (baseHeader, baseRefs) = manifestOrEmpty(fs, root, base)
+    val id = uid(12)
+    val target = manifestPath(root, base + 1)
+    val tmp = new Path(ledger(root), s"manifest.${base + 1}.${uid(8)}.tmp")
+    val header = s"#op=$op parent=$base id=$id" +
+      baseHeader.get("id").fold("")(" parent_id=" + _)
+    writeNew(fs, tmp, (header +: next(baseRefs)).mkString("\n"))
+    putIfAbsent(fs, tmp, target) && {
+      val stale = head(fs, root) > base + 1 &&
+        !manifestOrEmpty(fs, root, base + 2)._1.get("parent_id").contains(id) &&
+        fs.exists(target)
+      if (stale) fs.delete(target, false)
+      !stale
     }
-    throw new java.io.IOException(s"could not claim a writer fence at $dir")
-  }
-
-  /** Fail fast when a newer writer has claimed the store: publishing
-    * a manifest computed from a pre-claim read would silently drop
-    * the newer writer's lines. */
-  private def checkFence(fs: FileSystem, root: Path, fence: Long,
-                         dir: String): Unit = {
-    val newest = maxFence(fs, root)
-    if (newest != fence)
-      throw new IllegalStateException(
-        s"stale writer at $dir: fence $fence superseded by $newest — " +
-          "a newer writer claimed the store after this operation read " +
-          "its generation; publishing would drop the newer writer's lines")
-  }
-
-  /** Refuse to touch generation `gen`'s slot when CURRENT already
-    * names it (or newer): a committed manifest is immutable — a
-    * writer that computed `gen` from a read that raced the committing
-    * writer's swap is stale, whatever the fence order says. */
-  private def checkNotCommitted(fs: FileSystem, root: Path, gen: Long,
-                                dir: String): Unit =
-    committedGen(fs, root).filter(_ >= gen).foreach { cur =>
-      throw new IllegalStateException(
-        s"stale writer at $dir: generation $gen already committed " +
-          s"(CURRENT=$cur) — this operation read a superseded generation")
-    }
-
-  /** Rename-publish `manifest.gen` + its `meta.gen` stamp, then swap
-    * CURRENT. Fenced at three points (entry, manifest-name collision,
-    * and immediately before the swap — each paired with a committed-
-    * generation check), so the check-then-act residue is the single
-    * swap step. A collision on `manifest.gen` with our fence still
-    * newest and `gen` not committed is a TORN attempt — our own
-    * previous try, or a superseded writer's whose swap can no longer
-    * run without tripping ITS pre-swap fence check — and is safely
-    * replaced; the `#fence=` header records whose it was. */
-  private def publish(fs: FileSystem, root: Path, gen: Long,
-                      rawLines: Seq[String], fence: Long, dir: String,
-                      op: String): Unit = {
-    checkFence(fs, root, fence, dir)
-    checkNotCommitted(fs, root, gen, dir)
-    val p = new Path(ledger(root), s"manifest.$gen")
-    val tmp = new Path(p.getParent, p.getName +
-      s".${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val o = fs.create(tmp, true)
-    try o.write((s"#fence=$fence" +: rawLines).mkString("\n")
-      .getBytes("UTF-8")) finally o.close()
-    if (!fs.rename(tmp, p)) {
-      checkFence(fs, root, fence, dir)
-      checkNotCommitted(fs, root, gen, dir)
-      val torn = try manifestFence(fs, root, gen) catch {
-        case _: java.io.IOException => None
-      }
-      if (torn.exists(_ > fence))
-        throw new IllegalStateException(
-          s"stale writer at $dir: manifest.$gen already written by the " +
-            s"newer epoch ${torn.get}")
-      fs.delete(p, false)
-      if (!fs.rename(tmp, p))
-        throw new java.io.IOException(s"manifest rename failed: $tmp -> $p")
-    }
-    writeAtomic(fs, new Path(ledger(root), s"meta.$gen"),
-      s"op=$op fence=$fence parent=${gen - 1}")
-    // pre-swap re-verify: the last point a superseded writer can still
-    // bail out loudly instead of clobbering the newer commit
-    checkFence(fs, root, fence, dir)
-    checkNotCommitted(fs, root, gen, dir)
-    writeAtomic(fs, currentPath(root), gen.toString)
   }
 
   /** Data files (recursive, relative) under a freshly written part dir. */
@@ -386,9 +251,8 @@ object SnapshotStore {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     def walk(p: Path): Unit = fs.listStatus(p).foreach { s =>
       if (s.isDirectory) walk(s.getPath)
-      else if (!s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith(".")) {
-        out += s.getPath.toString.stripPrefix(root.toString).stripPrefix("/")
+      else if (!isMarker(s.getPath.getName)) {
+        out += relative(root, s.getPath)
         ()
       }
     }
@@ -396,31 +260,32 @@ object SnapshotStore {
     out.toSeq
   }
 
+  private def isMarker(name: String) = name.startsWith("_") || name.startsWith(".")
+  private def relative(root: Path, p: Path) =
+    p.toString.stripPrefix(root.toString).stripPrefix("/")
+
   /** Append one batch as a new immutable part and publish the next
     * generation: every prior manifest part rides through by
     * reference, the batch's files land in one new part — O(delta).
     * `numFiles` sizes the part (default 1, right for the metadata-
     * grain parts the engine's stores append; a large batch passes its
-    * task-parallel file count). Appends COMMUTE, so a lost fence race
-    * retries against the new CURRENT ([[publishAppend]]) — two
-    * concurrent appenders both land. */
+    * task-parallel file count). Concurrent appenders all land
+    * ([[publishAppend]]). */
   def append(df: DataFrame, dir: String, numFiles: Int = 1): Unit = {
     require(numFiles >= 1, "numFiles must be >= 1")
     val spark = df.sparkSession
     val (fs, root) = fsOf(spark, dir)
-    fs.mkdirs(ledger(root))
-    val fence = acquireFence(spark, dir)
-    val rel = s"parts/b_${java.util.UUID.randomUUID().toString.take(12)}"
+    val rel = s"parts/b_${uid(12)}"
     val sized = if (numFiles == 1) df.coalesce(1) else df.repartition(numFiles)
     sized.write.parquet(new Path(root, rel).toString)
-    publishAppend(spark, dir, filesUnder(fs, root, rel), fence, "append")
+    publishAppend(spark, dir, filesUnder(fs, root, rel), "append")
     ()
   }
 
-  /** The committed snapshot as of CURRENT — resolved ONCE, so the
-    * returned plan reads this exact file set for its whole lifetime
-    * regardless of concurrent writers. Empty-store reads throw (no
-    * schema to serve). */
+  /** The committed snapshot — resolved ONCE, so the returned plan
+    * reads this exact file set for its whole lifetime regardless of
+    * concurrent writers. Empty-store reads throw (no schema to
+    * serve). */
   def read(spark: SparkSession, dir: String): DataFrame = {
     val gen = currentGen(spark, dir)
     require(gen > 0L, s"empty snapshot store at $dir")
@@ -428,150 +293,113 @@ object SnapshotStore {
   }
 
   /** AS-OF read: the store as of generation `asOfGen` — time-travel
-    * debugging for any COMMITTED generation still inside the grace
-    * window (retired generations' manifests are gone and throw;
-    * generations above CURRENT never committed and throw — see
-    * [[generations]]). */
+    * debugging for any generation still inside the grace window
+    * (retired generations' manifests are gone and throw; generations
+    * above the head never committed and throw). */
   def read(spark: SparkSession, dir: String, asOfGen: Long): DataFrame = {
-    val (fs, root) = fsOf(spark, dir)
-    require(asOfGen > 0L, s"generation must be >= 1 at $dir")
-    require(asOfGen <= currentGen(spark, dir),
-      s"generation $asOfGen never committed at $dir")
-    val files = manifestFiles(fs, root, asOfGen)
-      .map(f => new Path(root, f).toString)
-    spark.read.parquet(files: _*)
+    val (_, root) = fsOf(spark, dir)
+    spark.read.parquet(filesAsOf(spark, dir, asOfGen)
+      .map(f => new Path(root, f).toString): _*)
   }
 
   /** Fold the current generation into one part (via `fold`, default
     * identity — pure file compaction; `numFiles` sizes the folded
     * part) and publish it as the next generation. Superseded parts
     * stay on disk for in-flight readers; [[retire]] reclaims them.
-    * Read-modify-write: a lost fence race fails fast (the fold was
-    * computed from a replaced generation) — re-run from fresh state. */
+    * Read-modify-write: a concurrent commit makes it throw the
+    * `stale writer` error — re-run from fresh state. */
   def compact(spark: SparkSession, dir: String,
               fold: DataFrame => DataFrame = identity,
               numFiles: Int = 1): Unit = {
     require(numFiles >= 1, "numFiles must be >= 1")
     val (fs, root) = fsOf(spark, dir)
-    val fence = acquireFence(spark, dir)
     val gen = currentGen(spark, dir)
     if (gen == 0L) return
-    val rel = s"parts/c_${java.util.UUID.randomUUID().toString.take(12)}"
-    val folded = fold(read(spark, dir))
+    val rel = s"parts/c_${uid(12)}"
+    val folded = fold(read(spark, dir, gen))
     val sized =
       if (numFiles == 1) folded.coalesce(1) else folded.repartition(numFiles)
     sized.write.parquet(new Path(root, rel).toString)
-    val part = writeManifestPart(fs, root, filesUnder(fs, root, rel))
-    publish(fs, root, gen + 1, Seq(part), fence, dir, "compact")
+    publishNext(spark, dir, filesUnder(fs, root, rel), gen, "compact")
+    ()
   }
 
   // ---- generalized manifest primitives (bucket / multi-table grain) -
   // The single-table API above folds whole generations; the BUCKETED
   // stores (BM25 postings + meta, the corpus-increment artifact set)
   // need the same isolation at a finer grain: a compaction replaces
-  // SOME lines of the manifest (one bucket's files) while the rest
-  // ride through, and one generation spans several logical tables.
-  // The manifest format already carries that — expanded lines are
-  // arbitrary store-relative file paths — so the generalization is
-  // just the primitives: writers claim a fence, organize subtrees
-  // (`parts/p_x/bucket=3/...`), publish the next generation as a
-  // transformed FILE set (the delta against the prior generation's
-  // parts is computed here, so untouched manifest parts are reused by
-  // reference), and readers resolve CURRENT once then SELECT files by
-  // prefix/bucket. Same crash faces as the single-table API
-  // (manifests, parts, and CURRENT are rename-published; unpublished
-  // files are invisible orphans), same fenced single-writer /
-  // unlimited-reader contract — with append-shaped publications
-  // taking the optimistic-retry path ([[publishAppend]]).
+  // SOME of the manifest's files (one bucket's) while the rest ride
+  // through, and one generation spans several logical tables. Files
+  // are arbitrary store-relative paths, so the generalization is just
+  // the primitives: writers read a [[snapshot]], organize subtrees
+  // (`parts/p_x/bucket=3/...`), and publish the next generation as a
+  // transformed FILE set (the delta against the base generation's
+  // parts is computed here, so untouched parts are reused by
+  // reference); readers resolve the head once, then SELECT files by
+  // prefix/bucket.
+
+  /** The head generation and its committed file list (store-relative)
+    * — what a read-modify-write writer transforms and then passes the
+    * generation of to [[publishNext]]. (0, Nil) for an empty store. */
+  private[graft] def snapshot(spark: SparkSession,
+                              dir: String): (Long, Seq[String]) = {
+    val (fs, root) = fsOf(spark, dir)
+    val gen = head(fs, root)
+    (gen, manifestFiles(fs, root, gen))
+  }
 
   /** The committed file list (store-relative) of the current
     * generation. */
-  private[graft] def currentFiles(spark: SparkSession, dir: String): Seq[String] = {
-    val (fs, root) = fsOf(spark, dir)
-    manifestFiles(fs, root, currentGen(spark, dir))
-  }
+  private[graft] def currentFiles(spark: SparkSession, dir: String): Seq[String] =
+    snapshot(spark, dir)._2
 
   /** The committed file list AS OF a pinned generation (the bucketed
-    * stores' time-travel surface; same committed-only contract as
-    * `read(dir, gen)`). */
+    * stores' time-travel surface; same contract as `read(dir, gen)`). */
   private[graft] def filesAsOf(spark: SparkSession, dir: String,
                                gen: Long): Seq[String] = {
     val (fs, root) = fsOf(spark, dir)
     require(gen > 0L, s"generation must be >= 1 at $dir")
-    require(gen <= currentGen(spark, dir),
-      s"generation $gen never committed at $dir")
+    require(gen <= head(fs, root), s"generation $gen never committed at $dir")
     manifestFiles(fs, root, gen)
   }
 
-  /** Publish `files` as the next generation under the writer epoch
-    * `fence` (claim it with [[acquireFence]] BEFORE reading the state
-    * the new generation was computed from); returns the generation
-    * number. Untouched manifest parts of the prior generation are
-    * reused by reference — cost O(delta + touched parts). FAIL-FAST:
-    * a lost fence race throws — this is the read-modify-write path
-    * (compaction, merge, table replacement); append-shaped callers
-    * use [[publishAppend]] and retry. */
+  /** Publish `files` as generation `base + 1`, where `base` is the
+    * generation the caller read the state it transformed from
+    * ([[snapshot]]); returns the new generation. Untouched parts of
+    * the base generation are reused by reference — cost O(delta +
+    * touched parts). FAIL-FAST: when another writer committed after
+    * `base`, this throws the `stale writer` error — the
+    * read-modify-write path; append-shaped callers use
+    * [[publishAppend]]. */
   private[graft] def publishNext(spark: SparkSession, dir: String,
-                                 files: Seq[String], fence: Long,
+                                 files: Seq[String], base: Long,
                                  op: String = "publish"): Long = {
     val (fs, root) = fsOf(spark, dir)
     fs.mkdirs(ledger(root))
-    val gen = currentGen(spark, dir)
-    val lines = deltaLines(fs, root, manifestLines(fs, root, gen), files)
-    publish(fs, root, gen + 1, lines, fence, dir, op)
-    gen + 1
+    if (!commit(fs, root, base, deltaLines(fs, root, _, files), op))
+      throw new IllegalStateException(
+        s"stale writer at $dir: generation ${base + 1} already committed " +
+          s"— this operation read generation $base, which a concurrent " +
+          "writer superseded; publishing would drop that writer's lines")
+    base + 1
   }
 
-  /** Optimistic append commit (r17 — the iceberg retry loop for the
-    * one op shape that commutes): publish `current ∪ newFiles`, and on
-    * a lost fence race re-claim, re-read CURRENT, recompute the delta
-    * lines against the NEW generation (the data files are already
-    * written and immutable — only manifest work repeats) and publish
-    * again, so two concurrent appenders both land and the store
-    * equals the sequential result. `newFiles` must be FRESH files no
-    * prior generation references (an append's own immutable part). A
-    * retry first verifies the part survived — a concurrent retirement
-    * sweeping unpublished orphans is the one racer an append must NOT
-    * retry past (it would commit a manifest to missing files). */
+  /** Append commit (the iceberg retry loop for the one op shape that
+    * commutes): publish the head's parts plus one part listing
+    * `newFiles`; on a conflict re-read the head and relink. The part
+    * is written once, only the list is rebuilt per attempt, and there
+    * is no sleep or cap: every conflict proves another commit landed.
+    * `newFiles` must be FRESH files no generation references (an
+    * append's own immutable output). */
   private[graft] def publishAppend(spark: SparkSession, dir: String,
-                                   newFiles: Seq[String], fence: Long,
-                                   op: String = "append",
-                                   maxRetries: Int = 16): Long = {
+                                   newFiles: Seq[String],
+                                   op: String = "append"): Long = {
     val (fs, root) = fsOf(spark, dir)
     fs.mkdirs(ledger(root))
-    var f = fence
-    var attempt = 0
-    while (true) {
-      val gen = currentGen(spark, dir)
-      val prevRaw = manifestLines(fs, root, gen)
-      try {
-        publish(fs, root, gen + 1,
-          deltaLines(fs, root, prevRaw, expand(fs, root, prevRaw) ++ newFiles),
-          f, dir, op)
-        return gen + 1
-      } catch {
-        case e: IllegalStateException =>
-          attempt += 1
-          if (attempt >= maxRetries) throw e
-          if (newFiles.exists(nf => !fs.exists(new Path(root, nf))))
-            throw new IllegalStateException(
-              s"append part swept by a concurrent retirement at $dir — " +
-                "rewrite the batch and append again", e)
-          // JITTERED exponential backoff: duelling appenders re-claim
-          // in lockstep under a symmetric delay (each claim voids the
-          // others' epochs, livelocking to retry exhaustion); random
-          // jitter staggers the wake-ups so one publishes inside
-          // another's sleep and the rest land serially behind it.
-          // The ceiling (16 tries, ~1 s max sleep) is sized for a
-          // contended box where the claim-to-publish window stretches
-          // — each retry repeats only manifest work, so a high
-          // ceiling costs nothing on the happy path
-          Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-            .nextLong(2L, 30L << math.min(attempt, 5)))
-          f = acquireFence(spark, dir)
-      }
-    }
-    -1L // unreachable
+    val part = writeManifestPart(fs, root, newFiles)
+    var gen = head(fs, root)
+    while (!commit(fs, root, gen, _ :+ part, op)) gen = head(fs, root)
+    gen + 1
   }
 
   /** Bucket-grain write layout: hash the rows to their buckets at an
@@ -612,129 +440,84 @@ object SnapshotStore {
     spark.read.parquet(files.map(f => new Path(root, f).toString): _*)
   }
 
-  /** Ledger upkeep shared by both retirement grains: drop manifests
-    * (with their `meta.N` stamps) past the grace window, manifest
-    * parts no kept manifest references, fence claims below the newest
-    * (the live epoch must survive — it is what the next publish
-    * checks against), streaming replay markers below the newest
-    * (r17 — the newest `batch.<id>` marker's batch was published, so
-    * the stores' committed-max `src_batch` probe covers every lower
-    * id; without this sweep the ledger grows one file per micro-batch
-    * forever), and stray `*.tmp` files older than [[TmpGraceMs]]
-    * (torn [[writeAtomic]] attempts; the age guard keeps a LIVE
-    * writer's in-flight tmp safe). */
+  /** Age past which a file no manifest references is an orphan that
+    * [[retire]] may delete (a younger one may be a live writer's
+    * unpublished output), and past which a staged `*.tmp` is debris. */
   private[graft] val TmpGraceMs: Long = 15L * 60L * 1000L
-  private def sweepLedger(fs: FileSystem, root: Path, keepHead: Long): Unit = {
-    val names = fs.listStatus(ledger(root)).map(_.getPath.getName)
-    val keptRefs = names.iterator
-      .filter(_.startsWith("manifest."))
-      .filter(_.stripPrefix("manifest.").toLongOption.exists(_ >= keepHead))
-      .flatMap(n => manifestLines(fs, root,
-        n.stripPrefix("manifest.").toLong).filter(_.startsWith("@")))
-      .map(_.stripPrefix("@")).toSet
-    val newestFence = maxFence(fs, root)
-    val newestBatch = names.iterator
-      .filter(_.startsWith("batch."))
-      .flatMap(_.stripPrefix("batch.").toLongOption)
-      .maxOption.getOrElse(Long.MinValue)
-    val tmpFloor = System.currentTimeMillis() - TmpGraceMs
-    fs.listStatus(ledger(root)).foreach { s =>
-      val n = s.getPath.getName
-      def genOf(prefix: String) = n.stripPrefix(prefix).toLongOption
-      val drop =
-        (n.startsWith("manifest.") &&
-          genOf("manifest.").exists(_ < keepHead)) ||
-        (n.startsWith("meta.") && genOf("meta.").exists(_ < keepHead)) ||
-        (n.startsWith("mp_") && !keptRefs.contains(n)) ||
-        (n.startsWith("fence.") &&
-          genOf("fence.").exists(_ < newestFence)) ||
-        (n.startsWith("batch.") &&
-          genOf("batch.").exists(_ < newestBatch)) ||
-        (n.endsWith(".tmp") && s.getModificationTime < tmpFloor)
-      if (drop) { fs.delete(s.getPath, false); () }
-    }
-  }
 
-  /** FILE-grain retirement for bucket-compacted stores: [[retire]]
-    * reclaims at the part-DIRECTORY grain, but a bucket compaction
-    * supersedes single files inside part dirs that stay live for
-    * their other buckets. Deletes every data file under the store's
-    * data subtrees unreferenced by the newest `keepGenerations`
-    * manifests, prunes directories left holding only job markers,
-    * and drops manifests past the window — the same grace bargain as
-    * [[retire]]. Claims a fence BEFORE computing the live set (r17):
-    * an in-flight writer whose unpublished part this sweep removes
-    * fails its publish fence check instead of committing a manifest
-    * to missing files. */
-  private[graft] def retireFileGrain(spark: SparkSession, dir: String,
-                                     keepGenerations: Int = 2): Unit = {
-    require(keepGenerations >= 1, "keepGenerations must be >= 1")
-    val (fs, root) = fsOf(spark, dir)
-    if (!fs.exists(ledger(root))) return
-    val fence = acquireFence(spark, dir)
-    val gen = currentGen(spark, dir)
-    if (gen == 0L) return
-    val keep = ((gen - keepGenerations + 1) max 1L) to gen
-    val live = keep.flatMap(g =>
-      try manifestFiles(fs, root, g)
-      catch { case _: java.io.FileNotFoundException => Nil }).toSet
-    // last-line-of-defence narrowing: abort when a writer claimed the
-    // store while the live set was being computed — its fresh parts
-    // may be in the walk below
-    checkFence(fs, root, fence, dir)
-    def meta(n: String) = n.startsWith("_") || n.startsWith(".")
-    def sweep(p: Path): Unit = {
-      fs.listStatus(p).foreach { s =>
-        val n = s.getPath.getName
-        if (s.isDirectory) sweep(s.getPath)
-        else if (!meta(n) && !live.contains(
-            s.getPath.toString.stripPrefix(root.toString).stripPrefix("/"))) {
-          fs.delete(s.getPath, false)
-          ()
-        }
-      }
-      // a dir left with only job markers (_SUCCESS and friends) holds
-      // no live data — prune it whole
-      if (fs.listStatus(p).forall(s => s.isFile && meta(s.getPath.getName))) {
-        fs.delete(p, true)
-        ()
-      }
-    }
-    fs.listStatus(root).foreach { s =>
-      if (s.isDirectory && !meta(s.getPath.getName)) sweep(s.getPath)
-    }
-    sweepLedger(fs, root, keep.head)
-  }
-
-  /** Delete parts unreferenced by the newest `keepGenerations`
-    * manifests (>= 1 — CURRENT is always kept), plus orphaned part
-    * dirs no manifest ever published (torn writers), plus manifests
-    * older than the grace window. The caller sizes the window to its
-    * longest-running reader. Claims a fence BEFORE computing the live
-    * set (r17): an in-flight writer whose unpublished part dir this
-    * sweep removes fails its publish fence check (and an append's
-    * retry loop re-verifies its part survived) instead of committing
-    * a manifest to missing files. */
+  /** Reclaim space behind a grace window of the newest
+    * `keepGenerations` manifests (>= 1 — the head is always kept; the
+    * caller sizes the window to its longest-running reader), at FILE
+    * grain across every data subtree of the store:
+    *  - manifests older than the window are dropped;
+    *  - a data file or manifest part referenced only by dropped
+    *    manifests is superseded and deleted;
+    *  - a file or part no manifest on disk references is an orphan,
+    *    deleted once older than [[TmpGraceMs]], as are staged `*.tmp`
+    *    files;
+    *  - directories left holding only job markers are pruned;
+    *  - streaming replay markers below the newest are dropped (the
+    *    newest `batch.<id>` marker's batch was published, so the
+    *    stores' committed-max `src_batch` probe covers every lower
+    *    id). */
   def retire(spark: SparkSession, dir: String, keepGenerations: Int = 2): Unit = {
     require(keepGenerations >= 1, "keepGenerations must be >= 1")
     val (fs, root) = fsOf(spark, dir)
-    if (!fs.exists(ledger(root))) return
-    val fence = acquireFence(spark, dir)
-    val gen = currentGen(spark, dir)
-    if (gen == 0L) return
-    val keep = ((gen - keepGenerations + 1) max 1L) to gen
-    val live = keep.flatMap(g =>
-      try manifestFiles(fs, root, g)
-      catch { case _: java.io.FileNotFoundException => Nil }).toSet
-    checkFence(fs, root, fence, dir)
-    val partsRoot = new Path(root, "parts")
-    if (fs.exists(partsRoot)) fs.listStatus(partsRoot).foreach { d =>
-      val rel = d.getPath.toString.stripPrefix(root.toString).stripPrefix("/")
-      val referenced = live.exists(_.startsWith(rel + "/")) ||
-        live.contains(rel)
-      if (!referenced) fs.delete(d.getPath, true)
-      ()
+    val gens = manifestGens(fs, root)
+    if (gens.isEmpty) return
+    val (kept, dropped) = gens.partition(_ > gens.last - keepGenerations)
+    def refs(gs: Seq[Long]): Set[String] = gs.flatMap(g =>
+      manifestOrEmpty(fs, root, g)._2).map(_.stripPrefix("@")).toSet
+    def files(ps: Set[String]): Set[String] = ps.flatMap(p =>
+      try partLines(fs, root, p)
+      catch { case _: java.io.FileNotFoundException => Nil })
+    val keptParts = refs(kept)
+    val droppedParts = refs(dropped) -- keptParts
+    val keptFiles = files(keptParts)
+    val droppedFiles = files(droppedParts) -- keptFiles
+    val orphanFloor = System.currentTimeMillis() - TmpGraceMs
+    def doomed(s: org.apache.hadoop.fs.FileStatus, ref: String,
+               keep: Set[String], superseded: Set[String]) =
+      !keep(ref) && (superseded(ref) || s.getModificationTime < orphanFloor)
+
+    // manifests first, in ascending order ([[commit]]'s stale check
+    // relies on it): a crash after this point leaves the files they
+    // referenced as orphans a later retire sweeps, never a manifest
+    // naming missing files
+    dropped.foreach(g => fs.delete(manifestPath(root, g), false))
+    val newestBatch = fs.listStatus(ledger(root)).iterator
+      .map(_.getPath.getName).filter(_.startsWith("batch."))
+      .flatMap(_.stripPrefix("batch.").toLongOption)
+      .maxOption.getOrElse(Long.MinValue)
+    fs.listStatus(ledger(root)).foreach { s =>
+      val n = s.getPath.getName
+      val drop =
+        (n.startsWith("mp_") && doomed(s, n, keptParts, droppedParts)) ||
+        (n.startsWith("batch.") &&
+          n.stripPrefix("batch.").toLongOption.exists(_ < newestBatch)) ||
+        (n.endsWith(".tmp") && s.getModificationTime < orphanFloor)
+      if (drop) { fs.delete(s.getPath, false); () }
     }
-    sweepLedger(fs, root, keep.head)
+
+    /** True when something under `p` was deleted. */
+    def sweep(p: Path): Boolean = {
+      val deleted = fs.listStatus(p).map { s =>
+        if (s.isDirectory) sweep(s.getPath)
+        else !isMarker(s.getPath.getName) &&
+          doomed(s, relative(root, s.getPath), keptFiles, droppedFiles) &&
+          fs.delete(s.getPath, false)
+      }.contains(true)
+      // a dir left with only job markers (_SUCCESS and friends) holds
+      // no live data — prune it once this sweep emptied it or it aged
+      // out as an orphan; a fresh one may be a live writer's output
+      val prune =
+        fs.listStatus(p).forall(s => s.isFile && isMarker(s.getPath.getName)) &&
+          (deleted || fs.getFileStatus(p).getModificationTime < orphanFloor)
+      if (prune) fs.delete(p, true)
+      deleted || prune
+    }
+    fs.listStatus(root).foreach { s =>
+      if (s.isDirectory && !isMarker(s.getPath.getName)) sweep(s.getPath)
+    }
   }
 }

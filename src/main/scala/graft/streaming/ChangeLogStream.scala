@@ -56,7 +56,7 @@ object ChangeLogStream {
   // the touched buckets' NEW state as a fresh immutable part
   // (`data/b_x/bucket=N/…`) plus a fresh complete tombstone table
   // (`tomb/t_x/…` — transactional WITH the data, no sidecar swap
-  // window), and swaps CURRENT once — a reader resolves a complete
+  // window), and commits one manifest — a reader resolves a complete
   // store or the prior one, never a mix. Two structural
   // simplifications fall out: no compaction exists (a merge REPLACES
   // its buckets' lines, so a bucket is always exactly one live file),
@@ -69,8 +69,8 @@ object ChangeLogStream {
   // out-of-order upsert arriving later finds the higher-versioned
   // delete and loses — without them it would win unopposed and
   // silently resurrect the key. Reclamation is the manifest grace
-  // window; a split-brain second writer fails fast at publish (the
-  // store fence).
+  // window; a second writer whose base generation was superseded
+  // fails fast at publish.
 
   private val BucketRe = "/bucket=(\\d+)/".r
   private def bucketOf(line: String): Option[Int] =
@@ -113,8 +113,7 @@ object ChangeLogStream {
     val touched: Set[Int] = b.select("bucket").distinct()
       .collect().map(_.getInt(0)).toSet
     if (touched.isEmpty) { mark(); return }
-    val fence = store.acquireFence(spark, storeDir)
-    val lines = store.currentFiles(spark, storeDir)
+    val (base, lines) = store.snapshot(spark, storeDir)
     val touchedLines = lines.filter(l => bucketOf(l).exists(touched))
     // the touched buckets' committed state (bucket re-derived from id
     // — the partition column does not ride inside the files)
@@ -154,7 +153,7 @@ object ChangeLogStream {
       .write.parquet(s"$storeDir/$relT")
     store.publishNext(spark, storeDir,
       lines.filterNot(touchedLines.toSet).filterNot(tombLines.toSet) ++
-        newData ++ store.partFiles(spark, storeDir, relT), fence, "merge")
+        newData ++ store.partFiles(spark, storeDir, relT), base, "merge")
     mark()
   }
 
@@ -204,8 +203,7 @@ object ChangeLogStream {
                                nBuckets: Int): Unit = {
     import org.apache.spark.sql.functions._
     val store = graft.sources.SnapshotStore
-    val fence = store.acquireFence(spark, storeDir)
-    val lines = store.currentFiles(spark, storeDir)
+    val (base, lines) = store.snapshot(spark, storeDir)
     val tombLines = lines.filter(isTombLine)
     if (tombLines.isEmpty) return
     val touched: Set[Int] = store.readFiles(spark, storeDir, tombLines)
@@ -239,7 +237,7 @@ object ChangeLogStream {
       .coalesce(1).write.parquet(s"$storeDir/$relT")
     store.publishNext(spark, storeDir,
       lines.filterNot(touchedData.toSet).filterNot(tombLines.toSet) ++
-        newData ++ store.partFiles(spark, storeDir, relT), fence,
+        newData ++ store.partFiles(spark, storeDir, relT), base,
       "retire-tombstones")
     ()
   }
@@ -249,7 +247,6 @@ object ChangeLogStream {
     * to the longest-running reader). */
   def retire(spark: org.apache.spark.sql.SparkSession,
                      storeDir: String, keepGenerations: Int = 2): Unit =
-    graft.sources.SnapshotStore.retireFileGrain(spark, storeDir,
-      keepGenerations)
+    graft.sources.SnapshotStore.retire(spark, storeDir, keepGenerations)
 
 }

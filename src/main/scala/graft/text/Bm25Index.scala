@@ -16,12 +16,13 @@ import org.apache.spark.sql.functions._
   * manifest; the journaled twin the r15 build still carried is
   * deleted): postings/meta batches land as immutable part subtrees
   * (`parts/p_x/bucket=N/…`, `parts/m_x/…`), each publication is one
-  * atomic CURRENT swap, and a reader resolves CURRENT once — so a
-  * query keeps serving its exact generation while compaction replaces
-  * single buckets' files underneath it (never a mix, Bm25SnapshotSpec's
-  * pin). A torn writer leaves only unpublished debris no reader
-  * resolves and [[retire]] sweeps — no rollback journal exists; a
-  * split-brain second writer fails fast at publish (the store fence).
+  * put-if-absent manifest commit, and a reader resolves the head
+  * once — so a query keeps serving its exact generation while
+  * compaction replaces single buckets' files underneath it (never a
+  * mix, Bm25SnapshotSpec's pin). A torn writer leaves only
+  * unpublished debris no reader resolves and [[retire]] sweeps — no
+  * rollback journal exists; a second writer whose base was superseded
+  * fails fast at publish.
   * Space reclamation is [[retire]]'s grace window.
   *
   * Artifacts per part:
@@ -155,23 +156,23 @@ object Bm25Index {
   /** Build the index (a rebuild publishes a manifest of only the new
     * parts — superseded files await [[retire]], so in-flight readers
     * of the old corpus keep serving it). Read-modify-write shape (it
-    * REPLACES the store), so a lost fence race fails fast. */
+    * REPLACES the store), so a concurrent commit makes it fail fast. */
   def build(df: DataFrame, id: Column, text: Column, dir: String,
             nBuckets: Int = 64, srcBatch: Long = -1L): Unit = {
     require(nBuckets >= 1)
     val spark = df.sparkSession
-    val fence = graft.sources.SnapshotStore.acquireFence(spark, dir)
+    val base = graft.sources.SnapshotStore.currentGen(spark, dir)
     graft.sources.SnapshotStore.publishNext(spark, dir,
-      writeParts(df, id, text, dir, nBuckets, srcBatch), fence, "build")
+      writeParts(df, id, text, dir, nBuckets, srcBatch), base, "build")
     ()
   }
 
   /** Append one batch: new parts + the prior generation's lines, one
     * atomic publication. Appends COMMUTE (prior lines ride through
     * untouched, whatever they are), so this takes the store's
-    * optimistic-retry commit (r17): a fence race lost to a concurrent
-    * append re-reads the NEW current generation and re-publishes —
-    * both appenders land, serving equals the sequential result
+    * append commit: losing the manifest slot to a concurrent commit
+    * re-reads the NEW head and re-publishes — all appenders land,
+    * serving equals the sequential result
     * (Bm25SnapshotSpec's concurrent-append pin). Layout truth (bucket
     * count) comes from the stored meta — immutable across generations,
     * so a retry cannot see a different layout. Batch doc ids must be
@@ -180,10 +181,9 @@ object Bm25Index {
              srcBatch: Long = -1L): Unit = {
     val spark = df.sparkSession
     val store = graft.sources.SnapshotStore
-    val fence = store.acquireFence(spark, dir)
     val nb = bucketsOf(spark, dir, store.currentFiles(spark, dir))
     store.publishAppend(spark, dir,
-      writeParts(df, id, text, dir, nb, srcBatch), fence, "append")
+      writeParts(df, id, text, dir, nb, srcBatch), "append")
     ()
   }
 
@@ -204,8 +204,7 @@ object Bm25Index {
     * (rows re-filed, the meta fold is the sum serving computes). */
   def compact(spark: SparkSession, dir: String, minParts: Int = 2): Unit = {
     val store = graft.sources.SnapshotStore
-    val fence = store.acquireFence(spark, dir)
-    val lines = store.currentFiles(spark, dir)
+    val (base, lines) = store.snapshot(spark, dir)
     val byBucket = lines.flatMap(l => bucketOf(l).map(_ -> l))
       .groupBy(_._1).map { case (b, ls) => b -> ls.map(_._2) }
     val fragFiles = byBucket.valuesIterator
@@ -242,7 +241,7 @@ object Bm25Index {
       next = next.filterNot(metaLines.toSet) ++
         store.partFiles(spark, dir, s"parts/m_$uid")
     }
-    store.publishNext(spark, dir, next, fence, "compact")
+    store.publishNext(spark, dir, next, base, "compact")
     ()
   }
 
@@ -252,9 +251,9 @@ object Bm25Index {
     * torn writers' orphans. Size the window to the longest reader. */
   def retire(spark: SparkSession, dir: String,
              keepGenerations: Int = 2): Unit =
-    graft.sources.SnapshotStore.retireFileGrain(spark, dir, keepGenerations)
+    graft.sources.SnapshotStore.retire(spark, dir, keepGenerations)
 
-  /** [[Bm25.topK]] served from the manifest's CURRENT generation: the
+  /** [[Bm25.topK]] served from the manifest's head generation: the
     * query's term buckets select manifest LINES (the static prune, at
     * file grain), and the whole plan pins to that exact file set for
     * its lifetime — bit-identical to [[Bm25.topK]] over the same

@@ -40,8 +40,8 @@ import graft.sources.SnapshotStore
   * generation while a compaction publishes the fold (snapshot
   * isolation, CardStoreSpec's concurrent-reader pin), a torn append
   * or fold is invisible unpublished debris ([[retire]] sweeps it; no
-  * rollback journal exists to replay), and a split-brain second
-  * writer fails fast at publish (the store's fence). Parts carry a
+  * rollback journal exists to replay), and a compaction whose base
+  * generation was superseded fails fast at publish. Parts carry a
   * `src_batch` column (-1 for batch-API appends) so a streaming
   * maintainer can probe the committed max batch id — its lost-marker
   * replay gate ([[graft.streaming.CardStoreStream]]), since additive

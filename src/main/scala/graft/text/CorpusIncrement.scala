@@ -24,7 +24,7 @@ import graft.operators.{ConnectedComponents, Rounds}
   * manifest ([[graft.sources.SnapshotStore]]'s bucket-grain
   * primitives) — every write lands as a fresh immutable part subtree,
   * and a build/increment/compaction publishes ONE manifest generation
-  * spanning all eight artifact dirs (one atomic CURRENT swap). That
+  * spanning all eight artifact dirs (one manifest commit). That
   * subsumes both of the previous protocols at once: the rollback
   * journal (a kill between ANY two dir writes just leaves unpublished
   * debris — readers resolve the prior generation with no recovery
@@ -32,7 +32,7 @@ import graft.operators.{ConnectedComponents, Rounds}
   * `v=K` version-pair lockstep (the old torn-version fail-fast is
   * structurally unreachable: both artifacts change in the same
   * generation or neither). Readers are SNAPSHOT-ISOLATED: a query
-  * resolves CURRENT once and keeps its exact file set across
+  * resolves the head once and keeps its exact file set across
   * concurrent maintenance; superseded and orphaned files are
   * reclaimed by [[compact]]'s file-grain retirement behind a
   * generation grace window.
@@ -131,25 +131,23 @@ object CorpusIncrement {
     * resolved ONCE, plus the parts this operation has written so far
     * (an increment reads the df/post parts it just appended — the
     * band analysis needs the NEW state), minus lines it supersedes
-    * (pairs/labels replacements, compaction folds). [[publish]] swaps
-    * the whole view in as the next generation — one atomic CURRENT
-    * rename across all eight artifact dirs. */
+    * (pairs/labels replacements, compaction folds). [[publish]]
+    * commits the whole view as the generation after the one it read —
+    * one manifest across all eight artifact dirs. */
   private final class Store(val spark: SparkSession, val dir: String,
                             rebuild: Boolean = false,
                             mutating: Boolean = false,
                             asOf: Long = -1L) {
     require(asOf < 0 || !mutating,
       s"an AS-OF view is read-only — cannot mutate $dir at generation $asOf")
-    // a mutating view claims its writer fence BEFORE resolving the
-    // base lines it will transform: a second writer claiming after us
-    // makes OUR publish throw instead of dropping its lines
-    private val fence: Long =
-      if (mutating) graft.sources.SnapshotStore.acquireFence(spark, dir)
-      else -1L
-    private val base: Seq[String] =
-      if (rebuild) Nil
-      else if (asOf > 0) graft.sources.SnapshotStore.filesAsOf(spark, dir, asOf)
-      else graft.sources.SnapshotStore.currentFiles(spark, dir)
+    // the generation the base lines were read from: a writer that
+    // commits after it makes OUR publish throw instead of dropping
+    // its lines
+    private val (baseGen, base): (Long, Seq[String]) =
+      if (rebuild) (graft.sources.SnapshotStore.currentGen(spark, dir), Nil)
+      else if (asOf > 0)
+        (asOf, graft.sources.SnapshotStore.filesAsOf(spark, dir, asOf))
+      else graft.sources.SnapshotStore.snapshot(spark, dir)
     private val pending = scala.collection.mutable.ArrayBuffer.empty[String]
     private val dropped = scala.collection.mutable.Set.empty[String]
 
@@ -201,7 +199,7 @@ object CorpusIncrement {
 
     def publish(op: String = "publish"): Unit = {
       require(mutating, s"read-only store view cannot publish at $dir")
-      graft.sources.SnapshotStore.publishNext(spark, dir, lines, fence, op)
+      graft.sources.SnapshotStore.publishNext(spark, dir, lines, baseGen, op)
       ()
     }
   }
@@ -549,15 +547,15 @@ object CorpusIncrement {
     }
     if (changed) st.publish("compact")
     // reclaim superseded + orphaned files behind the grace window
-    graft.sources.SnapshotStore.retireFileGrain(spark, dir, keepGenerations)
+    graft.sources.SnapshotStore.retire(spark, dir, keepGenerations)
   }
 
   /** Fold one crawl batch into the artifacts and return the updated
     * corpus output — hash-identical to `build(base ∪ batch)`. The
     * whole increment publishes as ONE manifest generation: a crash
-    * anywhere before the CURRENT swap leaves readers on the prior
+    * anywhere before the manifest commit leaves readers on the prior
     * generation (unpublished parts are invisible debris retirement
-    * sweeps), and the swap itself commits all eight artifact dirs at
+    * sweeps), and the commit itself covers all eight artifact dirs at
     * once. */
   def increment(batch: DataFrame, dir: String): DataFrame = {
     val spark = batch.sparkSession

@@ -35,8 +35,8 @@ import graft.sources.SnapshotStore
   * maintenance serves its exact generation while compaction and
   * grace-window retirement run (LmStoreSnapshotSpec), a torn fold is
   * invisible unpublished debris (no rollback journal to replay), and
-  * a split-brain second writer fails fast at publish (the store's
-  * fence). */
+  * concurrent appends all land: each commits its own generation, equal
+  * to the sequential result. */
 object LmStore {
 
   private def normed(text: Column): Column =
@@ -72,7 +72,7 @@ object LmStore {
     SnapshotStore.retire(spark, dir, keepGenerations)
 
   /** The driver-sized model from the summed parts of the manifest's
-    * CURRENT generation (the whole read pins to that generation's
+    * head generation (the whole read pins to that generation's
     * exact file set) — the same add-one smoothing as
     * [[TextFeatures.charBigramEntropy]], plus the unseen floor
     * ln(1/(tot+v)) so artifact serving is a total function. */

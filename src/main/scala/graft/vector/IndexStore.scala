@@ -21,8 +21,8 @@ import graft.sources.SnapshotStore
   * coexist in one store, an in-flight serving job keeps reading its
   * exact generation while a rebuild publishes (the overwrite window
   * that could kill a live reader no longer exists), a torn save is
-  * invisible unpublished debris [[retire]] sweeps, and a split-brain
-  * second writer fails fast at publish (the store fence).
+  * invisible unpublished debris [[retire]] sweeps, and a second
+  * writer whose base was superseded fails fast at publish.
   *
   * Layout is the serving layout, not a dump: the vector table is
   * PARTITIONED BY CELL, so an nprobe-cell query's `cell IN (...)`
@@ -40,10 +40,7 @@ object IndexStore {
     * every other table's ride through. */
   private def publishTables(spark: SparkSession, dir: String,
                             writes: Seq[(String, String => Unit)]): Unit = {
-    val fence = SnapshotStore.acquireFence(spark, dir)
-    val lines =
-      if (SnapshotStore.currentGen(spark, dir) == 0L) Nil
-      else SnapshotStore.currentFiles(spark, dir)
+    val (base, lines) = SnapshotStore.snapshot(spark, dir)
     val names = writes.map(_._1)
     val keep = lines.filterNot(l =>
       names.exists(n => l.startsWith(s"parts/${n}_")))
@@ -52,12 +49,12 @@ object IndexStore {
       w(s"$dir/$rel")
       SnapshotStore.partFiles(spark, dir, rel)
     }
-    SnapshotStore.publishNext(spark, dir, keep ++ added, fence,
+    SnapshotStore.publishNext(spark, dir, keep ++ added, base,
       s"save:${names.mkString("+")}")
     ()
   }
 
-  /** The generation's committed lines: CURRENT, or a pinned AS-OF
+  /** The generation's committed lines: the head, or a pinned AS-OF
     * generation (r17 — a retired or never-committed one throws). */
   private def linesAt(spark: SparkSession, dir: String,
                       asOf: Option[Long]): Seq[String] =
@@ -103,7 +100,7 @@ object IndexStore {
 
   /** Load an IVF index back as (assigned, cents, corpus) — drop-in for
     * [[IvfAnn.topKWith]]'s arguments. Both views read the ONE
-    * partitioned vector table, pinned to the CURRENT generation for
+    * partitioned vector table, pinned to the head generation for
     * their lifetime; a cell filter on either prunes partitions.
     * `asOf` (r17) pins a COMMITTED generation still inside
     * [[retire]]'s grace window instead — serve the PRE-rebuild index

@@ -85,7 +85,7 @@ class Bm25SnapshotSpec extends SparkSpec {
     Bm25Index.build(docs.filter(pmod(col("doc_id"), lit(5)) =!= 0),
       col("doc_id"), col("text"), dir, nBuckets = 8)
     // race the two batches loadStore appends sequentially: appends
-    // commute, so the loser of the fence duel must re-read the
+    // commute, so the loser of the manifest slot must re-read the
     // winner's generation and land on top of it, not throw
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val ts = Seq(0, 5).map { r =>
@@ -172,6 +172,7 @@ class Bm25SnapshotSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(orphan.toString)
     assert(rows(Bm25Index.topK(spark, dir, queries)) === want,
       "unpublished parts must never reach a reader")
+    StoreDebris.age(orphan.getParentFile)
     Bm25Index.retire(spark, dir, keepGenerations = 1)
     assert(!orphan.exists(), "orphaned torn parts must be swept")
     assert(rows(Bm25Index.topK(spark, dir, queries)) === want)

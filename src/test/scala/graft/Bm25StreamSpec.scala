@@ -90,7 +90,7 @@ class Bm25StreamSpec extends SparkSpec {
     val genBefore = gen()
 
     // a maintainer killed mid-append: postings + meta part subtrees
-    // fully written, CURRENT never swapped, no marker — exactly what a
+    // fully written, no manifest committed, no marker — exactly what a
     // kill between the write jobs and the publish leaves behind
     val tornP = new java.io.File(dir, "parts/p_torn/bucket=0")
     tornP.mkdirs()
@@ -118,6 +118,7 @@ class Bm25StreamSpec extends SparkSpec {
     assert(served() == want2)
 
     // retirement sweeps the torn subtrees with the superseded files
+    Seq(tornP.getParentFile, tornM).foreach(StoreDebris.age)
     Bm25Index.retire(spark, dir, keepGenerations = 1)
     assert(!tornM.exists(), "orphaned torn parts must be swept")
     assert(served() == want2)

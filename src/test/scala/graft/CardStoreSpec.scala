@@ -140,7 +140,7 @@ class CardStoreSpec extends SparkSpec {
     val gen = graft.sources.SnapshotStore.currentGen(spark, dir)
 
     // torn compactor: a folded part fully written but never published
-    // (killed before the CURRENT swap) — readers never see it, the
+    // (killed before its manifest commit) — readers never see it, the
     // generation does not advance, and retirement sweeps it
     val orphan = new java.io.File(dir, "parts/c_torn")
     orphan.mkdirs()
@@ -155,6 +155,7 @@ class CardStoreSpec extends SparkSpec {
     // through compaction and grace-window retirement
     val inFlight = CardStore.card(spark, dir)
     CardStore.compact(spark, dir)
+    StoreDebris.age(orphan)
     CardStore.retire(spark, dir, keepGenerations = 2)
     assert(inFlight.head().toSeq === want.toSeq,
       "the in-flight reader must keep its pre-compaction generation")

@@ -103,6 +103,7 @@ class ChangeLogSnapshotSpec extends SparkSpec {
     val committed = full(dir)
     assert(full(dir) == committed && !committed.exists(_._1 == 999L),
       "unpublished parts must never reach a reader")
+    StoreDebris.age(debris.getParentFile)
     ChangeLogStream.retire(spark, dir, keepGenerations = 1)
     assert(!debris.exists(), "torn debris must be swept")
     assert(full(dir) == committed)

@@ -238,6 +238,7 @@ class CorpusIncrementSpec extends SparkSpec {
     assert(got == run(df(base ++ batch), eval))
     // tight-window maintenance sweeps the orphans (grace 1: only the
     // current generation's files survive)
+    debris.foreach(StoreDebris.age)
     CorpusIncrement.compact(spark, dir, keepGenerations = 1)
     debris.foreach(d => assert(!java.nio.file.Files.exists(d),
       s"orphaned debris $d must be swept"))

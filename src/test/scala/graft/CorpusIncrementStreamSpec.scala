@@ -131,6 +131,8 @@ class CorpusIncrementStreamSpec extends SparkSpec {
 
     // tight-window maintenance sweeps the planted debris and every
     // superseded generation; serving is unchanged
+    Seq("hidx", "post", "df", "pairs", "labels").foreach(a =>
+      StoreDebris.age(java.nio.file.Paths.get(dir, a, "p_torndebris")))
     CorpusIncrement.compact(spark, dir, keepGenerations = 1)
     Seq("hidx", "post", "df", "pairs", "labels").foreach { a =>
       assert(!java.nio.file.Files.exists(

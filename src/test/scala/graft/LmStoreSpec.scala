@@ -64,8 +64,8 @@ class LmStoreSpec extends SparkSpec {
       docs.filter(pmod(col("doc_id"), lit(3)) === i), col("text"), dir))
     val want = scored(dir, docs)
     val gen = graft.sources.SnapshotStore.currentGen(spark, dir)
-    // a compactor killed AFTER writing its folded part but BEFORE the
-    // CURRENT swap: the part exists on disk, no manifest names it
+    // a compactor killed AFTER writing its folded part but BEFORE its
+    // manifest commit: the part exists on disk, no manifest names it
     val orphan = new java.io.File(dir, "parts/c_torn")
     orphan.mkdirs()
     graft.sources.SnapshotStore.read(spark, dir)
@@ -79,6 +79,7 @@ class LmStoreSpec extends SparkSpec {
     // sweeps the orphan with the superseded parts
     LmStore.compact(spark, dir)
     assert(scored(dir, docs) == want)
+    StoreDebris.age(orphan)
     LmStore.retire(spark, dir, keepGenerations = 1)
     assert(!orphan.exists(), "orphaned torn folds must be swept")
     assert(scored(dir, docs) == want)

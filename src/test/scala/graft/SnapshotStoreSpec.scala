@@ -62,7 +62,7 @@ class SnapshotStoreSpec extends SparkSpec {
     val genBefore = SnapshotStore.currentGen(spark, dir)
 
     // simulate a compactor killed AFTER writing its folded part but
-    // BEFORE publishing CURRENT: write an orphan part dir directly
+    // BEFORE its manifest commit: write an orphan part dir directly
     val orphan = new java.io.File(dir, "parts/c_torn")
     orphan.mkdirs()
     Seq((999L, "ghost")).toDF("id", "s")
@@ -73,34 +73,45 @@ class SnapshotStoreSpec extends SparkSpec {
       "readers resolve the old manifest exactly — never a mix")
 
     // the retrying compactor succeeds alongside the debris, and
-    // retirement sweeps the orphan with the superseded parts
+    // retirement sweeps the (crash-aged) orphan with the superseded
+    // parts
     SnapshotStore.compact(spark, dir)
     assert(rows(SnapshotStore.read(spark, dir)) === want)
+    StoreDebris.age(orphan)
     SnapshotStore.retire(spark, dir, keepGenerations = 1)
     assert(!orphan.exists(), "orphaned torn parts must be swept")
     assert(rows(SnapshotStore.read(spark, dir)) === want)
   }
 
-  test("an absent CURRENT resolves the newest manifest, not an empty " +
-      "store (rename-refuses-to-replace filesystems delete CURRENT on " +
-      "every publish)") {
-    val dir = java.nio.file.Files.createTempDirectory("snapstore_nocur").toString
+  test("a staged manifest is invisible: readers, AS-OF reads and " +
+      "generations() see only linked manifests, and the next commit " +
+      "takes the slot") {
+    val dir = java.nio.file.Files.createTempDirectory("snapstore_staged").toString
     val all = (1L to 20L).map(i => (i, s"v$i"))
     all.grouped(10).foreach(b => SnapshotStore.append(b.toDF("id", "s"), dir))
     val want = all.toSet
-    // simulate the publish window (or a crash inside it) on a
-    // filesystem whose rename cannot replace: CURRENT is deleted, both
-    // rename-published manifests remain
-    assert(new java.io.File(dir, "_ledger/CURRENT").delete())
+    // a writer killed between staging manifest.3 in full and linking
+    // it: the staged tmp names parts that were never written
+    val staged = new java.io.File(dir, "_ledger/manifest.3.deadbeef.tmp")
+    java.nio.file.Files.write(staged.toPath,
+      "#op=append parent=2\n@mp_never_written".getBytes)
     assert(SnapshotStore.currentGen(spark, dir) === 2L,
-      "readers must fall back to the newest manifest")
+      "the committed generation is the highest LINKED manifest")
+    assert(SnapshotStore.generations(spark, dir) === Seq(1L, 2L),
+      "a staged manifest is not a generation")
     assert(rows(SnapshotStore.read(spark, dir)) === want,
-      "a mid-publish reader serves the newest complete generation")
-    // the store recovers fully: the next append restores CURRENT
+      "readers resolve the committed generation exactly")
+    val e = intercept[IllegalArgumentException] {
+      SnapshotStore.read(spark, dir, 3L)
+    }
+    assert(e.getMessage.contains("never committed"))
+    assert(!new java.io.File(dir, "_ledger/CURRENT").exists(),
+      "no pointer file: the manifests alone define the head")
+    // the next commit takes slot 3 beside the debris
     SnapshotStore.append(Seq((21L, "v21")).toDF("id", "s"), dir)
-    assert(SnapshotStore.currentGen(spark, dir) === 3L)
-    assert(rows(SnapshotStore.read(spark, dir)) === want + ((21L, "v21")))
-    assert(new java.io.File(dir, "_ledger/CURRENT").exists())
+    assert(SnapshotStore.generations(spark, dir) === Seq(1L, 2L, 3L))
+    assert(rows(SnapshotStore.read(spark, dir, 3L)) === want + ((21L, "v21")))
+    assert(staged.exists(), "fresh staged debris waits out the grace")
   }
 
   test("manifest-list indirection: an append reuses every prior " +
@@ -135,37 +146,59 @@ class SnapshotStoreSpec extends SparkSpec {
       "manifest parts unreferenced by the kept window must be swept")
   }
 
-  test("writer fencing: a stale writer's publish throws instead of " +
-      "silently dropping the newer writer's lines") {
-    val dir = java.nio.file.Files.createTempDirectory("snapstore_fence").toString
-    SnapshotStore.append((1L to 5L).map(i => (i, s"v$i")).toDF("id", "s"), dir)
-    // writer A claims the store and resolves its view...
-    val fenceA = SnapshotStore.acquireFence(spark, dir)
-    val viewA = SnapshotStore.currentFiles(spark, dir)
-    // ...then writer B claims AFTER A and publishes first (B's fence
-    // is newest at B's publish, so B proceeds)
-    val fenceB = SnapshotStore.acquireFence(spark, dir)
-    val relB = "parts/b_fence_b"
+  test("base-generation conflict: a writer whose base generation was " +
+      "superseded throws instead of silently dropping the newer " +
+      "writer's lines") {
+    val dir = java.nio.file.Files.createTempDirectory("snapstore_conflict").toString
+    val v = (1L to 5L).map(i => (i, s"v$i")).toSet
+    SnapshotStore.append(v.toSeq.toDF("id", "s"), dir)
+    // writers A and B both read generation 1...
+    val (baseA, viewA) = SnapshotStore.snapshot(spark, dir)
+    val (baseB, viewB) = SnapshotStore.snapshot(spark, dir)
+    // ...B commits generation 2 first
+    val relB = "parts/b_conflict_b"
     Seq((100L, "b")).toDF("id", "s").coalesce(1)
       .write.parquet(s"$dir/$relB")
-    SnapshotStore.publishNext(spark, dir,
-      SnapshotStore.currentFiles(spark, dir) ++
-        SnapshotStore.partFiles(spark, dir, relB), fenceB)
-    assert(rows(SnapshotStore.read(spark, dir))
-      === (1L to 5L).map(i => (i, s"v$i")).toSet + ((100L, "b")))
-    // A's publish was computed from a pre-B read: it MUST fail fast —
+    assert(SnapshotStore.publishNext(spark, dir,
+      viewB ++ SnapshotStore.partFiles(spark, dir, relB), baseB) === 2L)
+    assert(rows(SnapshotStore.read(spark, dir)) === v + ((100L, "b")))
+    // A's publish was computed from generation 1: it MUST fail fast —
     // publishing viewA would drop B's row
-    val relA = "parts/b_fence_a"
+    val relA = "parts/b_conflict_a"
     Seq((200L, "a")).toDF("id", "s").coalesce(1)
       .write.parquet(s"$dir/$relA")
     val e = intercept[IllegalStateException] {
       SnapshotStore.publishNext(spark, dir,
-        viewA ++ SnapshotStore.partFiles(spark, dir, relA), fenceA)
+        viewA ++ SnapshotStore.partFiles(spark, dir, relA), baseA)
     }
     assert(e.getMessage.contains("stale writer"))
     // the store still serves B's generation, lines intact
-    assert(rows(SnapshotStore.read(spark, dir))
-      === (1L to 5L).map(i => (i, s"v$i")).toSet + ((100L, "b")))
+    assert(SnapshotStore.currentGen(spark, dir) === 2L)
+    assert(rows(SnapshotStore.read(spark, dir)) === v + ((100L, "b")))
+  }
+
+  test("a writer whose base+1 slot was retired gets a conflict, not a " +
+      "silent commit below the head") {
+    val dir = java.nio.file.Files.createTempDirectory("snapstore_stale").toString
+    SnapshotStore.append(Seq((1L, "v1")).toDF("id", "s"), dir)
+    val (base, view) = SnapshotStore.snapshot(spark, dir)
+    SnapshotStore.append(Seq((2L, "v2")).toDF("id", "s"), dir)
+    SnapshotStore.append(Seq((3L, "v3")).toDF("id", "s"), dir)
+    // retirement frees slots 1 and 2: the stale writer's link of
+    // manifest.2 would succeed, below the head
+    SnapshotStore.retire(spark, dir, keepGenerations = 1)
+    assert(SnapshotStore.generations(spark, dir) === Seq(3L))
+    val rel = "parts/b_stale"
+    Seq((9L, "stale")).toDF("id", "s").coalesce(1).write.parquet(s"$dir/$rel")
+    val e = intercept[IllegalStateException] {
+      SnapshotStore.publishNext(spark, dir,
+        view ++ SnapshotStore.partFiles(spark, dir, rel), base)
+    }
+    assert(e.getMessage.contains("stale writer"))
+    assert(SnapshotStore.generations(spark, dir) === Seq(3L),
+      "the stale writer must withdraw its manifest")
+    assert(rows(SnapshotStore.read(spark, dir)) ===
+      Set((1L, "v1"), (2L, "v2"), (3L, "v3")))
   }
 
   test("AS-OF generation reads: a pinned pre-compaction generation " +
@@ -192,8 +225,8 @@ class SnapshotStoreSpec extends SparkSpec {
       "and the store equals the sequential result") {
     val dir = java.nio.file.Files.createTempDirectory("snapstore_cc").toString
     SnapshotStore.append((1L to 5L).map(i => (i, s"v$i")).toDF("id", "s"), dir)
-    // race N appenders; appends commute, so every lost fence duel must
-    // retry against the new CURRENT instead of throwing or dropping
+    // race N appenders; appends commute, so every lost manifest slot
+    // must retry against the new head instead of throwing or dropping
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val ts = (0 until 4).map { t =>
       new Thread(() => {
@@ -243,35 +276,10 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(metaOf(3L)("op") === "compact")
     assert(metaOf(3L)("parent") === "2",
       "a compaction's meta must name the generation it folded")
-    assert(metaOf(3L)("fence").toLong > metaOf(2L)("fence").toLong,
-      "fences are claimed in operation order")
     SnapshotStore.retire(spark, dir, keepGenerations = 1)
     assert(SnapshotStore.generationMeta(spark, dir, 1L).isEmpty,
       "retired generations drop their meta stamps")
     assert(SnapshotStore.generationMeta(spark, dir, 3L).isDefined)
-  }
-
-  test("torn manifests above CURRENT are not a time-travel surface: " +
-      "generations() excludes them and AS-OF reads refuse them") {
-    val dir = java.nio.file.Files.createTempDirectory("snapstore_torn2").toString
-    SnapshotStore.append((1L to 5L).map(i => (i, s"v$i")).toDF("id", "s"), dir)
-    // a writer's manifest.2 whose CURRENT swap never ran: a later retry
-    // of generation 2 delete-and-replaces it, so an AS-OF reader pinned
-    // to it could have its manifest swapped underneath — refuse to pin
-    val m = new java.io.File(dir, "_ledger/manifest.2")
-    java.nio.file.Files.write(m.toPath, "parts/b_torn/x.parquet".getBytes)
-    assert(SnapshotStore.generations(spark, dir) === Seq(1L),
-      "an uncommitted manifest is not a generation")
-    val e = intercept[IllegalArgumentException] {
-      SnapshotStore.read(spark, dir, 2L)
-    }
-    assert(e.getMessage.contains("never committed"))
-    // the torn slot is still recoverable: the next append commits a
-    // REAL generation 2 over it
-    SnapshotStore.append(Seq((6L, "v6")).toDF("id", "s"), dir)
-    assert(SnapshotStore.generations(spark, dir) === Seq(1L, 2L))
-    assert(rows(SnapshotStore.read(spark, dir, 2L))
-      === (1L to 6L).map(i => (i, s"v$i")).toSet)
   }
 
   test("ledger sweep: streaming batch markers below the newest are " +
@@ -297,20 +305,37 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(!names.contains("mp_dead.tmp"), "aged tmp debris must be swept")
     assert(names.contains("manifest.9.tmp"),
       "a LIVE writer's in-flight tmp must survive the grace window")
-    assert(names.exists(_.startsWith("fence.")), "the live epoch survives")
   }
 
-  test("a reader resolved between manifest write and CURRENT swap sees " +
-      "exactly the old generation") {
-    val dir = java.nio.file.Files.createTempDirectory("snapstore_mid").toString
+  test("retire's orphan rule: superseded parts go at once, an " +
+      "unreferenced part waits out the grace — a fresh one survives, " +
+      "an aged one is swept") {
+    val dir = java.nio.file.Files.createTempDirectory("snapstore_orphan").toString
     SnapshotStore.append((1L to 5L).map(i => (i, s"v$i")).toDF("id", "s"), dir)
-    val want = rows(SnapshotStore.read(spark, dir))
-    // plant the NEXT generation's manifest without swapping CURRENT
-    // (the window between the publish's two writes): readers key on
-    // CURRENT alone, so they still resolve the committed set
-    val m = new java.io.File(dir, "_ledger/manifest.99")
-    java.nio.file.Files.write(m.toPath, "parts/b_nonexistent/x.parquet".getBytes)
-    assert(rows(SnapshotStore.read(spark, dir)) === want)
-    assert(SnapshotStore.currentGen(spark, dir) === 1L)
+    SnapshotStore.compact(spark, dir)
+    // two unpublished part dirs: a live writer's and a crashed one's
+    def plant(name: String): java.io.File = {
+      val d = new java.io.File(dir, s"parts/$name")
+      Seq((99L, name)).toDF("id", "s").coalesce(1).write.parquet(d.toString)
+      d
+    }
+    val fresh = plant("b_inflight")
+    val aged = plant("b_crashed")
+    StoreDebris.age(aged)
+    val freshPart = new java.io.File(dir, "_ledger/mp_inflight")
+    java.nio.file.Files.write(freshPart.toPath, "parts/b_inflight/x".getBytes)
+    val agedPart = new java.io.File(dir, "_ledger/mp_crashed")
+    java.nio.file.Files.write(agedPart.toPath, "parts/b_crashed/x".getBytes)
+    StoreDebris.age(agedPart)
+    SnapshotStore.retire(spark, dir, keepGenerations = 1)
+    val partDirs = new java.io.File(dir, "parts").listFiles().map(_.getName).toSet
+    assert(partDirs.filter(_.startsWith("b_")) === Set("b_inflight"),
+      s"the append superseded by the compaction must go at once: $partDirs")
+    assert(fresh.exists() && freshPart.exists(),
+      "a fresh unreferenced part may be a live writer's: it must survive")
+    assert(!aged.exists() && !agedPart.exists(),
+      "an aged unreferenced part is a crashed writer's: it must be swept")
+    assert(rows(SnapshotStore.read(spark, dir)) ===
+      (1L to 5L).map(i => (i, s"v$i")).toSet)
   }
 }
