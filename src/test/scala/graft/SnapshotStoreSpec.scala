@@ -83,35 +83,63 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(rows(SnapshotStore.read(spark, dir)) === want)
   }
 
-  test("a staged manifest is invisible: readers, AS-OF reads and " +
-      "generations() see only linked manifests, and the next commit " +
-      "takes the slot") {
-    val dir = java.nio.file.Files.createTempDirectory("snapstore_staged").toString
+  test("an absent CURRENT resolves the newest manifest, not an empty " +
+      "store (rename-refuses-to-replace filesystems delete CURRENT on " +
+      "every publish)") {
+    val dir = java.nio.file.Files.createTempDirectory("snapstore_nocur").toString
     val all = (1L to 20L).map(i => (i, s"v$i"))
     all.grouped(10).foreach(b => SnapshotStore.append(b.toDF("id", "s"), dir))
     val want = all.toSet
-    // a writer killed between staging manifest.3 in full and linking
-    // it: the staged tmp names parts that were never written
-    val staged = new java.io.File(dir, "_ledger/manifest.3.deadbeef.tmp")
-    java.nio.file.Files.write(staged.toPath,
-      "#op=append parent=2\n@mp_never_written".getBytes)
-    assert(SnapshotStore.currentGen(spark, dir) === 2L,
-      "the committed generation is the highest LINKED manifest")
-    assert(SnapshotStore.generations(spark, dir) === Seq(1L, 2L),
-      "a staged manifest is not a generation")
-    assert(rows(SnapshotStore.read(spark, dir)) === want,
-      "readers resolve the committed generation exactly")
-    val e = intercept[IllegalArgumentException] {
-      SnapshotStore.read(spark, dir, 3L)
-    }
-    assert(e.getMessage.contains("never committed"))
+    // there is no pointer file at all: the highest linked manifest is
+    // the head, so no publish can leave readers on an empty store
     assert(!new java.io.File(dir, "_ledger/CURRENT").exists(),
       "no pointer file: the manifests alone define the head")
-    // the next commit takes slot 3 beside the debris
+    assert(SnapshotStore.currentGen(spark, dir) === 2L,
+      "readers resolve the newest manifest")
+    assert(rows(SnapshotStore.read(spark, dir)) === want,
+      "readers serve the newest complete generation")
     SnapshotStore.append(Seq((21L, "v21")).toDF("id", "s"), dir)
-    assert(SnapshotStore.generations(spark, dir) === Seq(1L, 2L, 3L))
-    assert(rows(SnapshotStore.read(spark, dir, 3L)) === want + ((21L, "v21")))
+    assert(SnapshotStore.currentGen(spark, dir) === 3L)
+    assert(rows(SnapshotStore.read(spark, dir)) === want + ((21L, "v21")))
+    assert(!new java.io.File(dir, "_ledger/CURRENT").exists())
+  }
+
+  test("torn manifests above CURRENT are not a time-travel surface: " +
+      "generations() excludes them and AS-OF reads refuse them") {
+    val dir = java.nio.file.Files.createTempDirectory("snapstore_torn2").toString
+    SnapshotStore.append((1L to 5L).map(i => (i, s"v$i")).toDF("id", "s"), dir)
+    // a writer killed between staging manifest.2 in full and linking
+    // it: the staged tmp names parts that were never written
+    val staged = new java.io.File(dir, "_ledger/manifest.2.deadbeef.tmp")
+    java.nio.file.Files.write(staged.toPath,
+      "#op=append parent=1\n@mp_never_written".getBytes)
+    assert(SnapshotStore.generations(spark, dir) === Seq(1L),
+      "a staged manifest is not a generation")
+    val e = intercept[IllegalArgumentException] {
+      SnapshotStore.read(spark, dir, 2L)
+    }
+    assert(e.getMessage.contains("never committed"))
+    // the next commit takes slot 2 beside the debris
+    SnapshotStore.append(Seq((6L, "v6")).toDF("id", "s"), dir)
+    assert(SnapshotStore.generations(spark, dir) === Seq(1L, 2L))
+    assert(rows(SnapshotStore.read(spark, dir, 2L))
+      === (1L to 6L).map(i => (i, s"v$i")).toSet)
     assert(staged.exists(), "fresh staged debris waits out the grace")
+  }
+
+  test("a reader resolved between manifest write and CURRENT swap sees " +
+      "exactly the old generation") {
+    val dir = java.nio.file.Files.createTempDirectory("snapstore_mid").toString
+    SnapshotStore.append((1L to 5L).map(i => (i, s"v$i")).toDF("id", "s"), dir)
+    val want = rows(SnapshotStore.read(spark, dir))
+    // the next generation's manifest staged in full but not yet linked
+    // (the one window of a commit): readers see only linked manifests
+    val staged = new java.io.File(dir, "_ledger/manifest.2.deadbeef.tmp")
+    java.nio.file.Files.write(staged.toPath,
+      "#op=append parent=1\n@mp_never_written".getBytes)
+    assert(rows(SnapshotStore.read(spark, dir)) === want)
+    assert(SnapshotStore.currentGen(spark, dir) === 1L,
+      "the committed generation is the highest LINKED manifest")
   }
 
   test("manifest-list indirection: an append reuses every prior " +
