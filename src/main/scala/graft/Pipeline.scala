@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.Numeric._
 import graft.operators.{Movement, Quality, TimeSeries}
 
-/** The full CellPhe analytics chain composed as ONE Spark job — the
+/** The full CellPhe analytics chain composed as ONE Spark plan — the
   * end-to-end equivalent of the reference workflow
   * (main.nf:408: parse -> filter_size_and_observations ->
   * frame features -> create_frame_summary_features ->

@@ -228,7 +228,7 @@ object SparkEntry {
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0: the full
     * CellPhe chain (QC filter -> movement -> trajectory features)
-    * composed as one Spark job. */
+    * composed as one Spark plan. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_pipeline_e2e")(spark, "/root/testdata/sf0.001")
 

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.functions.Numeric._
 
 /** QC operators from the reference's filtering + report stages. */
@@ -42,34 +43,37 @@ object Quality {
       .agg(count(lit(1)).as("n"))
       .filter(col("n") > 1)
 
-  /** Exact per-group median over a value HISTOGRAM (`grp` columns, `v`
-    * long, `cnt` long) — the scale-safe replacement for `percentile(v,
-    * 0.5)`, whose ObjectHashAggregate buffers every ROW of a group in
-    * one task (the r2 perf-weak QC finding; at 100 TB that is billions
-    * of values in one buffer). Here the group is first collapsed to one
-    * row per distinct VALUE (map-side combined), and the middle rank(s)
-    * are located with a cumulative count over the histogram. The
-    * per-group window sees only distinct values — for QC quantities
-    * (track lengths, per-frame counts) that is bounded by the value
-    * domain, not the row count. Median = mean of the lower/upper middle
-    * ranks, exactly as `percentile`/DuckDB `median` define it. */
-  def histogramMedian(hist: DataFrame, grp: Seq[String]): DataFrame = {
+  /** Per-group n/min/max and EXACT median over a value HISTOGRAM (`grp`
+    * columns, `v` long, `cnt` long). It replaces `percentile(v, 0.5)`,
+    * whose buffer (Spark 4.1's `Percentile`) holds one JVM map entry per
+    * DISTINCT value of a group inside one task (the r2 perf-weak QC
+    * finding); here each distinct value is a row of a map-side-combined
+    * aggregate. One pass: two windows on one partitioning (ordered
+    * cumulative count, unordered total), then one aggregate on it — no
+    * self-join, no extra exchange. Median = mean of the lower/upper
+    * middle ranks, exactly as `percentile`/DuckDB `median` define it. */
+  def histogramSummary(hist: DataFrame, grp: Seq[String]): DataFrame = {
     val gcols = grp.map(col)
-    val w = Window.partitionBy(gcols: _*).orderBy(col("v"))
-    val tot = hist.groupBy(gcols: _*).agg(sum(col("cnt")).as("_n"))
+    val byGrp = Window.partitionBy(gcols: _*)
     val ranked = hist
-      .withColumn("_cum", sum(col("cnt")).over(w))
+      .withColumn("_cum", sum(col("cnt")).over(byGrp.orderBy(col("v"))))
+      .withColumn("_n", sum(col("cnt")).over(byGrp))
       .withColumn("_prev", col("_cum") - col("cnt"))
-      .join(tot, grp)
       // Spark's `/` on longs yields double — floor back to integer ranks
       .withColumn("_r1", floor((col("_n") + 1) / 2).cast("long")) // lower middle (1-based)
       .withColumn("_r2", floor(col("_n") / 2).cast("long") + 1)   // upper middle
-    def covers(r: Column) = col("_prev") < r && r <= col("_cum")
-    ranked.filter(covers(col("_r1")) || covers(col("_r2")))
-      .groupBy(gcols: _*)
-      .agg(((max(when(covers(col("_r1")), col("v"))) +
-        max(when(covers(col("_r2")), col("v")))).cast("double") / 2.0).as("median"))
+    def covers(r: String) = col("_prev") < col(r) && col(r) <= col("_cum")
+    ranked.groupBy(gcols: _*).agg(
+      max(col("_n")).as("n"),
+      min(col("v")).as("min"),
+      max(col("v")).as("max"),
+      ((max(when(covers("_r1"), col("v"))) +
+        max(when(covers("_r2"), col("v")))).cast("double") / 2.0).as("median"))
   }
+
+  /** Exact per-group median over a value histogram (see [[histogramSummary]]). */
+  def histogramMedian(hist: DataFrame, grp: Seq[String]): DataFrame =
+    histogramSummary(hist, grp).select((grp :+ "median").map(col): _*)
 
   /** Cells-per-frame distribution (reference: segmentation_qc.qmd —
     * "cell counts per frame" table: n frames, min/median/max of the
@@ -81,13 +85,9 @@ object Quality {
       .agg(count(lit(1)).as("n"))
       .groupBy(col("grp"), col("n").as("v"))
       .agg(count(lit(1)).as("cnt"))
-    val stats = hist.groupBy(col("grp"))
-      .agg(sum(col("cnt")).as("n_frames"),
-        min(col("v")).as("min_n"),
-        max(col("v")).as("max_n"))
-    stats.join(histogramMedian(hist, Seq("grp")), Seq("grp"))
-      .select(col("grp"), col("n_frames"), col("min_n"),
-        col("median").as("median_n"), col("max_n"))
+    histogramSummary(hist, Seq("grp"))
+      .select(col("grp"), col("n").as("n_frames"), col("min").as("min_n"),
+        col("median").as("median_n"), col("max").as("max_n"))
   }
 
   /** Grouped descriptive stats (reference: segmentation_qc.qmd area
@@ -128,13 +128,9 @@ object Quality {
     val hist = lengths(raw, "raw").union(lengths(filtered, "filtered"))
       .groupBy(col("filter_state"), col("len").as("v"))
       .agg(count(lit(1)).as("cnt"))
-    val stats = hist.groupBy(col("filter_state"))
-      .agg(sum(col("cnt")).as("n_tracks"),
-        min(col("v")).as("min_len"),
-        max(col("v")).as("max_len"))
-    stats.join(histogramMedian(hist, Seq("filter_state")), Seq("filter_state"))
-      .select(col("filter_state"), col("n_tracks"), col("min_len"),
-        col("median").as("median_len"), col("max_len"))
+    histogramSummary(hist, Seq("filter_state"))
+      .select(col("filter_state"), col("n").as("n_tracks"), col("min").as("min_len"),
+        col("median").as("median_len"), col("max").as("max_len"))
   }
 
   /** Frame-to-frame step-distance distribution (reference:
@@ -152,7 +148,7 @@ object Quality {
       .filter(col("_n") === 1)
     val w = Window.partitionBy(col("_e")).orderBy(col("_f"))
     // step distances, computed once (persisted): they feed the algebraic
-    // min/max/count aggregate AND the median selection below
+    // n/min/max aggregate AND the median selection below
     val steps = uniq
       .withColumn("_dx", col("_x") - lag(col("_x"), 1).over(w))
       .withColumn("_dy", (col("_y") - lag(col("_y"), 1).over(w)).cast("double"))
@@ -160,33 +156,35 @@ object Quality {
       .withColumn("_d", sqrt(col("_dx") * col("_dx") + col("_dy") * col("_dy")))
       .select(col("_d"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // EXACT global median without a single-task full-data buffer (the
-    // r2 perf-weak finding: percentile(_d, 0.5) in a one-group
-    // aggregate holds every step distance in one ObjectHashAggregate
-    // buffer). Distances are continuous doubles, so no bounded value
-    // histogram exists; instead select the middle order statistic(s)
-    // from a range-partitioned distributed sort — each task sorts (and
-    // spills) only its value range, and only the two middle ranks come
-    // back to the driver. Same multi-job driver-orchestrated shape as
-    // ConnectedComponents' rounds; the remaining single-group aggregate
-    // carries algebraic (constant-memory) partials only.
-    val n = steps.count()
-    val medianCol =
-      if (n == 0) lit(null).cast("double")
-      else {
-        val targets = Set((n + 1) / 2 - 1, n / 2) // 0-based lower/upper middle
-        val mids = steps.orderBy(col("_d")).rdd
-          .map(_.getDouble(0)).zipWithIndex()
-          .filter { case (_, i) => targets(i) }
-          .map(_._1).collect()
-        cround(lit(mids.sum / mids.length), 4)
-      }
-    // the returned aggregate is steps' last reader (the count and the
-    // median selection above already materialized the cache)
-    graft.functions.CacheRelease.afterNextExecution(steps)
-    steps.agg(count(lit(1)).as("n_steps"),
-      cround(min(col("_d")), 4).as("min_dist"),
-      medianCol.as("median_dist"),
-      cround(max(col("_d")), 4).as("max_dist"))
+    try {
+      val stats = steps.agg(count(lit(1)), cround(min(col("_d")), 4),
+        cround(max(col("_d")), 4)).head()
+      val n = stats.getLong(0)
+      // EXACT global median without a single-task buffer: Spark 4.1's
+      // percentile(_d, 0.5) keeps one entry per DISTINCT value in one
+      // aggregate buffer, and continuous step distances are nearly all
+      // distinct, so that is every row and no bounded value histogram
+      // exists (unlike histogramSummary's integer QC values). Instead
+      // select the middle order statistic(s) from a range-partitioned
+      // distributed sort — each task sorts (and spills) only its value
+      // range, and only the two middle ranks come back to the driver.
+      val median: Any =
+        if (n == 0) null
+        else {
+          val targets = Set((n + 1) / 2 - 1, n / 2) // 0-based lower/upper middle
+          val mids = steps.orderBy(col("_d")).rdd
+            .map(_.getDouble(0)).zipWithIndex()
+            .filter { case (_, i) => targets(i) }
+            .map(_._1).collect()
+          croundD(mids.sum / mids.length, 4)
+        }
+      // one literal row: every pass over `steps` has already run
+      df.sparkSession.createDataFrame(
+        java.util.List.of(Row(n, stats.get(1), median, stats.get(2))),
+        StructType(Seq(StructField("n_steps", LongType, nullable = false),
+          StructField("min_dist", DoubleType),
+          StructField("median_dist", DoubleType, nullable = n == 0),
+          StructField("max_dist", DoubleType))))
+    } finally steps.unpersist()
   }
 }

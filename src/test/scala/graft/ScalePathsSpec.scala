@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.SkewAgg
 import graft.sources.Bucketing
@@ -195,6 +196,79 @@ class QcMedianSpec extends SparkSpec {
       .agg(graft.functions.Numeric.cround(expr("percentile(_d, 0.5)"), 4))
       .as[Double].head()
     assert(row._1 > 0 && row._2 == naiveMed)
+  }
+
+  /** The naive per-group formulation the histogram summary replaces:
+    * n/min/max plus `percentile(v, 0.5)` straight over the values. */
+  private def naiveSummary(values: DataFrame, grp: String) =
+    values.groupBy(col(grp)).agg(count(lit(1)), min(col("v")),
+        expr("percentile(v, 0.5)"), max(col("v")))
+      .as[(String, Long, Long, Double, Long)].collect().toSet
+
+  private def perFrameCounts(df: DataFrame, grp: Column, frame: Column) =
+    df.groupBy(grp.as("g"), frame.as("f")).agg(count(lit(1)).as("v"))
+
+  test("cellsPerFrame n/min/median/max match the naive percentile formulation") {
+    val ev = Tables.events(spark, sfDir)
+    val day = date_format(col("ts"), "yyyy-MM-dd")
+    val got = Quality.cellsPerFrame(ev, col("event_type"), day)
+      .as[(String, Long, Long, Double, Long)].collect().toSet
+    assert(got.nonEmpty)
+    assert(got == naiveSummary(perFrameCounts(ev, col("event_type"), day), "g"))
+
+    // per-frame counts: odd (1,2,4 -> median 2), even (3,3,5,6 -> 4.0)
+    // and one-frame (7) groups
+    val frames = Seq("odd" -> Seq(1 -> 1, 2 -> 2, 3 -> 4),
+        "even" -> Seq(1 -> 3, 2 -> 3, 3 -> 5, 4 -> 6), "one" -> Seq(1 -> 7))
+      .flatMap { case (g, fs) => fs.flatMap { case (f, k) => Seq.fill(k)((g, f)) } }
+      .toDF("g", "f")
+    val hand = Quality.cellsPerFrame(frames, col("g"), col("f"))
+      .as[(String, Long, Long, Double, Long)].collect().toSet
+    assert(hand == Set(("odd", 3L, 1L, 2.0, 4L), ("even", 4L, 3L, 4.0, 6L),
+      ("one", 1L, 7L, 7.0, 7L)))
+    assert(hand == naiveSummary(perFrameCounts(frames, col("g"), col("f")), "g"))
+  }
+
+  test("trackLengthHistogram filtered row matches the naive percentile formulation") {
+    val ev = Tables.events(spark, sfDir)
+    val filtered = Quality.filterSizeAndObservations(ev, "user_id", col("value"), 10.0, 50L)
+    val got = Quality.trackLengthHistogram(ev, filtered, "user_id")
+      .as[(String, Long, Long, Double, Long)].collect().toSet
+    val naive = naiveSummary(
+      filtered.groupBy(col("user_id")).agg(count(lit(1)).as("v"))
+        .select(lit("filtered").as("s"), col("v")), "s")
+    assert(naive.nonEmpty)
+    assert(got.filter(_._1 == "filtered") == naive)
+  }
+
+  test("QC summaries: an empty filtered input has no filtered row; one distinct value is its own median") {
+    val ev = Tables.events(spark, sfDir)
+    val states = Quality.trackLengthHistogram(ev, ev.limit(0), "user_id")
+      .select("filter_state").as[String].collect()
+    assert(states.toSeq == Seq("raw"))
+
+    val hist = Seq(("one", 5L, 1L), ("many", 3L, 4L)).toDF("g", "v", "cnt")
+    val got = Quality.histogramSummary(hist, Seq("g"))
+      .select("g", "n", "min", "median", "max")
+      .as[(String, Long, Long, Double, Long)].collect().toSet
+    assert(got == Set(("one", 1L, 5L, 5.0, 5L), ("many", 4L, 3L, 3.0, 3L)))
+  }
+
+  test("QC distribution reports run without a join") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    val ev = Tables.events(spark, sfDir)
+    val filtered = Quality.filterSizeAndObservations(ev, "user_id", col("value"), 10.0, 50L)
+    Seq(
+      Quality.trackLengthHistogram(ev, filtered, "user_id"),
+      Quality.cellsPerFrame(ev, col("event_type"), date_format(col("ts"), "yyyy-MM-dd"))
+    ).foreach { df =>
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val joins = helper.collect(plan) { case j: BaseJoinExec => j }
+      assert(joins.isEmpty, "QC report plan joins:\n" + plan.toString.take(1500))
+    }
   }
 
   test("QC median plans carry no single-task full-data percentile buffer") {
