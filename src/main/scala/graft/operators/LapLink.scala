@@ -3,71 +3,31 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Exact per-frame-pair assignment linking — the SimpleSparseLAP end
-  * of the reference's tracker menu (track_images.py:95-100, TrackMate's
-  * default): between consecutive frames, choose the GLOBALLY optimal
-  * set of links, not each spot's greedy favourite. Semantics: a link
-  * (p, c) within `maxDist` has weight `2L - d2` (L = maxDist², the
-  * standard alternative-cost formulation: leaving a spot unlinked
-  * costs L per side); the chosen matching maximises total weight —
-  * equivalently, minimises Σ d2 + L·(#unlinked) — solved exactly with
-  * the O(n³) Hungarian algorithm on the dummy-padded square matrix.
-  * TrackMate's gap-closing/split/merge refinements are a separate
-  * global pass there and are served here by the division-aware
-  * machinery (`SpotLink` + `TrackAssignment`); this operator is the
-  * frame-to-frame assignment step.
+/** The two-phase SparseLAP tracker of the reference (track_images.py:
+  * 95-100, TrackMate's default; Jaqaman et al., Nature Methods 2008):
+  * [[frameToFrame]] links spots between consecutive frames, then
+  * [[gapClose]] / [[gapCloseFull]] (and the fused
+  * `TrackAssignment.divisionAwareGapClosedByVideo`) join track
+  * segments. Every one of them builds its cost matrices group by group
+  * and hands each to ONE kernel, [[solve]], which gates, conditions
+  * and assigns; an operator owns only which pairs are candidates and
+  * in which block.
   *
-  * Scale shape: ONE shuffle groups each frame pair's spots together
-  * (every spot participates in two pairs: as child of f-1→f and parent
-  * of f→f+1 — a 2x map-side duplication, not a join); pairs solve
-  * independently, so at 100 TB parallelism comes from (video, frame)
-  * granularity — millions of pairs — while each solve is bounded by
-  * spots-per-frame (an imaging field holds hundreds of cells; n³ on
-  * hundreds is sub-millisecond).
-  *
-  * Output: (src, dst, dist) — a 1-1 matching per frame pair.
-  *
-  * `featurePenalties` is the TrackMate LINKING_FEATURE_PENALTIES
-  * surface (TrackerKeys): each (feature column, weight) inflates a
-  * gated link's cost by the features' relative difference —
-  * cost = d² · (1 + Σ 3·w·|f_p − f_c| / (f_p + f_c))², penalty 0 when
-  * both values are 0 — so geometry proposes and features veto: a
-  * nearer spot with a very different size/intensity loses to a
-  * slightly farther look-alike. As in TrackMate's linking matrix, the
-  * `maxDist` gate applies to the PENALIZED cost (the cost function's
-  * value is checked against costThreshold = maxDist²), so a nearby
-  * pair with a wildly different feature value is not a candidate at
-  * all; with no penalties this reduces to the geometric gate. The
-  * emitted `dist` stays the geometric distance.
-  *
-  * `altCostFactor` / `cutoffPercentile` are the
-  * ALTERNATIVE_LINKING_COST_FACTOR / CUTOFF_PERCENTILE surface for
-  * THIS phase: with the factor set, the no-link alternative of each
-  * frame-pair matrix is A = factor · percentile(that pair's gated
-  * costs) instead of the gate bound maxDist². The percentile DEFAULTS
-  * to 1.0 — factor·max — because that is what TrackMate's
-  * SparseLAPFrameToFrameTracker does: it hardcodes percentile 1d when
-  * building JaqamanLinkingCostMatrixCreator (whose
-  * computeAlternativeCosts short-circuits percentile == 1 to
-  * factor·max; KalmanTracker uses the same 1.05/1.0 pair as named
-  * constants), and CUTOFF_PERCENTILE binds only the SEGMENT matrix
-  * (phase 2). With factor·max every gated link survives the
-  * alternative (cost ≤ max < 2A), so under the reference templates
-  * the linking phase differs from the gate-bound default only through
-  * the penalized-cost gate; a caller passing an explicit sub-1
-  * percentile gets genuine Jaqaman outlier rejection per frame pair.
+  * Penalty maps (TrackMate's LINKING / GAP_CLOSING / SPLITTING /
+  * MERGING_FEATURE_PENALTIES) are (feature column, weight) pairs; the
+  * operators carry the feature values into the solve as plain arrays,
+  * so no `Column` reaches a closure.
   */
 object LapLink {
 
   /** TrackMate's percentile (TMUtils.getPercentile): rank position
     * p·(n+1) over the sorted values, LINEARLY INTERPOLATED between the
     * two neighbouring order statistics, clamped to [min, max]; a
-    * single value is returned as-is. p ∈ (0, 1]. The conditioning
-    * callers below feed this TrackMate's CUTOFF_PERCENTILE, so the
-    * definition must be the interpolated one, not nearest-rank —
-    * near rank boundaries the two disagree and with them which
-    * outlier links the alternative cost rejects. p = 1 gives the max
-    * (pos = n+1 clamps), which is exactly
+    * single value is returned as-is. p ∈ (0, 1]. [[solve]] feeds this
+    * TrackMate's CUTOFF_PERCENTILE, so the definition must be the
+    * interpolated one, not nearest-rank — near rank boundaries the two
+    * disagree and with them which outlier links the alternative cost
+    * rejects. p = 1 gives the max (pos = n+1 clamps), which is exactly
     * JaqamanLinkingCostMatrixCreator.computeAlternativeCosts'
     * percentile == 1 → factor·max short-circuit. */
   private[graft] def percentileTM(xs: Array[Double], p: Double): Double = {
@@ -84,11 +44,11 @@ object LapLink {
     }
   }
 
-  /** Penalized cost of a gated pair (shared by [[frameToFrame]] and
-    * its spec): d² · (1 + Σ 3·w·|fp − fc| / (fp + fc))². */
-  private[operators] def penalizedCost(d2: Double, fp: Array[Double],
-                                       fc: Array[Double],
-                                       w: Array[Double]): Double = {
+  /** Penalized cost of a candidate pair:
+    * d² · (1 + Σ 3·w·|fp − fc| / (fp + fc))², a term being 0 when both
+    * values are 0 — so geometry proposes and features veto. */
+  private def penalizedCost(d2: Double, fp: Array[Double], fc: Array[Double],
+                            w: Array[Double]): Double = {
     var p = 0.0
     var i = 0
     while (i < w.length) {
@@ -99,6 +59,98 @@ object LapLink {
     d2 * (1.0 + p) * (1.0 + p)
   }
 
+  /** One candidate cell of a cost matrix: parent and child index in the
+    * caller's space, the geometric d², its block's gate (a squared
+    * distance) and penalty weights, and both ends' feature values
+    * (read only when `w` is non-empty). */
+  private[operators] final case class Cand(p: Int, c: Int, d2: Double, gate: Double,
+                                           w: Array[Double], fp: Array[Double],
+                                           fc: Array[Double])
+
+  /** The Jaqaman cost-matrix rule for ONE matrix (a frame pair, or one
+    * video's segment matrix), shared by all four LAP trackers:
+    *
+    *  1. Gate. A candidate is kept when its d² and its [[penalizedCost]]
+    *     both pass its block's gate. TrackMate thresholds the PENALIZED
+    *     cost, so a near pair with a very different feature value is no
+    *     candidate at all; with no weights the cost is d² and this is
+    *     the geometric gate.
+    *  2. Condition. The no-link alternative A of the whole matrix is
+    *     `altCostFactor` × [[percentileTM]](kept costs,
+    *     `cutoffPercentile`) — ALTERNATIVE_LINKING_COST_FACTOR and
+    *     CUTOFF_PERCENTILE, rejecting OUTLIER links even within their
+    *     gate (2A < cost ⇒ leaving both ends unlinked is cheaper) — or
+    *     the caller's `bound` when no factor is set.
+    *  3. Assign. [[assignEdges]] solves the matrix exactly.
+    *
+    * Returns one (parent index, child index, dist) per link, `dist`
+    * being the GEOMETRIC distance rounded to 4 places. */
+  private[operators] def solve(np: Int, nc: Int, cands: Iterator[Cand],
+                               altCostFactor: Option[Double], cutoffPercentile: Double,
+                               bound: Double): Iterator[(Int, Int, Double)] = {
+    val edges = Array.newBuilder[(Int, Int, Double)]
+    val d2s = new java.util.HashMap[Long, Double]()
+    cands.foreach { k =>
+      if (k.d2 <= k.gate) {
+        val cost = if (k.w.isEmpty) k.d2 else penalizedCost(k.d2, k.fp, k.fc, k.w)
+        if (cost <= k.gate) {
+          edges += ((k.p, k.c, cost))
+          d2s.put(k.p.toLong << 32 | k.c.toLong, k.d2)
+        }
+      }
+    }
+    val es = edges.result()
+    val alt = altCostFactor match {
+      case Some(f) if es.nonEmpty => f * percentileTM(es.map(_._3), cutoffPercentile)
+      case _ => bound
+    }
+    assignEdges(np, nc, es, alt).iterator.map { case (p, c) =>
+      // getOrDefault(NaN) + require: a missing key must fail loudly,
+      // not unbox null to distance 0.0
+      val d2 = d2s.getOrDefault(p.toLong << 32 | c.toLong, Double.NaN)
+      require(!d2.isNaN, s"assigned edge $p->$c has no gated distance")
+      (p, c, graft.functions.Numeric.croundD(math.sqrt(d2), 4))
+    }
+  }
+
+  /** Per-track endpoints held in memory: start = min (frame, id), end =
+    * max (frame, −id) — the in-memory twin of [[gapClose]]'s
+    * min_by/max_by aggregate. Returns the sorted track ids with each
+    * track's start and end member, index-aligned. */
+  private[operators] def endpoints[T: scala.reflect.ClassTag](xs: Iterable[T])(
+      track: T => Long, frameId: T => (Long, Long)): (Array[Long], Array[T], Array[T]) = {
+    val byTrack = xs.groupBy(track)
+    val tracks = byTrack.keys.toArray.sorted
+    (tracks, tracks.map(t => byTrack(t).minBy(frameId)),
+      tracks.map(t => byTrack(t).maxBy { x => val (f, i) = frameId(x); (f, -i) }))
+  }
+
+  /** Exact per-frame-pair assignment linking — the SimpleSparseLAP end
+    * of the reference's tracker menu: between consecutive frames,
+    * choose the GLOBALLY optimal set of links, not each spot's greedy
+    * favourite, by one [[solve]] per frame pair with the gate
+    * maxDist² and `featurePenalties` (TrackerKeys'
+    * LINKING_FEATURE_PENALTIES). TrackMate's gap-closing/split/merge
+    * refinements are the second phase ([[gapClose]], [[gapCloseFull]]).
+    *
+    * `cutoffPercentile` DEFAULTS to 1.0 — factor·max — because
+    * TrackMate's SparseLAPFrameToFrameTracker hardcodes percentile 1d
+    * (KalmanTracker uses the same 1.05/1.0 pair as named constants);
+    * CUTOFF_PERCENTILE binds only the SEGMENT matrix. With factor·max
+    * every gated link survives the alternative (cost ≤ max < 2A), so
+    * under the reference templates this phase differs from the
+    * gate-bound default only through the penalized-cost gate; an
+    * explicit sub-1 percentile gives genuine outlier rejection.
+    *
+    * Scale shape: ONE shuffle groups each frame pair's spots together
+    * (every spot participates in two pairs: as child of f-1→f and parent
+    * of f→f+1 — a 2x map-side duplication, not a join); pairs solve
+    * independently, so at 100 TB parallelism comes from (video, frame)
+    * granularity — millions of pairs — while each solve is bounded by
+    * spots-per-frame (an imaging field holds hundreds of cells; n³ on
+    * hundreds is sub-millisecond).
+    *
+    * Output: (src, dst, dist) — a 1-1 matching per frame pair. */
   def frameToFrame(spots: DataFrame, id: Column, frame: Column,
                    x: Column, y: Column, maxDist: Double,
                    featurePenalties: Seq[(Column, Double)] = Nil,
@@ -151,84 +203,31 @@ object LapLink {
               .sortBy(_._1).toArray
             val cs = rows.filter(_._1 == 1).map(r => (r._2, r._3, r._4, r._5))
               .sortBy(_._1).toArray
-            if (ps.isEmpty || cs.isEmpty) Iterator.empty
-            else {
-              // gate on geometry, cost with feature penalties
-              val edges = Array.newBuilder[(Int, Int, Double)]
-              val d2s = new java.util.HashMap[Long, Double]()
-              var pi = 0
-              while (pi < ps.length) {
-                var ci = 0
-                while (ci < cs.length) {
-                  val dx = ps(pi)._2 - cs(ci)._2
-                  val dy = ps(pi)._3 - cs(ci)._3
-                  val d2 = dx * dx + dy * dy
-                  if (d2 <= maxD2) {
-                    val cost =
-                      if (weights.isEmpty) d2
-                      else penalizedCost(d2, ps(pi)._4, cs(ci)._4, weights)
-                    // TrackMate's linking matrix gates on the COST:
-                    // FeaturePenaltyCostFunction's value is checked
-                    // against costThreshold = maxDist² (== d² with no
-                    // penalties, where this reduces to the geometric
-                    // gate above)
-                    if (cost <= maxD2) {
-                      edges += ((pi, ci, cost))
-                      d2s.put(pi.toLong << 32 | ci.toLong, d2)
-                    }
-                  }
-                  ci += 1
-                }
-                pi += 1
-              }
-              val es = edges.result()
-              // the matrix-wide no-link alternative: factor ×
-              // percentile of this pair's gated costs (TrackMate's
-              // JaqamanLinkingCostMatrixCreator conditioning), or the
-              // gate bound when no factor is set — the engine's
-              // historical default, bit-identical to pre-conditioning
-              // behavior. NOTE the percentile DEFAULTS to 1.0 (factor
-              // · max): that is what SparseLAPFrameToFrameTracker
-              // hardcodes (it passes 1d, not CUTOFF_PERCENTILE, which
-              // binds the SEGMENT matrix only) — see TrackerConfig.
-              val alt = altCostFactor match {
-                case Some(f) if es.nonEmpty =>
-                  f * percentileTM(es.map(_._3), cutoffPercentile)
-                case _ => maxD2
-              }
-              assignEdges(ps.length, cs.length, es, alt)
-                .iterator.map { case (pi2, ci2, _) =>
-                  // getOrDefault(NaN) + require: a missing key must
-                  // fail loudly, not unbox null to distance 0.0
-                  val d2 = d2s.getOrDefault(pi2.toLong << 32 | ci2.toLong,
-                    Double.NaN)
-                  require(!d2.isNaN,
-                    s"assigned edge $pi2->$ci2 has no gated distance")
-                  (ps(pi2)._1, cs(ci2)._1,
-                    graft.functions.Numeric.croundD(math.sqrt(d2), 4))
-                }
+            val cands = for (pi <- ps.indices.iterator; ci <- cs.indices.iterator) yield {
+              val dx = ps(pi)._2 - cs(ci)._2
+              val dy = ps(pi)._3 - cs(ci)._3
+              Cand(pi, ci, dx * dx + dy * dy, maxD2, weights, ps(pi)._4, cs(ci)._4)
             }
+            solve(ps.length, cs.length, cands, altCostFactor, cutoffPercentile, maxD2)
+              .map { case (pi, ci, dist) => (ps(pi)._1, cs(ci)._1, dist) }
           }
         }.flatten
       }.toDF("src", "dst", "dist")
   }
 
-  /** Gated max-weight matching over an EXPLICIT edge list — the
-    * "sparse" in SparseLAP: the gated bipartite graph decomposes into
-    * connected components (no gated edge crosses them and dummy
-    * alternatives are free, so the global optimum is exactly the union
-    * of per-component optima), and each component gets its own
-    * Hungarian solve on its dummy-padded square matrix — O(Σ mᵢ³)
-    * instead of O(m³). Cost semantics: a gated edge of cost d2 has
-    * weight 2L - d2 (L = the alternative cost of leaving a node
-    * unlinked, per side); the returned matching maximises total weight
-    * — equivalently minimises Σ d2 + L·(#unlinked). Gate predicates
-    * (distance for frame-to-frame, frame-window + distance for gap
-    * closing) live with the caller. Returns (parentIdx, childIdx, d2)
-    * in the CALLER's index space. */
-  private[operators] def assignEdges(np: Int, nc: Int,
-                                     edges: Array[(Int, Int, Double)],
-                                     l: Double): Seq[(Int, Int, Double)] = {
+  /** Gated min-cost matching over an EXPLICIT edge list — the "sparse"
+    * in SparseLAP: the gated bipartite graph decomposes into connected
+    * components (no gated edge crosses them and dummy alternatives are
+    * free, so the global optimum is exactly the union of per-component
+    * optima), and each component gets its own Hungarian solve on its
+    * dummy-padded square matrix — O(Σ mᵢ³) instead of O(m³). An edge
+    * (p, c, cost) carries [[solve]]'s penalized cost; leaving a node
+    * unlinked costs L per side, so the matching minimises
+    * Σ cost + L·(#unlinked), i.e. it takes an edge of weight 2L − cost
+    * only where that pays. Returns the matched (parentIdx, childIdx)
+    * pairs in the CALLER's index space. */
+  private def assignEdges(np: Int, nc: Int, edges: Array[(Int, Int, Double)],
+                          l: Double): Seq[(Int, Int)] = {
     if (edges.isEmpty) return Seq.empty
     // union-find over parent nodes [0, np) and child nodes [np, np+nc)
     val parent = Array.tabulate(np + nc)(identity)
@@ -265,16 +264,15 @@ object LapLink {
         }
         i += 1
       }
-      val d2Of = new java.util.HashMap[Long, Double]()
-      es.foreach { case (p, c, d2) =>
-        cost(pIdx(p))(cIdx(c)) = d2 - 2.0 * l
-        d2Of.put(pIdx(p).toLong << 32 | cIdx(c).toLong, d2)
+      val gated = new java.util.HashSet[Long]()
+      es.foreach { case (p, c, e) =>
+        cost(pIdx(p))(cIdx(c)) = e - 2.0 * l
+        gated.add(pIdx(p).toLong << 32 | cIdx(c).toLong)
       }
       val rowToCol = hungarian(cost)
       (0 until npl).flatMap { i =>
         val j = rowToCol(i)
-        if (j < ncl && d2Of.containsKey(i.toLong << 32 | j.toLong))
-          Some((cps(i), ccs(j), d2Of.get(i.toLong << 32 | j.toLong)))
+        if (j < ncl && gated.contains(i.toLong << 32 | j.toLong)) Some((cps(i), ccs(j)))
         else None
       }
     }.toSeq
@@ -293,10 +291,10 @@ object LapLink {
     * factories): after frame-to-frame linking fragments tracks at
     * occlusions longer than the linker's gap window, a GLOBAL
     * assignment between track-segment ENDS and track-segment STARTS
-    * (within `maxGap` frames and `maxDist` distance) decides which
-    * fragments are the same cell. Solved with the same gated Hungarian
-    * machinery as [[frameToFrame]] ([[assignEdges]]: weight 2L - d²,
-    * L = maxDist², exact per component).
+    * decides which fragments are the same cell. A candidate is an
+    * (end, start) pair within `maxGap` frames; each video's matrix is
+    * one [[solve]] with the gate maxDist² and `gapPenalties`
+    * (GAP_CLOSING_FEATURE_PENALTIES).
     *
     * Scale shape: ONE aggregate collapses spots to per-track endpoints
     * (corpus-sized shuffle, the unavoidable read), then ONE cogroup by
@@ -325,14 +323,9 @@ object LapLink {
       "cutoffPercentile in (0, 1]")
     val spark = spots.sparkSession
     import spark.implicits._
-    // GAP_CLOSING_FEATURE_PENALTIES, exactly as in [[gapCloseFull]]'s
-    // gap block: cost = d² · (1 + Σ 3·w·|Δf|/Σf)², the gate applied to
-    // the PENALIZED cost (TrackMate's segment matrix thresholds the
-    // cost); with an empty map this is bit-identical to the geometric
-    // path. The endpoint spot's feature values ride the same
-    // endpoint structs the coordinates do.
+    // the endpoint spot's feature values ride the same endpoint structs
+    // the coordinates do
     val w = gapPenalties.map(_._2).toArray
-    val hasPens = gapPenalties.nonEmpty // Columns must not reach closures
     val featArr =
       if (gapPenalties.isEmpty) typedLit(Array.empty[Double])
       else array(gapPenalties.map(_._1.cast("double")): _*)
@@ -357,54 +350,26 @@ object LapLink {
     val maxD2 = maxDist * maxDist
     seg.groupByKey(r => videoOf(r.track))
       .flatMapGroups { (_, it) =>
-        val segs = it.toArray
+        // track order, not shuffle arrival order: the Hungarian breaks
+        // cost ties by index, and arrival order follows the upstream
+        // partitioning
+        val segs = it.toArray.sortBy(_.track)
         val eFs = segs.map(_.efs.toArray)
         val sFs = segs.map(_.sfs.toArray)
-        val edges = Array.newBuilder[(Int, Int, Double)]
-        val d2s = new java.util.HashMap[Long, Double]()
-        var pi = 0
-        while (pi < segs.length) {
-          var ci = 0
-          while (ci < segs.length) {
-            val df = segs(ci).sframe - segs(pi).eframe
-            if (df >= 1 && df <= maxGap) {
-              val dx = segs(ci).sx - segs(pi).ex
-              val dy = segs(ci).sy - segs(pi).ey
-              val d2 = dx * dx + dy * dy
-              if (d2 <= maxD2) {
-                val cost =
-                  if (!hasPens) d2
-                  else penalizedCost(d2, eFs(pi), sFs(ci), w)
-                if (cost <= maxD2) {
-                  edges += ((pi, ci, cost))
-                  d2s.put(pi.toLong << 32 | ci.toLong, d2)
-                }
-              }
-            }
-            ci += 1
-          }
-          pi += 1
+        val cands = for {
+          pi <- segs.indices.iterator
+          ci <- segs.indices.iterator
+          if segs(ci).sframe - segs(pi).eframe >= 1
+          if segs(ci).sframe - segs(pi).eframe <= maxGap
+        } yield {
+          val dx = segs(ci).sx - segs(pi).ex
+          val dy = segs(ci).sy - segs(pi).ey
+          Cand(pi, ci, dx * dx + dy * dy, maxD2, w, eFs(pi), sFs(ci))
         }
-        val es = edges.result()
-        // the segment matrix's no-link alternative: the Jaqaman
-        // conditioning (factor × CUTOFF_PERCENTILE of the video's
-        // gated candidate costs, interpolated percentile as in
-        // TrackMate's segment matrix) when the factor is set, the
-        // gate bound otherwise — same rule as [[gapCloseFull]]
-        val alt = altCostFactor match {
-          case Some(f) if es.nonEmpty =>
-            f * percentileTM(es.map(_._3), cutoffPercentile)
-          case _ => maxD2
-        }
-        assignEdges(segs.length, segs.length, es, alt)
-          .iterator.map { case (pi2, ci2, _) =>
-            val d2 = d2s.getOrDefault(pi2.toLong << 32 | ci2.toLong,
-              Double.NaN)
-            require(!d2.isNaN,
-              s"assigned edge $pi2->$ci2 has no gated distance")
-            (segs(pi2).eid, segs(ci2).sid, segs(ci2).sframe - segs(pi2).eframe,
-              graft.functions.Numeric.croundD(math.sqrt(d2), 4),
-              segs(pi2).track, segs(ci2).track)
+        solve(segs.length, segs.length, cands, altCostFactor, cutoffPercentile, maxD2)
+          .map { case (pi, ci, dist) =>
+            (segs(pi).eid, segs(ci).sid, segs(ci).sframe - segs(pi).eframe, dist,
+              segs(pi).track, segs(ci).track)
           }
       }
       .toDF("src", "dst", "gap", "dist", "src_track", "dst_track")
@@ -422,41 +387,23 @@ object LapLink {
     * ALLOW_TRACK_SPLITTING / ALLOW_TRACK_MERGING are reference
     * surface): sources are segment ENDS and (when splitting) segment
     * MIDDLES; targets are segment STARTS and (when merging) MIDDLES.
-    * Blocks: end→start within `maxGap` frames (gap closing, gated by
-    * `maxDist`), end→middle at frame gap 1 (merging, gated by
-    * `mergeDist` — TrackMate's MERGING_MAX_DISTANCE — defaulting to
-    * `maxDist`), middle→start at frame gap 1 (splitting, gated by
-    * `splitDist` / SPLITTING_MAX_DISTANCE likewise). Middle→middle
-    * pairs belong to NO TrackMate block and are never candidates.
-    * All blocks are solved together by [[assignEdges]] (weight
-    * 2A − cost, exact per component), so a start goes to the gap-close
-    * OR the split source that the GLOBAL optimum prefers, never both.
-    * The no-link ALTERNATIVE COST A is shared across blocks, exactly
-    * as in TrackMate's one-alternative segment matrix. Its value:
-    * with `altCostFactor` set (TrackMate's
-    * ALTERNATIVE_LINKING_COST_FACTOR — every reference template sets
-    * 1.05 with CUTOFF_PERCENTILE 0.9), A = factor ·
-    * percentile(all gated candidate costs of the video's matrix,
-    * `cutoffPercentile`) — the Jaqaman conditioning that rejects
-    * OUTLIER-cost links even when they pass their gate (2A < cost ⇒
-    * leaving both ends unlinked is cheaper); with it unset, A =
-    * maxDist² (the gate bound — the engine's historical default,
-    * where a split/merge gate above √2·maxDist admits candidates the
-    * alternative then dominates; the reference templates keep both
-    * gates well below the gap gate, where that rule is inert).
-    *
-    * Each block carries its OWN feature-penalty map (TrackMate's
-    * GAP_CLOSING/SPLITTING/MERGING_FEATURE_PENALTIES — every one of
-    * the reference's ten templates enables merging with
-    * `MERGING_FEATURE_PENALTIES: {"AREA": 0.5}`, templates/cyto3.json):
-    * a candidate's cost is d² · (1 + Σ 3·w·|f_p − f_c| / (f_p + f_c))²
-    * ([[penalizedCost]], the same formula as the linking phase), and —
-    * matching TrackMate's segment cost matrix, which thresholds the
-    * COST — the block gate applies to the PENALIZED cost, so a nearby
-    * candidate with a very different feature value can fall out of the
-    * block entirely. With empty maps cost = d² and the gate reduces to
-    * the geometric one (bit-identical to the pre-penalty behavior).
-    * The emitted `dist` stays the geometric distance.
+    * Blocks, each with its own gate and penalty map:
+    *  - gap: end→start within `maxGap` frames, gate `maxDist`,
+    *    `gapPenalties`;
+    *  - merge: end→middle at frame gap 1, gate `mergeDist`
+    *    (MERGING_MAX_DISTANCE, default `maxDist`), `mergePenalties`;
+    *  - split: middle→start at frame gap 1, gate `splitDist`
+    *    (SPLITTING_MAX_DISTANCE, default `maxDist`), `splitPenalties`.
+    * Middle→middle pairs belong to NO TrackMate block. Each video's
+    * blocks form ONE matrix and ONE [[solve]], so a start goes to the
+    * gap-close OR the split source that the global optimum prefers,
+    * never both, and the no-link alternative is shared across blocks
+    * as in TrackMate's segment matrix. Unconditioned, its bound is
+    * maxDist²: a split/merge gate above √2·maxDist admits candidates
+    * that alternative then dominates; the reference templates keep
+    * both gates well below the gap gate, where that rule is inert.
+    * Every one of the reference's ten templates enables merging with
+    * `MERGING_FEATURE_PENALTIES: {"AREA": 0.5}` (templates/cyto3.json).
     *
     * Label semantics are deliberately unchanged by split/merge links:
     * the engine's (and reference pipeline's) track identity rules make
@@ -511,7 +458,6 @@ object LapLink {
     val wGap = blockW(0, gapPenalties)
     val wSplit = blockW(nG, splitPenalties)
     val wMerge = blockW(nG + nS, mergePenalties)
-    val hasPens = allPens.nonEmpty // Columns must not reach the closure
     val featArr =
       if (allPens.isEmpty) typedLit(Array.empty[Double])
       else array(allPens.map(_._1.cast("double")): _*)
@@ -524,97 +470,46 @@ object LapLink {
     rows.groupByKey(r => videoOf(r.track))
       .flatMapGroups { (_, it) =>
         val all = it.toArray
-        // per-track endpoints: start = (min frame, min id), end =
-        // (max frame, min id); everything else is a middle
-        val byTrack = all.groupBy(_.track)
-        val startOf = byTrack.view.mapValues(_.minBy(s => (s.frame, s.id))).toMap
-        val endOf = byTrack.view.mapValues(_.maxBy(s => (s.frame, -s.id))).toMap
-        val ends = byTrack.keys.toArray.sorted.map(endOf)
-        val middles = all.filter(s =>
-          startOf(s.track).id != s.id && endOf(s.track).id != s.id)
-          .sortBy(_.id)
-        val starts = byTrack.keys.toArray.sorted.map(startOf)
+        val (_, starts, ends) = endpoints(all)(_.track, s => (s.frame, s.id))
+        val endpointKeys = (starts ++ ends).map(s => (s.track, s.id)).toSet
+        val middles = all.filterNot(s => endpointKeys((s.track, s.id))).sortBy(_.id)
         // parents = ends ++ middles (split sources); children =
         // starts ++ middles (merge targets)
         val parents = ends ++ (if (allowSplit) middles else Array.empty[TSpot])
         val children = starts ++ (if (allowMerge) middles else Array.empty[TSpot])
         val pFs = parents.map(_.fs.toArray)
         val cFs = children.map(_.fs.toArray)
-        val np = parents.length
         val nEnds = ends.length
         val nStarts = starts.length
-        def d2Of(p: TSpot, c: TSpot): Double = {
-          val dx = c.x - p.x
-          val dy = c.y - p.y
-          dx * dx + dy * dy
+        // the (gate, weights) of a pair's block; None outside every block
+        def block(pi: Int, ci: Int): Option[(Double, Array[Double])] = {
+          val df = children(ci).frame - parents(pi).frame
+          if (parents(pi).track == children(ci).track) None
+          else if (pi < nEnds && ci < nStarts)
+            if (df >= 1 && df <= maxGap) Some((maxD2, wGap)) else None
+          else if (df != 1) None
+          else if (pi < nEnds) Some((mergeD2, wMerge))
+          else if (ci < nStarts) Some((splitD2, wSplit))
+          else None // middle -> middle
         }
-        val edges = Array.newBuilder[(Int, Int, Double)]
-        val d2s = new java.util.HashMap[Long, Double]()
-        var pi = 0
-        while (pi < np) {
-          val p = parents(pi)
-          val pIsEnd = pi < nEnds
-          var ci = 0
-          while (ci < children.length) {
-            val c = children(ci)
-            val cIsStart = ci < nStarts
-            if (p.track != c.track) {
-              val df = c.frame - p.frame
-              // gap block: end->start within maxGap; split/merge
-              // blocks: frame gap exactly 1 (TrackMate's contract);
-              // middle->middle pairs belong to no block
-              var gateD2 = -1.0
-              var w: Array[Double] = null
-              if (pIsEnd && cIsStart) {
-                if (df >= 1 && df <= maxGap) { gateD2 = maxD2; w = wGap }
-              } else if (df == 1) {
-                if (pIsEnd) { gateD2 = mergeD2; w = wMerge }
-                else if (cIsStart) { gateD2 = splitD2; w = wSplit }
-                // middle -> middle: never a block
-              }
-              if (gateD2 >= 0.0) {
-                val d2 = d2Of(p, c)
-                // TrackMate's segment matrix gates on the PENALIZED
-                // cost (== d2 when the block's map is empty)
-                if (d2 <= gateD2) {
-                  val cost =
-                    if (!hasPens) d2
-                    else penalizedCost(d2, pFs(pi), cFs(ci), w)
-                  if (cost <= gateD2) {
-                    edges += ((pi, ci, cost))
-                    d2s.put(pi.toLong << 32 | ci.toLong, d2)
-                  }
-                }
-              }
-            }
-            ci += 1
-          }
-          pi += 1
+        val cands = for {
+          pi <- parents.indices.iterator
+          ci <- children.indices.iterator
+          (gate, w) <- block(pi, ci)
+        } yield {
+          val dx = children(ci).x - parents(pi).x
+          val dy = children(ci).y - parents(pi).y
+          Cand(pi, ci, dx * dx + dy * dy, gate, w, pFs(pi), cFs(ci))
         }
-        val es = edges.result()
-        // the matrix-wide alternative cost: factor x percentile of the
-        // gated candidate costs (TrackMate's segment-matrix
-        // conditioning), or the gate bound when no factor is set
-        val alt = altCostFactor match {
-          case Some(f) if es.nonEmpty =>
-            f * percentileTM(es.map(_._3), cutoffPercentile)
-          case _ => maxD2
-        }
-        assignEdges(np, children.length, es, alt)
-          .iterator.map { case (pi2, ci2, _) =>
-            val p = parents(pi2)
-            val c = children(ci2)
-            val d2 = d2s.getOrDefault(pi2.toLong << 32 | ci2.toLong,
-              Double.NaN)
-            require(!d2.isNaN,
-              s"assigned edge $pi2->$ci2 has no gated distance")
+        solve(parents.length, children.length, cands, altCostFactor,
+            cutoffPercentile, maxD2)
+          .map { case (pi, ci, dist) =>
             val kind =
-              if (pi2 < nEnds && ci2 < nStarts) "gc"
-              else if (pi2 < nEnds) "merge"
+              if (pi < nEnds && ci < nStarts) "gc"
+              else if (pi < nEnds) "merge"
               else "split"
-            (p.id, c.id, c.frame - p.frame,
-              graft.functions.Numeric.croundD(math.sqrt(d2), 4),
-              kind, p.track, c.track)
+            (parents(pi).id, children(ci).id, children(ci).frame - parents(pi).frame,
+              dist, kind, parents(pi).track, children(ci).track)
           }
       }
       .toDF("src", "dst", "gap", "dist", "kind", "src_track", "dst_track")

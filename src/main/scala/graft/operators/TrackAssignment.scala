@@ -112,20 +112,25 @@ object TrackAssignment {
       .select(col("id"), coalesce(col("track_id"), col("id")).as("track_id"))
   }
 
-  /** Division-aware track assignment when a VIDEO key is available —
-    * the dominant real case: tracking runs per timelapse, spot ids are
-    * assigned per video, and no lineage edge ever crosses videos. That
-    * confinement makes the iterative machinery above unnecessary:
-    * cogroup spots and edges by video (ONE shuffle of each input) and
-    * run the deterministic local-choice algorithm sequentially per
-    * video — at 100 TB the corpus is millions of independent videos,
-    * so parallelism comes from the video key, and per-video work is
-    * bounded by one timelapse (thousands of spots), not the corpus.
-    * Semantics are identical to `divisionAware` (same two local
-    * choices, same min-id-per-segment labels — parity-pinned by spec);
-    * edges must be video-local (`videoOf(src) == videoOf(dst)`), which
-    * tracking data satisfies by construction.
-    */
+  /** Labels every node on the chains of `next` (in/out-degree <= 1)
+    * with its chain's min id, walking from each chain head. */
+  private def chainMinLabels(next: java.util.HashMap[Long, Long])
+      : java.util.HashMap[Long, Long] = {
+    val hasPrev = new java.util.HashSet[Long](next.values())
+    val label = new java.util.HashMap[Long, Long]()
+    next.forEach { (s, _) =>
+      if (!hasPrev.contains(s)) {
+        var m = s
+        var x = s
+        while (next.containsKey(x)) { x = next.get(x); if (x < m) m = x }
+        var y = s
+        label.put(y, m)
+        while (next.containsKey(y)) { y = next.get(y); label.put(y, m) }
+      }
+    }
+    label
+  }
+
   /** The per-video local labeler shared by [[divisionAwareByVideo]]
     * and [[divisionAwareGapClosedByVideo]]: the two deterministic
     * local choices, chain walk, min-id labels. Returns id -> track for
@@ -152,22 +157,8 @@ object TrackAssignment {
     }
     // surviving chain edges: next(src) = dst
     val next = new java.util.HashMap[Long, Long]()
-    val hasPrev = new java.util.HashSet[Long]()
-    first.forEach { (s, d) =>
-      if (chosen.get(d) == s) { next.put(s, d); hasPrev.add(d) }
-    }
-    // label each segment by its min id, walking from chain heads
-    val label = new java.util.HashMap[Long, Long]()
-    next.forEach { (s, _) =>
-      if (!hasPrev.contains(s)) {
-        var m = s
-        var x = s
-        while (next.containsKey(x)) { x = next.get(x); if (x < m) m = x }
-        var y = s
-        label.put(y, m)
-        while (next.containsKey(y)) { y = next.get(y); label.put(y, m) }
-      }
-    }
+    first.forEach { (s, d) => if (chosen.get(d) == s) { next.put(s, d); () } }
+    val label = chainMinLabels(next)
     // every id incident to an edge is in scope; ids outside every
     // surviving chain are their own single-spot track
     val out = new java.util.LinkedHashMap[Long, Long]()
@@ -180,6 +171,20 @@ object TrackAssignment {
     out
   }
 
+  /** Division-aware track assignment when a VIDEO key is available —
+    * the dominant real case: tracking runs per timelapse, spot ids are
+    * assigned per video, and no lineage edge ever crosses videos. That
+    * confinement makes the iterative machinery above unnecessary:
+    * cogroup spots and edges by video (ONE shuffle of each input) and
+    * run the deterministic local-choice algorithm sequentially per
+    * video — at 100 TB the corpus is millions of independent videos,
+    * so parallelism comes from the video key, and per-video work is
+    * bounded by one timelapse (thousands of spots), not the corpus.
+    * Semantics are identical to `divisionAware` (same two local
+    * choices, same min-id-per-segment labels — parity-pinned by spec);
+    * edges must be video-local (`videoOf(src) == videoOf(dst)`), which
+    * tracking data satisfies by construction.
+    */
   def divisionAwareByVideo(spots: DataFrame, edges: DataFrame,
                            videoOf: Long => Long): DataFrame = {
     val spark = spots.sparkSession
@@ -264,11 +269,11 @@ object TrackAssignment {
   /** Labels WITH segment-level gap closing fused into the SAME
     * per-video cogroup — the production composition of
     * [[divisionAwareByVideo]] + [[LapLink.closeGaps]]: the local
-    * labeler's output, the per-track endpoints, the gated gap-close
-    * assignment ([[LapLink.assignEdges]], weight 2L − d²) and the
-    * chain-merge relabel all happen inside one task per video, so the
-    * corpus is shuffled ONCE per input (spots, edges) instead of once
-    * per stage (labels cogroup, endpoint aggregate, segment cogroup,
+    * labeler's output, the per-track endpoints, the gap-close solve
+    * ([[LapLink.solve]], the same candidates as [[LapLink.gapClose]])
+    * and the chain-merge relabel all happen inside one task per video,
+    * so the corpus is shuffled ONCE per input (spots, edges) instead of
+    * once per stage (labels cogroup, endpoint aggregate, segment cogroup,
     * relabel join). Output-identical to the composed chain — the
     * parity spec pins it on random fragmented walks. `spots` must
     * carry (id, frame, x, y). */
@@ -286,10 +291,6 @@ object TrackAssignment {
     val spark = spots.sparkSession
     import spark.implicits._
     val maxD2 = maxDist * maxDist
-    // GAP_CLOSING_FEATURE_PENALTIES — the same penalized segment cost
-    // (and penalized GATE) as LapLink.gapClose, so the fused path
-    // stays output-identical to the staged chain under the same keys;
-    // empty map = bit-identical geometric behavior
     val w = gapPenalties.map(_._2).toArray
     val hasPens = gapPenalties.nonEmpty // Columns must not reach the closure
     val featArr =
@@ -317,67 +318,25 @@ object TrackAssignment {
       else {
         import scala.jdk.CollectionConverters._
         val labels = localLabels(frame, es)
-        // per-track endpoints: start = (min frame, min id),
-        // end = (max frame, min id)
-        val byTrack = labels.entrySet().asScala
-          .map(e => (e.getKey.longValue(), e.getValue.longValue())).toSeq
-          .groupBy(_._2)
-        val tracks = byTrack.keys.toArray.sorted
-        def keyed(id: Long) = (frame.get(id).longValue(), id)
-        val startOf = tracks.map(t => byTrack(t).map(_._1).minBy(keyed))
-        val endOf = tracks.map(t =>
-          byTrack(t).map(_._1).maxBy(id => (frame.get(id).longValue(), -id)))
-        val segEdges = Array.newBuilder[(Int, Int, Double)]
-        var pi = 0
-        while (pi < tracks.length) {
-          var ci = 0
-          while (ci < tracks.length) {
-            val df = frame.get(startOf(ci)) - frame.get(endOf(pi))
-            if (df >= 1 && df <= maxGap) {
-              val dx = xs.get(startOf(ci)) - xs.get(endOf(pi))
-              val dy = ys.get(startOf(ci)) - ys.get(endOf(pi))
-              val d2 = dx * dx + dy * dy
-              if (d2 <= maxD2) {
-                val cost =
-                  if (!hasPens) d2
-                  else LapLink.penalizedCost(d2,
-                    fss.get(endOf(pi)), fss.get(startOf(ci)), w)
-                if (cost <= maxD2) segEdges += ((pi, ci, cost))
-              }
-            }
-            ci += 1
-          }
-          pi += 1
+        val (tracks, starts, ends) = LapLink.endpoints(labels.keySet.asScala)(
+          labels.get(_), id => (frame.get(id), id))
+        val cands = for {
+          pi <- tracks.indices.iterator
+          ci <- tracks.indices.iterator
+          if frame.get(starts(ci)) - frame.get(ends(pi)) >= 1
+          if frame.get(starts(ci)) - frame.get(ends(pi)) <= maxGap
+        } yield {
+          val dx = xs.get(starts(ci)) - xs.get(ends(pi))
+          val dy = ys.get(starts(ci)) - ys.get(ends(pi))
+          LapLink.Cand(pi, ci, dx * dx + dy * dy, maxD2, w,
+            fss.get(ends(pi)), fss.get(starts(ci)))
         }
-        val segEs = segEdges.result()
-        // the same Jaqaman segment-matrix conditioning as
-        // LapLink.gapClose (factor × interpolated CUTOFF_PERCENTILE of
-        // the video's gated costs), keeping the fused path
-        // output-identical to the staged chain under the same keys
-        val segAlt = altCostFactor match {
-          case Some(f) if segEs.nonEmpty =>
-            f * LapLink.percentileTM(segEs.map(_._3), cutoffPercentile)
-          case _ => maxD2
-        }
-        val matches = LapLink.assignEdges(tracks.length, tracks.length,
-          segEs, segAlt)
         // matched segment pairs form chains; relabel to min track id
         val next = new java.util.HashMap[Long, Long]()
-        val hasPrev = new java.util.HashSet[Long]()
-        matches.foreach { case (pi2, ci2, _) =>
-          next.put(tracks(pi2), tracks(ci2)); hasPrev.add(tracks(ci2))
-        }
-        val remap = new java.util.HashMap[Long, Long]()
-        next.forEach { (s, _) =>
-          if (!hasPrev.contains(s)) {
-            var m = s
-            var x = s
-            while (next.containsKey(x)) { x = next.get(x); if (x < m) m = x }
-            var y = s
-            remap.put(y, m)
-            while (next.containsKey(y)) { y = next.get(y); remap.put(y, m) }
-          }
-        }
+        LapLink.solve(tracks.length, tracks.length, cands, altCostFactor,
+            cutoffPercentile, maxD2)
+          .foreach { case (pi, ci, _) => next.put(tracks(pi), tracks(ci)) }
+        val remap = chainMinLabels(next)
         labels.entrySet().iterator().asScala.map { e =>
           val t = e.getValue.longValue()
           (e.getKey.longValue(), remap.getOrDefault(t, t).longValue())

@@ -168,26 +168,40 @@ class LapGapCloseSpec extends SparkSpec {
       // edges (true of tracking data by construction), so the NN front
       // end must never link across videos
       v * 50.0 + rnd.nextDouble() * 0.5)
+    // a deterministic stand-in feature for the penalty map
     val df = toDf(spots)
+      .withColumn("area", pmod(col("id"), lit(13L)).cast("double") + 5.0)
     val edges = SpotLink.nearest(df, col("id"), col("frame"), col("x"), col("y"),
       maxDist = 8.0, gapFrames = 1)
-    val staged = {
-      val labels = TrackAssignment.divisionAwareByVideo(df.select("id", "frame"),
-        edges.select("src", "dst"), _ / 1000000L)
-      LapLink.closeGaps(df, labels, col("id"), col("frame"), col("x"), col("y"),
-          maxDist = 8.0, maxGap = 4, _ / 1000000L)
-        .as[(Long, Long)].collect().toMap
-    }
-    val fused = TrackAssignment.divisionAwareGapClosedByVideo(df,
-        edges.select("src", "dst"), maxDist = 8.0, maxGap = 4, _ / 1000000L)
-      .as[(Long, Long)].collect().toMap
-    assert(fused === staged)
-    // the fixture is non-trivial: some gaps actually closed
     val before = TrackAssignment.divisionAwareByVideo(df.select("id", "frame"),
       edges.select("src", "dst"), _ / 1000000L)
       .select("track_id").distinct().count()
-    val after = fused.values.toSet.size
-    assert(after < before, s"no gaps closed: $after vs $before")
+    // the engine defaults, then the keys every reference template runs:
+    // ALTERNATIVE_LINKING_COST_FACTOR 1.05, CUTOFF_PERCENTILE 0.9 and a
+    // GAP_CLOSING_FEATURE_PENALTIES map
+    val keySets = Seq(
+      (None, 0.9, Nil),
+      (Some(1.05), 0.9, Seq(col("area") -> 1.0)))
+    val results = for ((alt, pct, pens) <- keySets) yield {
+      val staged = {
+        val labels = TrackAssignment.divisionAwareByVideo(df.select("id", "frame"),
+          edges.select("src", "dst"), _ / 1000000L)
+        LapLink.closeGaps(df, labels, col("id"), col("frame"), col("x"), col("y"),
+            maxDist = 8.0, maxGap = 4, _ / 1000000L, alt, pct, pens)
+          .as[(Long, Long)].collect().toMap
+      }
+      val fused = TrackAssignment.divisionAwareGapClosedByVideo(df,
+          edges.select("src", "dst"), maxDist = 8.0, maxGap = 4, _ / 1000000L,
+          alt, pct, pens)
+        .as[(Long, Long)].collect().toMap
+      assert(fused === staged, s"keys ($alt, $pct, $pens)")
+      // the fixture is non-trivial: some gaps actually closed
+      val after = fused.values.toSet.size
+      assert(after < before, s"no gaps closed under ($alt, $pct, $pens): $after vs $before")
+      fused
+    }
+    // the keys bite on this fixture: they change which gaps close
+    assert(results.distinct.size === keySets.size)
   }
 
   test("fused nearestTracksByVideo equals SpotLink.nearest -> divisionAwareByVideo") {

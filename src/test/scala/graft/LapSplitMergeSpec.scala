@@ -117,6 +117,37 @@ class LapSplitMergeSpec extends SparkSpec {
         .collect().toSet
       assert(full === plain)
     }
+    // a tied-cost instance: two one-spot ends at (0,0) and (2,2), two
+    // one-spot starts a frame later at (2,0) and (0,2) — every
+    // end->start pair sits at d² = 4, so both matchings cost the same
+    // and the solver's index order decides. gapClose must decide it as
+    // gapCloseFull does (track order), however its input is partitioned.
+    val tied = Seq((907L, 1L, 0.0, 0.0), (303L, 1L, 2.0, 2.0),
+      (505L, 2L, 2.0, 0.0), (101L, 2L, 0.0, 2.0))
+    val tiedLabels = tied.map(s => (s._1, s._1)).toDF("id", "track_id")
+    def links(df: org.apache.spark.sql.DataFrame, full: Boolean) =
+      (if (full) LapLink.gapCloseFull(df, tiedLabels,
+          col("id"), col("frame"), col("x"), col("y"), 6.0, 3, _ / 1000000L,
+          allowSplit = false, allowMerge = false)
+        else LapLink.gapClose(df, tiedLabels,
+          col("id"), col("frame"), col("x"), col("y"), 6.0, 3, _ / 1000000L))
+        .select("src", "dst", "gap", "dist").as[(Long, Long, Long, Double)]
+        .collect().toSet
+    val ref = links(toDf(tied), full = true)
+    assert(ref.size === 2)
+    assert(links(toDf(tied).repartition(1), full = false) === ref)
+    // the second partitioning also narrows the shuffle, as another core
+    // count would; solving in shuffle arrival order breaks the tie the
+    // other way here
+    val confs = Seq("spark.sql.shuffle.partitions" -> "2",
+      "spark.sql.adaptive.enabled" -> "false")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try assert(links(toDf(tied.reverse).repartition(3, col("id")), full = false) === ref)
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("global optimality over the mixed candidate graph vs brute force") {
