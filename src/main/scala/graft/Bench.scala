@@ -1,24 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.io.File
+import scala.util.Try
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosConf._1, Tables.NanosConf._2)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm up JIT/codegen/parquet-footer caches so the first timed query
-    // doesn't absorb one-time session costs.
-    Seq("lineitem", "events", "documents", "embeddings")
-      .foreach(t => Tables.load(spark, sfDir, t).count())
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // ROTATION (line budget): rest the rows of the newest BENCH_r<N>.json
+    // in the working directory except Harness.heavies, so any two
+    // consecutive artifacts cover the registry. Rested rows stay
+    // benchable via SPARK_GRAFT_ONLY (an unfiltered run times the rotation).
+    // Reading the artifacts before the session starts stops a run with
+    // an unreadable newest artifact at once.
+    val history = Harness.benchHistory(new File("."))
+    val rested = Harness.rested(history)
+    val spark = Harness.session(cpus)
+    Harness.warmUp(spark, sfDir)
     // CALIBRATION probe: a fixed CPU-bound kernel (a codegen'd hash
     // fold over a range — all `cpus` threads saturated for ~1s of
     // pure CPU, no IO, no cache sensitivity, so external load
@@ -50,80 +46,16 @@ object Bench {
     // full series ships in the JSON line as "cal".
     val calSeries = scala.collection.mutable.ArrayBuffer[Double]()
     def calibrate(): Double = {
-      val dt = Calibration.timed(spark, cpus.toInt)
+      val dt = Calibration.timed(spark, cpus)
       calSeries += dt
       dt
     }
     // warm the calibration plan (codegen + C2 for the hash loop), untimed
-    Calibration.probe(spark, cpus.toInt)
-    // steady-state timing: best of 2 runs per query (first run absorbs
-    // per-plan codegen/compile; at 100 TB amortized to nothing).
-    // The noop sink consumes every output column, so Catalyst cannot
-    // prune the computed projections the way it can under count();
-    // failures are reported loudly (stderr + sentinel -1), never timed.
-    // optional comma-separated query filter for local iteration; the
-    // driver sets no filter and times the full registry
+    Calibration.probe(spark, cpus)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    // excluded from the default bench run for line budget (see below);
-    // still benchable explicitly via SPARK_GRAFT_ONLY. The skip set
-    // ROTATES per round so every registry query gets a driver timing
-    // at least every other round (the r7 verdict's blind-spot fix):
-    // BENCH_r(N) ∪ BENCH_r(N+1) always covers the full registry.
-    // THIS round (r18, rotation A): rest exactly the rows BENCH_r17
-    // measured (93) EXCEPT the never-rested heavies (q_nnd,
-    // q_knn_ins, q_interact, q_semdedup, q_corpus2, q_corpus,
-    // q_dedup_clusters, q_rank, q_icorpus, q_bm25c — heavies bench
-    // every round), i.e. 83 rested; the 87 rows r17 rested all bench
-    // this round (no r18 debuts — the registry is unchanged at 180),
-    // so BENCH_r17 ∪ BENCH_r18 = the full registry (the skip set was
-    // derived mechanically from BENCH_r17.json's query map).
-    val lineSkip = Set(
-      "q01_pricing_summary", "q02_min_per_group",
-      "q02_regional_cheapest", "q03_topk_revenue", "q04_late_priority",
-      "q05_local_supplier", "q06_filter_agg", "q07_nation_volume",
-      "q10_returned_items", "q11_important_parts", "q12_late_counts",
-      "q13_order_histogram", "q14_promo_revenue", "q15_top_supplier",
-      "q16_distinct_suppliers", "q17_small_qty", "q18_large_orders",
-      "q19_disjunctive", "q20_excess_suppliers", "q22_idle_customers",
-      "q_ann_cosine", "q_ann_lsh", "q_anti_join", "q_blur", "q_bm25i",
-      "q_bm25s", "q_bpe", "q_cdcm", "q_chunk",
-      "q_connected_components", "q_csamp", "q_decon", "q_dedup_exact",
-      "q_dsir", "q_editjoin", "q_enc", "q_entropy", "q_entropy3",
-      "q_fdecon", "q_filter_min_obs", "q_frame_stats",
-      "q_frame_stats_multi", "q_gcf", "q_glcm", "q_hll", "q_icard",
-      "q_inccc", "q_incnear", "q_jaccard_pairs", "q_kf", "q_kf2",
-      "q_ksamp", "q_link_iou", "q_link_lap", "q_link_mutual",
-      "q_minhash_pairs", "q_mix", "q_mm_corpus", "q_mm_decode",
-      "q_norm", "q_pack", "q_pivot", "q_pq", "q_profile",
-      "q_qc_duplicates", "q_qc_track_summary", "q_rjr", "q_roi_shape",
-      "q_roiname", "q_rollup", "q_rp", "q_sample_stratified", "q_scut",
-      "q_sdecon", "q_sessionize", "q_set_except", "q_shard", "q_tfidf",
-      "q_ulm", "q_upsert", "q_url", "q_window_rank", "q_wp")
     val sweep = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) =>
-        only.map(_.contains(name)).getOrElse(!lineSkip(name)) }
-    def timeOnce(name: String,
-                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
-        catch {
-          case e: Throwable =>
-            System.err.println(s"BENCH FAILURE $name: $e")
-            e.printStackTrace()
-            false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // operators persist reused subtrees; drop them so queries are
-      // timed independently and memory pressure doesn't accumulate
-      spark.catalog.clearCache()
-      if (ok) dt else -1.0
-    }
-    def best2(name: String,
-              fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val times = (1 to 2).map(_ => timeOnce(name, fn))
-      if (times.exists(_ >= 0)) times.filter(_ >= 0).min else -1.0
-    }
+        only.map(_.contains(name)).getOrElse(!rested(name)) }
     calibrate()
     // sweep with a calibration reading after every CAL_EVERY queries
     // (and after the final query); each query's bracket is the last
@@ -134,7 +66,7 @@ object Bench {
     val calLo = scala.collection.mutable.Map[String, Int]()
     sweep.zipWithIndex.foreach { case ((name, fn), i) =>
       calLo(name) = calSeries.length - 1
-      results(name) = best2(name, fn)
+      results(name) = Harness.bestOf2(spark, name)(fn(spark, sfDir))
       if ((i + 1) % CalEvery == 0 || i == sweep.length - 1) calibrate()
     }
     val floor = calSeries.min
@@ -166,7 +98,7 @@ object Bench {
     val rerunT = scala.collection.mutable.Map[String, Double]()
     flagged.zipWithIndex.foreach { case (name, i) =>
       rerunLo(name) = calSeries.length - 1
-      rerunT(name) = timeOnce(name, SparkEntry.queries(name))
+      rerunT(name) = Harness.noopTime(spark, name)(SparkEntry.queries(name)(spark, sfDir))
       if ((i + 1) % 5 == 0 || i == flagged.length - 1) calibrate()
     }
     flagged.foreach { name =>
@@ -179,9 +111,6 @@ object Bench {
       if (dirty(rerunLo(name), rerunLo(name) + 1) &&
         dirty(calLo(name), calLo(name) + 1)) hot += name
     }
-    def r1g(v: Double): String =
-      if (v >= 10) "%.0f".formatLocal(java.util.Locale.ROOT, v)
-      else "%.1f".formatLocal(java.util.Locale.ROOT, v)
     // SCALING cross-check guard (r15 — the BENCH_r14 lesson: three
     // rows shipped >2x their same-code clean-sweep times because a
     // minutes-long contention burst hit every back-to-back sample,
@@ -195,7 +124,8 @@ object Bench {
     // instead of silently recording the poisoned one. Reference
     // resolution: SPARK_GRAFT_SCALING_REF, else the highest-numbered
     // SCALING_r*.json in the working directory; no reference (or a
-    // non-sf0.1 run) disables the guard rather than misfiring.
+    // non-sf0.1 run) disables the guard rather than misfiring, and an
+    // unreadable one says so on stderr.
     // REFERENCE HYGIENE (the r15-verdict merge rule, taken in r16):
     // when a SCALING sweep lands in a contention burst, the artifact
     // is the per-query MIN over multiple full sweeps of the SAME
@@ -203,22 +133,17 @@ object Bench {
     // cleanest same-code reference and keeps this guard from
     // under-flagging against an inflated baseline; merged artifacts
     // say so in their "protocol" field and carry both cal series.
+    def warn(path: String, e: Throwable): Unit =
+      System.err.println(s"BENCH WARNING $path: $e")
     val scalingRef: Map[String, Double] =
-      if (new java.io.File(sfDir).getName != "sf0.1") Map.empty
-      else {
-        val f = sys.env.get("SPARK_GRAFT_SCALING_REF").orElse {
-          val fs = Option(new java.io.File(".").listFiles()).getOrElse(Array())
-            .filter(_.getName.matches("SCALING_r\\d+\\.json"))
-          if (fs.isEmpty) None
-          else Some(fs.maxBy(f =>
-            f.getName.stripPrefix("SCALING_r").stripSuffix(".json").toInt)
-            .getPath)
-        }
-        f.filter(new java.io.File(_).exists()).map { path =>
-          try {
+      if (new File(sfDir).getName != "sf0.1") Map.empty
+      else sys.env.get("SPARK_GRAFT_SCALING_REF")
+        .orElse(Harness.numbered(new File("."), "SCALING").lastOption.map(_.getPath))
+        .filter(new File(_).exists())
+        .fold(Map.empty[String, Double]) { path =>
+          Try {
             import org.json4s._
-            org.json4s.jackson.JsonMethods.parse(
-              new java.io.File(path)) \ "queries" match {
+            org.json4s.jackson.JsonMethods.parse(new File(path)) \ "queries" match {
               case JObject(fields) => fields.collect {
                 case (name, JObject(vs)) => vs.collectFirst {
                   case ("big", JDouble(v))  => name -> v
@@ -228,9 +153,8 @@ object Bench {
               }.flatten.toMap
               case _ => Map.empty[String, Double]
             }
-          } catch { case _: Throwable => Map.empty[String, Double] }
-        }.getOrElse(Map.empty)
-      }
+          }.fold(e => { warn(path, e); Map.empty[String, Double] }, identity)
+        }
     // PROTOCOL-MATCHED reference (r17 — the r16-verdict guard fix):
     // the SCALING row is a min over multiple clean-session samples,
     // which systematically understates what a single best-of-2 bench
@@ -245,33 +169,10 @@ object Bench {
     // history min is the clean mode; a genuine regression still
     // flags — its pre-regression history is exactly the floor it
     // must answer to).
-    val benchHist: Map[String, Double] =
-      if (scalingRef.isEmpty) Map.empty
-      else {
-        val qRe = """"queries":\{([^}]*)\}""".r
-        val kvRe = """"([A-Za-z0-9_]+)":(-?\d+(?:\.\d+)?)""".r
-        val mins = scala.collection.mutable.Map[String, Double]()
-        Option(new java.io.File(".").listFiles()).getOrElse(Array())
-          .filter(_.getName.matches("BENCH_r\\d+\\.json"))
-          .foreach { f =>
-            try {
-              import org.json4s._
-              org.json4s.jackson.JsonMethods.parse(f) \ "tail" match {
-                case JString(s) => qRe.findFirstMatchIn(s).foreach { m =>
-                  kvRe.findAllMatchIn(m.group(1)).foreach { kv =>
-                    val v = kv.group(2).toDouble
-                    if (v > 0) {
-                      val k = kv.group(1)
-                      mins(k) = math.min(mins.getOrElse(k, v), v)
-                    }
-                  }
-                }
-                case _ => ()
-              }
-            } catch { case _: Throwable => () }
-          }
-        mins.toMap
-      }
+    val benchHist: Map[String, Double] = history
+      .flatMap { case (f, queries) =>
+        queries.fold(e => { warn(f.getPath, e); Map.empty[String, Double] }, identity) }
+      .filter(_._2 > 0).groupMapReduce(_._1)(_._2)(math.min)
     def guardRef(name: String): Option[Double] = scalingRef.get(name)
       .map(r => benchHist.get(name).fold(r)(h => math.max(r, h)))
     def overRef(name: String): Option[Double] = guardRef(name)
@@ -281,13 +182,11 @@ object Bench {
       Thread.sleep(20000) // let a burst pass before the recovery pass
       calibrate()
       poisoned.foreach { name =>
-        val t = timeOnce(name, SparkEntry.queries(name))
+        val t = Harness.noopTime(spark, name)(SparkEntry.queries(name)(spark, sfDir))
         if (t >= 0 && t < results(name)) results(name) = t
       }
       calibrate()
     }
-    val hotRef = poisoned.flatMap(n =>
-      overRef(n).map(ref => n + ":" + r1g(results(n)) + "/" + r1g(ref)))
     // Output budget: the driver stores the LAST 2000 chars of merged
     // output, which must hold the whole JSON line plus sbt's trailing
     // "[success] Total time: ..." line (~76 chars) — so the line must
@@ -295,8 +194,8 @@ object Bench {
     // values with trailing zeros stripped ("0.50" -> "0.5", "1.0" ->
     // "1" — deciseconds, within local run noise), no "unit":"sec"
     // field (units are seconds by contract), bare unprefixed output
-    // (run / outputStrategy in build.sbt), and the rotation skip set
-    // above (r13: 90 benched rows ≈ 1.4k chars; the cal series stays
+    // (run / outputStrategy in build.sbt), and the rotation
+    // (Harness.rested: 93 benched rows ≈ 1.6k chars; the cal series stays
     // bounded because rerun brackets are shared 5-wide — the r11
     // first cut calibrated per rerun and a false-flag storm from the
     // bimodal light probe pushed the line to 1958 chars).
@@ -308,11 +207,13 @@ object Bench {
         val t = s.reverse.dropWhile(_ == '0').reverse
         if (t.endsWith(".")) t.dropRight(1) else t
       }
+    val hotRef = poisoned.flatMap(n =>
+      overRef(n).map(ref => n + ":" + r1(results(n)) + "/" + r1(ref)))
     val qs = results.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + r1(v) }
       .mkString("{", ",", "}")
     val total = results.values.filter(_ >= 0).sum
-    val sfName = new java.io.File(sfDir).getName
+    val sfName = new File(sfDir).getName
     // calibration at 2 decimals: the probe is sub-second and the
     // series only adjudicates if its ratios are readable
     def r2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)

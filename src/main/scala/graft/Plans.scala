@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Writes PLANS.md: the executed physical plans of the headline
   * queries, as evidence for the optimization claims (predicate
@@ -12,16 +11,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "PLANS.md"
     val sfDir = "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.NanosConf._1, Tables.NanosConf._2)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(8)
     val picks = Seq(
       "q06_filter_agg" -> "filter pushdown + column pruning at the scan",
       "q05_local_supplier" -> "multi-way join, dimensions broadcast",

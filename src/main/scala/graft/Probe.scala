@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.GraftBridge
 
 /** Per-query measurement probe for optimization work: times each
   * named registry query through the bench's noop sink and reports
@@ -15,20 +15,8 @@ object Probe {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosConf._1, Tables.NanosConf._2)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Seq("lineitem", "events", "documents", "embeddings")
-      .foreach(t => Tables.load(spark, sfDir, t).count())
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    Harness.warmUp(spark, sfDir)
 
     @volatile var jobs = 0
     @volatile var stages = 0
@@ -61,13 +49,12 @@ object Probe {
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to reps).foreach { r =>
+        // drain before the reset and before the read, so every count
+        // belongs to this run and no late event lands in the next
+        GraftBridge.drainListeners(spark)
         jobs = 0; stages = 0; shufRead = 0L; shufWrite = 0L
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        // let the listener bus drain so counts attribute to this run
-        Thread.sleep(300)
+        val dt = Harness.noopTime(spark, name)(fn(spark, sfDir))
+        GraftBridge.drainListeners(spark)
         println(f"PROBE $name%-24s rep=$r dt=$dt%7.2fs jobs=$jobs%4d " +
           f"stages=$stages%4d shufR=${shufRead / 1024}%8dKiB " +
           f"shufW=${shufWrite / 1024}%8dKiB")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling sweep: run the FULL registry at two scale factors in one
   * clean session and record per-query `t(big)/t(small)` ratios, so a
   * superlinear operator — a candidate-volume blowup whose cost grows
@@ -19,60 +17,41 @@ import org.apache.spark.sql.SparkSession
   * documents 10x, embeddings 4x between sf0.01 and sf0.1) so each
   * query is judged against the growth of the tables it reads.
   *
-  * Output: one JSON artifact (args(0), default SCALING_r10.json) with
+  * Output: one JSON artifact at the required path argument with
   * per-query {small, big, ratio}, per-table row counts, and the same
-  * first/last calibration pair as [[Bench]].
+  * first/last calibration pair as [[Bench]]. Run:
+  *   sbt "runMain graft.Scaling <out.json>"
   */
 object Scaling {
   def main(args: Array[String]): Unit = {
-    val outPath = args.headOption.getOrElse("SCALING_r10.json")
+    if (args.isEmpty) {
+      System.err.println("usage: graft.Scaling <out.json>")
+      sys.exit(2)
+    }
+    val outPath = args(0)
     val smallDir = sys.env.getOrElse("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.01")
     val bigDir = sys.env.getOrElse("SPARK_GRAFT_SF_BIG", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosConf._1, Tables.NanosConf._2)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Harness.session(cpus)
     val tables = Seq("lineitem", "orders", "customer", "part",
       "supplier", "events", "documents", "embeddings")
-    // warm both directories' footer caches + JIT
     val counts = Seq(smallDir, bigDir).map { d =>
       d -> tables.map(t => t -> Tables.load(spark, d, t).count()).toMap
     }.toMap
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    Seq(smallDir, bigDir).foreach(Harness.warmUp(spark, _))
 
-    def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                dir: String): Double = {
-      val times = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, dir).write.mode("overwrite").format("noop").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"SCALING FAILURE in $dir: $e"); false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        if (ok) dt else -1.0
-      }
-      if (times.exists(_ >= 0)) times.filter(_ >= 0).min else -1.0
-    }
     // the ONE shared probe kernel (graft.Calibration) — Bench and
     // Scaling cal series must stay cross-comparable
-    def cal(): Double = Calibration.timed(spark, cpus.toInt)
-    Calibration.probe(spark, cpus.toInt) // warm the calibration plan
+    def cal(): Double = Calibration.timed(spark, cpus)
+    Calibration.probe(spark, cpus) // warm the calibration plan
     val calFirst = cal()
 
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val rows = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
-        val ts = timeOne(fn, smallDir)
-        val tb = timeOne(fn, bigDir)
+        val ts = Harness.bestOf2(spark, s"$name $smallDir")(fn(spark, smallDir))
+        val tb = Harness.bestOf2(spark, s"$name $bigDir")(fn(spark, bigDir))
         val ratio = if (ts > 0 && tb > 0) tb / ts else -1.0
         System.err.println(f"SCALING $name%-24s small=$ts%6.2f big=$tb%6.2f ratio=$ratio%6.2f")
         (name, ts, tb, ratio)

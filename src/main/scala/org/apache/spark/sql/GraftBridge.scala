@@ -12,6 +12,12 @@ object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Block until the listener bus has delivered every queued event, so
+    * a listener's counts are complete when read (the bus is
+    * `private[spark]`). */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Re-bind a DataFrame's logical plan to another session of the
     * SAME SparkContext (the execution-profile clones): the plan —
     * including any persisted cache, which lives in the shared

@@ -1,15 +1,16 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.storage.StorageLevel
 
 class CacheReleaseSpec extends SparkSpec {
   import spark.implicits._
 
-  /** The listener fires on the session's async listener bus — poll. */
-  private def eventually(timeoutMs: Long = 20000)(cond: => Boolean): Boolean = {
-    val t0 = System.currentTimeMillis()
-    while (!cond && System.currentTimeMillis() - t0 < timeoutMs) Thread.sleep(50)
+  /** The listener fires on the session's async listener bus: drain
+    * it, then check. */
+  private def drained(cond: => Boolean): Boolean = {
+    GraftBridge.drainListeners(spark)
     cond
   }
 
@@ -23,7 +24,7 @@ class CacheReleaseSpec extends SparkSpec {
     graft.functions.CacheRelease.afterNextExecution(cached)
     // caller materializes the returned plan
     assert(result.collect().length == 10)
-    assert(eventually()(cached.storageLevel == StorageLevel.NONE),
+    assert(drained(cached.storageLevel == StorageLevel.NONE),
       "cache not released after the caller's action")
   }
 
@@ -33,7 +34,7 @@ class CacheReleaseSpec extends SparkSpec {
     val result = cached.agg(sum("id"))
     graft.functions.CacheRelease.afterNextExecution(cached)
     assert(result.collect()(0).getLong(0) == 4950L)
-    assert(eventually()(cached.storageLevel == StorageLevel.NONE))
+    assert(drained(cached.storageLevel == StorageLevel.NONE))
     // second materialization after release: recompute, same values
     assert(result.collect()(0).getLong(0) == 4950L)
   }
@@ -43,7 +44,7 @@ class CacheReleaseSpec extends SparkSpec {
     val docs = Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("doc_id", "text")
     val out = graft.text.Shuffle.permute(docs, col("doc_id"), nShards = 2)
     assert(out.count() == 4)
-    assert(eventually()(spark.sparkContext.getPersistentRDDs.size <= before),
+    assert(drained(spark.sparkContext.getPersistentRDDs.size <= before),
       s"layoutBy leaked a cached RDD (before=$before, " +
         s"after=${spark.sparkContext.getPersistentRDDs.size})")
   }
@@ -55,7 +56,7 @@ class CacheReleaseSpec extends SparkSpec {
     val out = graft.dedup.IncrementalDedup.dedupAgainst(
       corpus, col("doc_id"), col("text"), batch, col("doc_id"), col("text"))
     assert(out.count() == 2)
-    assert(eventually()(spark.sparkContext.getPersistentRDDs.size <= before),
+    assert(drained(spark.sparkContext.getPersistentRDDs.size <= before),
       s"dedupAgainst leaked a cached RDD (before=$before, " +
         s"after=${spark.sparkContext.getPersistentRDDs.size})")
   }

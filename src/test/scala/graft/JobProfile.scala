@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.GraftBridge
 
 /** Ad-hoc job-launch profiler for the q_icorpus increment path: runs
   * the registry query against a scale dir and prints every Spark job
@@ -12,16 +12,7 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val q = if (args.length > 1) args(1) else "q_icorpus"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.NanosConf._1, Tables.NanosConf._2)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -39,7 +30,7 @@ object JobProfile {
     val t0 = System.nanoTime()
     val n = SparkEntry.queries(q)(spark, sfDir).count()
     val sec = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(500)
+    GraftBridge.drainListeners(spark)
     import scala.jdk.CollectionConverters._
     val rows = done.asScala.toSeq.sortBy(_._1)
     println(f"== $q rows=$n wall=$sec%.1f s jobs=${rows.size} ==")

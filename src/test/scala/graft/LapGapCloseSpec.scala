@@ -168,8 +168,28 @@ class LapGapCloseSpec extends SparkSpec {
       // edges (true of tracking data by construction), so the NN front
       // end must never link across videos
       v * 50.0 + rnd.nextDouble() * 0.5)
+    // a hand-built third video where the p90 conditioning decides a
+    // link: 22 walkers each leave one cheap end->start candidate (frame
+    // 5 missing, d² = 2.2² = 4.84), and one far pair (d² = 7² = 49)
+    // sits inside the gate (8² = 64). Unconditioned, the alternative is
+    // the gate and the far pair links (49 < 2·64); at 1.05 × p90 of the
+    // kept costs the alternative is ~5.1 and leaving both ends unlinked
+    // is cheaper (2·5.1 < 49). It needs >= 19 cheap candidates for the
+    // p90 to land below the outlier.
+    val planted = 2000000L
+    val walkers = for {
+      w <- 0 until 22
+      f <- 0 until 10
+      if f != 5
+    } yield (planted + w * 1000L + f, f.toLong, w * 30.0 + f * 1.1, 100.0)
+    val farEnd = planted + 22004L
+    val farStart = planted + 23006L
+    val far = (0 to 4).map(f => (planted + 22000L + f, f.toLong, 660.0 + f * 1.1, 100.0)) ++
+      (6 to 9).map(f => (planted + 23000L + f, f.toLong, 671.4 + (f - 6) * 1.1, 100.0))
+    val conditioned = 1.05 * LapLink.percentileTM(Array.fill(22)(4.84) :+ 49.0, 0.9)
+    assert(2 * conditioned < 49.0, s"the far pair survives conditioning: alternative $conditioned")
     // a deterministic stand-in feature for the penalty map
-    val df = toDf(spots)
+    val df = toDf(spots ++ walkers ++ far)
       .withColumn("area", pmod(col("id"), lit(13L)).cast("double") + 5.0)
     val edges = SpotLink.nearest(df, col("id"), col("frame"), col("x"), col("y"),
       maxDist = 8.0, gapFrames = 1)
@@ -181,7 +201,8 @@ class LapGapCloseSpec extends SparkSpec {
     // GAP_CLOSING_FEATURE_PENALTIES map
     val keySets = Seq(
       (None, 0.9, Nil),
-      (Some(1.05), 0.9, Seq(col("area") -> 1.0)))
+      (Some(1.05), 0.9, Seq(col("area") -> 1.0)),
+      (Some(1.05), 0.9, Nil))
     val results = for ((alt, pct, pens) <- keySets) yield {
       val staged = {
         val labels = TrackAssignment.divisionAwareByVideo(df.select("id", "frame"),
@@ -202,6 +223,13 @@ class LapGapCloseSpec extends SparkSpec {
     }
     // the keys bite on this fixture: they change which gaps close
     assert(results.distinct.size === keySets.size)
+    // the conditioning alone rejects the planted far pair, and only it
+    val (unconditioned, p90) = (results(0), results(2))
+    assert(unconditioned(farEnd) === unconditioned(farStart))
+    assert(p90(farEnd) !== p90(farStart))
+    (0 until 22).foreach { w =>
+      assert(p90(planted + w * 1000L + 4) === p90(planted + w * 1000L + 6), s"walker $w")
+    }
   }
 
   test("fused nearestTracksByVideo equals SpotLink.nearest -> divisionAwareByVideo") {

@@ -5,20 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM, one session). */
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.NanosConf._1, Tables.NanosConf._2)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    Harness.session(4, "spark.sql.warehouse.dir" -> "/tmp/graft_test_warehouse")
 }
 
 abstract class SparkSpec extends AnyFunSuite {
