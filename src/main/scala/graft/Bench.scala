@@ -198,15 +198,9 @@ object Bench {
     // (Harness.rested: 93 benched rows ≈ 1.6k chars; the cal series stays
     // bounded because rerun brackets are shared 5-wide — the r11
     // first cut calibrated per rerun and a false-flag storm from the
-    // bimodal light probe pushed the line to 1958 chars).
-    def r1(v: Double): String =
-      if (v < 0) "-1"
-      else if (v >= 10) "%.0f".formatLocal(java.util.Locale.ROOT, v)
-      else {
-        val s = "%.1f".formatLocal(java.util.Locale.ROOT, v)
-        val t = s.reverse.dropWhile(_ == '0').reverse
-        if (t.endsWith(".")) t.dropRight(1) else t
-      }
+    // bimodal light probe pushed the line to 1958 chars), and the "hot"
+    // list's fold to `LineBudget` (jsonLine: 37 hot rows on a contended
+    // box once printed a 2631-char line).
     val hotRef = poisoned.flatMap(n =>
       overRef(n).map(ref => n + ":" + r1(results(n)) + "/" + r1(ref)))
     val qs = results.toSeq.sortBy(_._1)
@@ -218,11 +212,7 @@ object Bench {
     // series only adjudicates if its ratios are readable
     def r2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
     val calJson = calSeries.map(r2).mkString("[", ",", "]")
-    val hotJson = (hot.toSeq ++ hotRef).sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line =
-      s"""{"metric":"total","value":${r1(total)},"cal":$calJson,""" +
-        s""""hot":$hotJson,"queries":$qs,"sf":"$sfName"}"""
+    val line = jsonLine(r1(total), calJson, hot.toSeq ++ hotRef, qs, sfName)
     // print once now, and once from a shutdown hook writing the raw fd:
     // the hook runs after main returns (past Spark's stop() noise), so
     // the bare JSON is the last line of the forked JVM's stdout
@@ -232,5 +222,37 @@ object Bench {
         java.io.FileDescriptor.out), true).println(line)
     }))
     spark.stop()
+  }
+
+  /** A timing in the line: -1 for a failure, whole seconds from 10 s,
+    * else one decimal with trailing zeros stripped. */
+  def r1(v: Double): String =
+    if (v < 0) "-1"
+    else if (v >= 10) "%.0f".formatLocal(java.util.Locale.ROOT, v)
+    else {
+      val s = "%.1f".formatLocal(java.util.Locale.ROOT, v)
+      val t = s.reverse.dropWhile(_ == '0').reverse
+      if (t.endsWith(".")) t.dropRight(1) else t
+    }
+
+  /** The most chars the JSON line may take: a bench run is read from the
+    * last 2000 chars of its stdout, which also hold the `[info] ` prefix
+    * (7) and sbt's closing `[success] Total time ...` line (77). */
+  val LineBudget: Int = 2000 - 84
+
+  /** The one-line result. `hot` is sorted and keeps as many entries as
+    * fit `LineBudget`; the rest fold into one `"+N more"` entry, so a
+    * contended run that flags many rows still prints a readable line. */
+  def jsonLine(total: String, cal: String, hot: Seq[String], queries: String,
+               sf: String): String = {
+    def render(h: Seq[String]) =
+      s"""{"metric":"total","value":$total,"cal":$cal,""" +
+        s""""hot":${h.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+        s""""queries":$queries,"sf":"$sf"}"""
+    val sorted = hot.sorted
+    val lines = (sorted.length to 0 by -1).map { k =>
+      render(if (k == sorted.length) sorted else sorted.take(k) :+ s"+${sorted.length - k} more")
+    }
+    lines.find(_.length <= LineBudget).getOrElse(lines.last)
   }
 }

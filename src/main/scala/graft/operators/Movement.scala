@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Movement features from the CellPhe frame-summary stage
@@ -21,17 +21,20 @@ object Movement {
   /** @param ord   deterministic per-entity ordering column (unique)
     * @param tsSec event time in epoch seconds (for velocity dt) */
   def features(df: DataFrame, entity: String, ord: Column, tsSec: Column,
-               x: Column, y: Column, framerate: Double = 0.0028): DataFrame = {
-    val w    = Window.partitionBy(col(entity)).orderBy(ord)
+               x: Column, y: Column, framerate: Double = 0.0028): DataFrame =
+    columns(df, Window.partitionBy(col(entity)).orderBy(ord), tsSec, x, y, framerate)
+
+  /** The movement columns along the ordered per-entity window `w`, for
+    * `features` and the fused `Pipeline` chain. */
+  def columns(df: DataFrame, w: WindowSpec, tsSec: Column, x: Column, y: Column,
+              framerate: Double = 0.0028): DataFrame = {
     val wAll = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val stepped = df
-      .withColumn("_x", x).withColumn("_y", y).withColumn("_ts_s", tsSec)
+    df.withColumn("_x", x).withColumn("_y", y).withColumn("_ts_s", tsSec)
       .withColumn("_x0", first(col("_x")).over(wAll))
       .withColumn("_y0", first(col("_y")).over(wAll))
       .withColumn("_dx", col("_x") - lag(col("_x"), 1).over(w))
       .withColumn("_dy", col("_y") - lag(col("_y"), 1).over(w))
       .withColumn("_dt", col("_ts_s") - lag(col("_ts_s"), 1).over(w))
-    stepped
       .withColumn("dis", sqrt((col("_x") - col("_x0")) * (col("_x") - col("_x0")) +
         (col("_y") - col("_y0")) * (col("_y") - col("_y0"))))
       .withColumn("_step",

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import graft.functions.Numeric._
 
@@ -14,23 +14,34 @@ import graft.functions.Numeric._
   * a pair index from row_number, detail/approximation coefficients are
   * 2-row aggregates, and level-2 repeats the trick on level-1 output.
   * Everything stays a hash aggregate with map-side combine.
+  *
+  * Elevation and Haar are each defined once, as window columns over a
+  * caller's ordered spec (`*Columns`) and per-entity aggregates (`*Aggs`),
+  * for the operators here and the fused `Pipeline` chain.
   */
 object TimeSeries {
 
   /** Ascent/descent/extrema per entity (CellPhe elevation variables). */
-  def elevation(df: DataFrame, entity: String, ord: Column, v: Column): DataFrame = {
-    val w = Window.partitionBy(col(entity)).orderBy(ord)
-    df.withColumn("_v", v)
-      .withColumn("_d", col("_v") - lag(col("_v"), 1).over(w))
-      .groupBy(col(entity))
-      .agg(
-        count(lit(1)).as("n_obs"),
-        dsum(when(col("_d") > 0, col("_d")).otherwise(0.0), 6).as("ascent"),
-        dsum(when(col("_d") < 0, -col("_d")).otherwise(0.0), 6).as("descent"),
-        cround(max(col("_v")), 4).as("max_v"),
-        cround(min(col("_v")), 4).as("min_v"),
-        cround(max(col("_v")) - min(col("_v")), 4).as("range_v"))
-  }
+  def elevation(df: DataFrame, entity: String, ord: Column, v: Column): DataFrame =
+    perEntity(elevationColumns(df, Window.partitionBy(col(entity)).orderBy(ord), v), entity,
+      count(lit(1)).as("n_obs") +: elevationAggs)
+
+  /** `_v` and its step `_d` along `w`. */
+  def elevationColumns(df: DataFrame, w: WindowSpec, v: Column): DataFrame =
+    df.withColumn("_v", v).withColumn("_d", v - lag(v, 1).over(w))
+
+  def elevationAggs: Seq[Column] =
+    stepAggs(col("_v"), col("_d"), Seq("ascent", "descent", "max_v", "min_v", "range_v"))
+
+  /** Ascent, descent, max, min and range of `v` from its steps `d`. */
+  private def stepAggs(v: Column, d: Column, names: Seq[String]): Seq[Column] = Seq(
+    dsum(when(d > 0, d).otherwise(0.0), 6),
+    dsum(when(d < 0, -d).otherwise(0.0), 6),
+    cround(max(v), 4), cround(min(v), 4), cround(max(v) - min(v), 4))
+    .zip(names).map { case (c, n) => c.as(n) }
+
+  private def perEntity(df: DataFrame, entity: String, aggs: Seq[Column]): DataFrame =
+    df.groupBy(col(entity)).agg(aggs.head, aggs.tail: _*)
 
   /** Higher-moment trajectory summary (mean/variance/skewness/excess
     * kurtosis per track — the rest of CellPhe's per-variable summary
@@ -104,17 +115,10 @@ object TimeSeries {
       acc.withColumn(s"_v_$name", v)
         .withColumn(s"_d_$name", v - lag(v, 1).over(w))
     }
-    val aggs = count(lit(1)).as("n_obs") +: vars.flatMap { case (name, _) =>
-      Seq(
-        dsum(when(col(s"_d_$name") > 0, col(s"_d_$name")).otherwise(0.0), 6)
-          .as(s"${name}_ascent"),
-        dsum(when(col(s"_d_$name") < 0, -col(s"_d_$name")).otherwise(0.0), 6)
-          .as(s"${name}_descent"),
-        cround(max(col(s"_v_$name")), 4).as(s"${name}_max"),
-        cround(min(col(s"_v_$name")), 4).as(s"${name}_min"),
-        cround(max(col(s"_v_$name")) - min(col(s"_v_$name")), 4).as(s"${name}_range"))
-    }
-    withDiffs.groupBy(col(entity)).agg(aggs.head, aggs.tail: _*)
+    perEntity(withDiffs, entity, count(lit(1)).as("n_obs") +: vars.flatMap { case (name, _) =>
+      stepAggs(col(s"_v_$name"), col(s"_d_$name"),
+        Seq("ascent", "descent", "max", "min", "range").map(s => s"${name}_$s"))
+    })
   }
 
   /** Per-entity linear trend of a feature over observation order
@@ -189,28 +193,32 @@ object TimeSeries {
     * shuffle, one window and one aggregate — a naive per-level
     * groupBy+join duplicates the scan+window subtree. Entities with no
     * complete pair report zero energies. */
-  def haarEnergies(df: DataFrame, entity: String, ord: Column, v: Column): DataFrame = {
-    val w = Window.partitionBy(col(entity)).orderBy(ord)
-    val rows = df.withColumn("_v", v)
+  def haarEnergies(df: DataFrame, entity: String, ord: Column, v: Column): DataFrame =
+    perEntity(haarColumns(df, Window.partitionBy(col(entity)).orderBy(ord), v), entity, haarAggs)
+
+  /** `_v`, its row number `_rn` and the next three values `_v1`-`_v3` along `w`. */
+  def haarColumns(df: DataFrame, w: WindowSpec, v: Column): DataFrame =
+    df.withColumn("_v", v)
       .withColumn("_rn", row_number().over(w))
-      .withColumn("_v1", lead(col("_v"), 1).over(w))
-      .withColumn("_v2", lead(col("_v"), 2).over(w))
-      .withColumn("_v3", lead(col("_v"), 3).over(w))
+      .withColumn("_v1", lead(v, 1).over(w))
+      .withColumn("_v2", lead(v, 2).over(w))
+      .withColumn("_v3", lead(v, 3).over(w))
+
+  def haarAggs: Seq[Column] = {
     val d1 = (col("_v") - col("_v1")) / sqrt(lit(2.0))
     val d2 = (col("_v") + col("_v1") - col("_v2") - col("_v3")) / 2.0
     val isP1 = col("_rn") % 2 === 1 && col("_v1").isNotNull
     val isP2 = col("_rn") % 4 === 1 && col("_v3").isNotNull
     val n1 = sum(when(isP1, 1L).otherwise(0L))
     val n2 = sum(when(isP2, 1L).otherwise(0L))
-    rows.groupBy(col(entity))
-      .agg(
-        n1.as("n_pairs_l1"),
-        // n1 = 0 guard: ANSI throws on /0; the SQL mirror's NULL
-        // numerator / 0 is NULL -> COALESCE 0 either way
-        when(n1 > 0, cround(sum(when(isP1, (d1 * d1).cast("decimal(28,8)"))).cast("double") /
-          n1, 6)).otherwise(0.0).as("l1_energy"),
-        n2.as("n_pairs_l2"),
-        when(n2 > 0, cround(sum(when(isP2, (d2 * d2).cast("decimal(28,8)"))).cast("double") /
-          n2, 6)).otherwise(0.0).as("l2_energy"))
+    Seq(
+      n1.as("n_pairs_l1"),
+      // n1 = 0 guard: ANSI throws on /0; the SQL mirror's NULL
+      // numerator / 0 is NULL -> COALESCE 0 either way
+      when(n1 > 0, cround(sum(when(isP1, (d1 * d1).cast("decimal(28,8)"))).cast("double") /
+        n1, 6)).otherwise(0.0).as("l1_energy"),
+      n2.as("n_pairs_l2"),
+      when(n2 > 0, cround(sum(when(isP2, (d2 * d2).cast("decimal(28,8)"))).cast("double") /
+        n2, 6)).otherwise(0.0).as("l2_energy"))
   }
 }

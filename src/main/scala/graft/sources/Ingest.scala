@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.exchange.{EnsureRequirements, ShuffleExchangeLike}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
@@ -48,25 +49,22 @@ object Ingest {
     * with a round-robin repartition; otherwise return it unchanged —
     * wide (production-shaped) inputs never gain the exchange.
     *
-    * The gate inspects the NON-adaptive physical plan STRUCTURALLY
-    * (r18): the r17 cut read `queryExecution.toRdd.getNumPartitions`,
-    * which under AQE eagerly materializes every upstream exchange and
-    * broadcast stage (`getFinalPhysicalPlan`) — work then re-executed
-    * when the caller's real query runs under its own QueryExecution.
-    * Here nothing executes: a plan carrying any shuffle exchange is
+    * The gate reads the physical plan STRUCTURALLY and launches no job
+    * (`queryExecution.toRdd.getNumPartitions` would, under AQE, eagerly
+    * materialize every upstream exchange). It applies
+    * `EnsureRequirements` to the planned `sparkPlan` first, so
+    * the exchanges that windows, aggregates and joins require are in
+    * the tree it searches: a plan carrying any shuffle exchange is
     * already session-width (post-shuffle partitions = the session's
-    * shuffle.partitions), so the floor applies only to shuffle-free
-    * plans, whose output width is their leaf scans' split count — read
-    * off the scan node without launching a job. Leaves other than file
-    * scans and local relations (persisted caches, re-rooted RDDs) are
-    * materialized-input shapes whose width the producer already chose:
-    * the floor skips them. */
+    * shuffle.partitions) and is returned unchanged. A shuffle-free
+    * plan's output width is its leaf scans' split count, read off the
+    * scan node. Leaves other than file scans and local relations
+    * (persisted caches, re-rooted RDDs) are materialized-input shapes
+    * whose width the producer already chose: the floor skips them. */
   def parallelismFloor(df: DataFrame): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    val plan = df.queryExecution.sparkPlan
-    val hasShuffle = plan.exists(
-      _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
-    if (hasShuffle) return df
+    val plan = EnsureRequirements().apply(df.queryExecution.sparkPlan)
+    if (plan.exists(_.isInstanceOf[ShuffleExchangeLike])) return df
     val leafParts = plan.collectLeaves().map {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
         Some(f.inputRDD.getNumPartitions)

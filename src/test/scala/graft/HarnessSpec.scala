@@ -51,6 +51,33 @@ class HarnessSpec extends SparkSpec {
     assert(e.getMessage.contains("BENCH_r99.json"))
   }
 
+  test("the bench line folds a 40-row hot set into the 2000-char stdout tail") {
+    import org.json4s._
+    // an unfiltered run after BENCH_r18, each row at its newest recorded
+    // time, under a contended calibration series
+    val benched = (registry -- Harness.rested(committed("BENCH_r18.json"))).toSeq.sorted
+    val times = committed("BENCH_r17.json", "BENCH_r18.json").flatMap(_._2.get).toMap
+    val qs = benched.map(n => "\"" + n + "\":" + Bench.r1(times(n))).mkString("{", ",", "}")
+    val cal = Seq.fill(20)("12.80").mkString("[", ",", "]")
+    val hot = benched.take(40).map(_ + ":18/5.8")
+    def parse(line: String) = org.json4s.jackson.JsonMethods.parse(line) match {
+      case JObject(fields) => fields
+      case other => fail(s"not an object: $other")
+    }
+    val line = Bench.jsonLine("123", cal, hot.reverse, qs, "sf0.1")
+    assert(line.length + 84 <= 2000, s"${line.length} chars")
+    val fields = parse(line)
+    assert(fields.map(_._1) === List("metric", "value", "cal", "hot", "queries", "sf"))
+    val kept = fields(3)._2.values.asInstanceOf[List[String]]
+    val (shown, folded) = (kept.init, kept.last)
+    assert(shown === hot.sorted.take(shown.size))
+    assert(folded === s"+${40 - shown.size} more")
+    assert(fields(4)._2.values.asInstanceOf[Map[String, Any]].size === benched.size)
+    // a hot set that fits is kept whole and sorted
+    val few = parse(Bench.jsonLine("123", cal, hot.take(2).reverse, qs, "sf0.1"))
+    assert(few(3)._2.values === hot.take(2).sorted)
+  }
+
   test("a failing query times as -1 and the next call times normally") {
     assert(Harness.noopTime(spark, "throws")(throw new RuntimeException("planted")) === -1.0)
     assert(Harness.bestOf2(spark, "raises")(

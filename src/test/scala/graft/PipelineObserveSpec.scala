@@ -4,9 +4,9 @@ import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 
 /** observe() QC counters ride the pipeline job itself — no second scan.
-  * The observed row count must equal an independent count of the
-  * QC-filtered input, collected from the same single action that
-  * produced the pipeline output. */
+  * The observed row and track counts must equal an independent count of
+  * the QC-filtered input and the pipeline's output row count, collected
+  * from the same single action that produced the pipeline output. */
 class PipelineObserveSpec extends SparkSpec {
 
   test("pipeline observation reports QC survivor counts from the same job") {
@@ -21,12 +21,14 @@ class PipelineObserveSpec extends SparkSpec {
     val out = Pipeline.fullObserved(ev, Some(obs))
     val nTracks = out.count() // the ONE action; metrics collected as a side effect
     val m = obs.get
-    val expectedRows = graft.operators.Quality
-      .filterSizeAndObservations(ev, "user_id", col("value"), 10.0, 50L).count()
+    val filtered = graft.operators.Quality
+      .filterSizeAndObservations(ev, "user_id", col("value"), 10.0, 50L)
+    val expectedRows = filtered.count()
+    val expectedTracks = filtered.select("user_id").distinct().count()
+    assert(expectedRows > 0 && nTracks > 0)
+    // exact: both counters ride the per-track aggregate
     assert(m("qc_rows") == expectedRows, s"observed ${m("qc_rows")} != $expectedRows")
-    // approx distinct within HLL tolerance of the exact pipeline output rows
-    val approxTracks = m("qc_tracks").asInstanceOf[Long]
-    assert(math.abs(approxTracks - nTracks).toDouble / nTracks < 0.1,
-      s"observed tracks $approxTracks vs $nTracks")
+    assert(m("qc_tracks") == nTracks, s"observed ${m("qc_tracks")} != $nTracks")
+    assert(nTracks == expectedTracks)
   }
 }
