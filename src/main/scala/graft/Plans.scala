@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.matching.Regex
+
 /** Writes PLANS.md: the executed physical plans of the headline
   * queries, as evidence for the optimization claims (predicate
   * pushdown, column pruning, broadcast dims, shared window shuffles).
@@ -56,8 +58,8 @@ object Plans {
       "q_incnear" -> "incremental near-dup against the corpus band index: ONE map-only signature pass per side, candidates from an EQUI-join on the 8-byte (band, bh) bucket key — only bucket collisions shuffle, corpus text never re-shingled — estimate as a codegen'd zip_with/aggregate over the carried signatures, dup_of by packed min_by",
       "q_profile" -> "one-pass data profiling: the stacked (column, value) explode feeds ONE map-side-combined value-grain count — the only full-data exchange; distincts, null mass, min/max and the top-k heads all aggregate that small table at column grain",
       "q_interact" -> "track interaction: grid-binned same-frame proximity join (equi-keys (f, cx, cy), 3x3 probe explode — no track-pair cross join), candidate pairs deduped on an EXPLICIT-width pair exchange (r17 — AQE's size-based coalescing packed the byte-tiny pair set and the whole CPU-dense phase 2 behind it onto one task), then ONLY the candidate sliver joins back to the persisted step series; decimal-quantized correlation sums aggregate map-side; the density fail-fast rides a broadcast join against the normally-empty overflow cells",
-      "q_nnd" -> "NN-descent K-NN graph: every round is equi-joins/aggs on node id only — reverse-capped adjacency self-join moves 8-byte id pairs, the per-round state trim is ONE bounded top-k aggregate (r17 TopKEdges: map-side partials collapse to k entries per node before the exchange; under the narrow profile the candidate dedup exchange is skipped — broadcast re-scores are cheaper, and at full width the distinct stays), state re-rooted on a persisted RDD per round, convergence counted by the materializing job itself",
-      "q_walk" -> "graph-ANN serving: beam search over the PERSISTED K-NN graph. BELOW the driver caps (r18 — both hop-join build sides were already driver-materialized per hop as broadcasts) the hop loop runs on the driver over the collected adjacency/vectors with the SAME kernels (DotProduct's accumulation order, TopKEdges.prune itself), bit-identical (ProfileParitySpec + an sf0.1 three-profile check), so the served plan at this SF is the ranked LocalRelation shown here after a handful of setup jobs. Above the caps the r17 distributed hop shape is unchanged: per hop the frontier equi-joins the symmetrized 8-byte adjacency, embeddings join in for DISTINCT proposals only, the beam re-selection is ONE bounded top-k aggregate, state re-rooted per hop with the new-entrant count riding the materializing job",
+      "q_nnd" -> "NN-descent K-NN graph: every round is equi-joins/aggs on node id only — reverse-capped adjacency self-join moves 8-byte id pairs, the per-round state trim is ONE bounded top-k aggregate (r17 TopKEdges: map-side partials collapse to k entries per node before the exchange; when Rounds.profile picks Narrow the candidate dedup exchange is skipped — broadcast re-scores are cheaper, and at Wide the distinct stays), state re-rooted on a persisted RDD per round, convergence counted by the materializing job itself",
+      "q_walk" -> "graph-ANN serving: beam search over the PERSISTED K-NN graph. When Rounds.profile picks Local (r18 — both hop-join build sides were already driver-materialized per hop as broadcasts) the hop loop runs on the driver over the collected adjacency/vectors with the SAME kernels (DotProduct's accumulation order, TopKEdges.prune itself), bit-identical (ProfileParitySpec + an sf0.1 three-profile check), so the served plan at this SF is the ranked LocalRelation shown here after a handful of setup jobs. Under Narrow or Wide the r17 distributed hop shape is unchanged: per hop the frontier equi-joins the symmetrized 8-byte adjacency, embeddings join in for DISTINCT proposals only, the beam re-selection is ONE bounded top-k aggregate, state re-rooted per hop with the new-entrant count riding the materializing job",
       "q_rrf" -> "hybrid RRF retrieval: BM25's broadcast-filtered postings + bruteTopK's broadcast-query corpus scan each emit a |queries|*k ranked sliver; fusion is a union + one (query, doc) aggregate + one per-query window on slivers — corpus-independent",
       "q_gsplit" -> "leakage-safe grouped split: MAP-ONLY — the group key hashes per-row (PolyFingerprint mod 100), no group table, no join, no exchange anywhere in the plan",
       "q_gdedup" -> "K-NN-graph dedup: a map filter over the persisted graph's n*k 8-byte edge rows, then the log-round CC closure on the surviving sliver — the corpus embeddings are never rescanned, no pair generation anywhere",
@@ -66,13 +68,13 @@ object Plans {
       "q_quant" -> "int8 quantization: in-row absmax fold + in-row transform at (vec_id, dim) grain — map-only, no exchange anywhere",
       "q_vad" -> "voice-activity segmentation: the batched one-pass PCM decode, then ONE doc-grain window over the rms-gated sliver + one segment-grain aggregate — gaps-and-islands, never a dense self-join",
       "q_afp" -> "audio fingerprint dedup: per-asset collect bounded at bits+1 frames BEFORE the one doc-grain aggregate, in-row MSB-first fold, duplicate grouping a window on the 8-byte (n_bits, fp) key",
-      "q_knn_ins" -> "graph-ANN incremental insert: beam-searched cross edges over the persisted base graph (the r18 driver-local walk below its caps) + batch-local brute/descent edges; the batch/sliver-grain list trims run on the narrowed clone and re-root on persisted RDDs (r18 — they were ~20 caller-width AQE stage-jobs of launch latency), while the corpus-scale passthrough stays THIS caller-width plan: a map-only broadcast anti join — every untouched base row rides through unshuffled, so the plan's cost scales with the batch, never the corpus",
+      "q_knn_ins" -> "graph-ANN incremental insert: beam-searched cross edges over the persisted base graph (the r18 driver-local walk when Rounds.profile picks Local) + batch-local brute/descent edges; the batch/sliver-grain list trims run on the Narrow profile's clone and re-root on persisted RDDs (r18 — they were ~20 caller-width AQE stage-jobs of launch latency), while the corpus-scale passthrough stays THIS caller-width plan: a map-only broadcast anti join — every untouched base row rides through unshuffled, so the plan's cost scales with the batch, never the corpus",
       "q_url" -> "URL canonicalization + domain rollup: the six regex rules fuse into ONE map-only whole-stage-codegen select; the domain rollup is one hash aggregate joined back — nothing else exchanges",
       "q_qsk" -> "incremental quantile sketches: the bottom-k Aggregator's partial aggregation collapses every partition MAP-SIDE to <= k entries before each batch's one exchange; the union stage merges per-part ARRAYS (objectHashAggregate, no explode — sibling exact counts never fan out); the estimate is in-row array math",
       "q_bm25c" -> "BM25 serving THROUGH compaction: the same query-term bucket PartitionFilters + broadcast term join as the incremental index, now over one-file buckets — compaction changed the file census, not one operator of the serving plan",
       "q_bm25i" -> "incremental BM25 index serving (the r16 manifest-store lifecycle): the query terms' buckets select manifest LINES before any scan — the static prune is file-list construction, untouched buckets never reach the plan — then the pruned postings join the broadcast term table and the meta parts fold to the corpus stats; the scoring tail is the direct query's, which is why it reuses that oracle verbatim",
       "q_cdcm" -> "materialized CDC snapshot read: the committed bucket files resolve from ONE manifest read and scan directly — a merge REPLACES its buckets' lines, so every bucket is exactly one live file and the serve-time plan is a pruned file-list scan + op filter, with zero dedup or version-resolution work left to do",
-      "q_rank2" -> "warm-started PageRank refresh. BELOW the 500k-edge driver cap (r18 — a sub-cap graph is a few MB of longs and the distributed loop is pure launch latency) the identical integer fixed-point recurrence runs as one driver loop over the collected deduped edge list, bit-identical (ProfileParitySpec pins local == narrow == wide for cold and warm), so the served plan at this SF is the (node, rank) LocalRelation. Above the cap the distributed round is unchanged: static edges+outdeg equi-joined to the RDD-re-rooted ranks, ONE dst hash aggregate, the dangling mass a broadcast one-row cross join — identical round shape to the cold recurrence, only the seed differs",
+      "q_rank2" -> "warm-started PageRank refresh. When Rounds.profile picks Local (r18 — such a graph is a few MB of longs and the distributed loop is pure launch latency) the identical integer fixed-point recurrence runs as one driver loop over the collected deduped edge list, bit-identical (ProfileParitySpec pins local == narrow == wide for cold and warm), so the served plan at this SF is the (node, rank) LocalRelation. Under Narrow or Wide the distributed round is unchanged: static edges+outdeg equi-joined to the RDD-re-rooted ranks, ONE dst hash aggregate, the dangling mass a broadcast one-row cross join — identical round shape to the cold recurrence, only the seed differs",
       "q_icorpus" -> "incremental corpus ASSEMBLY (the served output after the eager increment folded the batch into the artifacts): a map-side intrinsic filter (dflag) over exdocs, ONE dup-evidence-sized labels join for the canonical keep, and the map-only Lehmer sampling filter — corpus TEXT appears nowhere in the plan, because every text-grain stage was paid at ingest")
     val sb = new StringBuilder
     sb.append("# Executed physical plans (sf0.001, AQE final plans)\n\n")
@@ -80,11 +82,39 @@ object Plans {
     picks.foreach { case (name, why) =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.collect()
-      val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      val plan = scrub(
+        df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0))
       sb.append(s"\n## $name — $why\n\n```\n$plan```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out")
     spark.stop()
+  }
+
+  /** Drops the tokens that change from run to run of one commit, so
+    * two regenerations diff only where a plan did: expression,
+    * codegen-stage and exchange ids renumber in order of appearance
+    * (links such as a ReusedExchange's source survive), AQE query-stage
+    * ids (numbered per adaptive plan, in materialization order),
+    * lambda class names and object hash codes drop, and temp artifact
+    * paths keep only their top directory, its trailing pid or
+    * fingerprint masked. */
+  private[graft] def scrub(plan: String): String = {
+    def renumber(s: String, open: String, close: String): String = {
+      val ids = scala.collection.mutable.HashMap[String, Int]()
+      (Regex.quote(open) + "(\\d+)" + Regex.quote(close)).r.replaceAllIn(s, m =>
+        Regex.quoteReplacement(
+          s"$open${ids.getOrElseUpdate(m.group(1), ids.size + 1)}$close"))
+    }
+    val stable = Seq("[plan_id=" -> "]", "*(" -> ")", "#" -> "")
+      .foldLeft(plan) { case (s, (o, c)) => renumber(s, o, c) }
+      .replaceAll("""(?<=QueryStage) \d+""", "")
+      .replaceAll("""\$Lambda\$\d+/0x[0-9a-f]+""", "\\$Lambda")
+      .replaceAll("""(?<=[\w$])@[0-9a-f]{1,8}\b""", "")
+    """file:/tmp/[^\s\],]*""".r.replaceAllIn(stable, m => {
+      val top = m.matched.stripPrefix("file:/tmp/").takeWhile(_ != '/')
+      Regex.quoteReplacement(
+        s"file:/tmp/${top.replaceAll("""_\d+(\.\.\.)?$""", "_*")}/…")
+    })
   }
 }

@@ -51,6 +51,36 @@ object ConnectedComponents {
       .distinct()
   }
 
+  /** Union-find over an edge stream: (node, root) for every endpoint,
+    * where root is the minimum node id of the node's component within
+    * these edges (union points the larger root at the smaller, so
+    * every chain ends at the minimum). Memory is the distinct
+    * endpoints; path halving keeps finds near-constant. */
+  private[graft] def minRoots(edges: Iterator[(Long, Long)])
+      : Iterator[(Long, Long)] = {
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x0: Long): Long = {
+      var x = x0
+      var p = parent.getOrDefault(x, x)
+      while (p != x) { // path halving
+        val gp = parent.getOrDefault(p, p)
+        parent.put(x, gp)
+        x = gp
+        p = parent.getOrDefault(x, x)
+      }
+      x
+    }
+    edges.foreach { case (s, d) =>
+      val rs = find(s); val rd = find(d)
+      if (rs != rd) parent.put(math.max(rs, rd), math.min(rs, rd))
+      parent.putIfAbsent(s, s)
+      parent.putIfAbsent(d, d)
+    }
+    val out = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+    parent.keySet().forEach(n => out += ((n, find(n))))
+    out.iterator
+  }
+
   /** Run to convergence; returns (node, component). Each round the plan
     * is truncated by re-rooting on a persisted RDD (a round's plan
     * references its input several times, so without truncation the
@@ -82,34 +112,8 @@ object ConnectedComponents {
     import spark.implicits._
     def contract(df: DataFrame): DataFrame = df
       .as[(Long, Long)]
-      .mapPartitions { it =>
-        val parent = new java.util.HashMap[Long, Long]()
-        def find(x0: Long): Long = {
-          var x = x0
-          var p = parent.getOrDefault(x, x)
-          while (p != x) { // path halving
-            val gp = parent.getOrDefault(p, p)
-            parent.put(x, gp)
-            x = gp
-            p = parent.getOrDefault(x, x)
-          }
-          x
-        }
-        it.foreach { case (s, d) =>
-          val rs = find(s); val rd = find(d)
-          if (rs != rd) { // union by min id keeps labels canonical-ish
-            if (rs < rd) parent.put(rd, rs) else parent.put(rs, rd)
-          }
-          if (!parent.containsKey(s)) parent.put(s, find(s))
-          if (!parent.containsKey(d)) parent.put(d, find(d))
-        }
-        val out = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-        parent.keySet().forEach { n =>
-          val r = find(n)
-          if (r != n) out += ((n, r))
-        }
-        out.iterator
-      }.toDF("src", "dst")
+      .mapPartitions(it => minRoots(it).filter { case (n, r) => r != n })
+      .toDF("src", "dst")
 
     val contracted = contract(edges
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))

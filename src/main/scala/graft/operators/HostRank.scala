@@ -60,25 +60,14 @@ import org.apache.spark.sql.functions._
   * are refreshed per cycle, not run to numeric fixpoint). */
 object HostRank {
 
-  /** `narrowCap`: edge-count gate for the narrowed-session loop
-    * profile — a default parameter (r18, the NnDescent.build
-    * convention; the r17 mutable-var test seam was racy global state
-    * if operators ever run concurrently in one JVM). `driverCap`:
-    * edge-count gate below which the recurrence runs as ONE local
-    * loop on the driver (r18 — the CorpusIncrement local-union-find
-    * precedent): a sub-cap graph is a few MB of longs, and the
-    * distributed loop's cost there is pure job-launch latency
-    * (~3 scheduled jobs per iteration). The local loop executes the
-    * SAME integer fixed-point recurrence — long sums are exact and
-    * order-independent, so the result is bit-identical
-    * (ProfileParitySpec pins all three profiles against each other);
-    * larger graphs take the narrowed-session or full-width loop
-    * unchanged. */
+  /** Runs on the driver, a narrowed clone or at caller width by
+    * [[Rounds.profile]] over max(edges, warm-seed rows); the driver
+    * twin executes the SAME integer fixed-point recurrence — long sums
+    * are exact and order-independent, so every profile is
+    * bit-identical (ProfileParitySpec). */
   def pageRank(edges: DataFrame, iters: Int, dampingPct: Int = 85,
-               scale: Long = 1000000000L,
-               narrowCap: Long = 2000000L,
-               driverCap: Long = 500000L): DataFrame =
-    solve(edges, iters, dampingPct, scale, warm = None, narrowCap, driverCap)
+               scale: Long = 1000000000L): DataFrame =
+    solve(edges, iters, dampingPct, scale, warm = None)
 
   /** REFRESH-CYCLE warm start — the honest incremental form of a
     * GLOBAL recurrence. Exact increments do not compose here, and
@@ -105,15 +94,11 @@ object HostRank {
     * seed's total mass is bounded by the previous cycle's node count,
     * hence the max(n, nPrev) require). */
   def refresh(edges: DataFrame, prevRanks: DataFrame, iters: Int,
-              dampingPct: Int = 85, scale: Long = 1000000000L,
-              narrowCap: Long = 2000000L,
-              driverCap: Long = 500000L): DataFrame =
-    solve(edges, iters, dampingPct, scale, warm = Some(prevRanks), narrowCap,
-      driverCap)
+              dampingPct: Int = 85, scale: Long = 1000000000L): DataFrame =
+    solve(edges, iters, dampingPct, scale, warm = Some(prevRanks))
 
   private def solve(edges: DataFrame, iters: Int, dampingPct: Int,
-                    scale: Long, warm: Option[DataFrame],
-                    narrowCap: Long, driverCap: Long): DataFrame = {
+                    scale: Long, warm: Option[DataFrame]): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
     require(scale >= 100, "scale too small to carry rank mass")
@@ -127,37 +112,26 @@ object HostRank {
     // is ONE join against ranks instead of two
     val eo0 = e0.join(outdeg0, "src").persist(lvl)
     // materializing eo here (it is the first round's join input either
-    // way) yields the edge count m for the small-loop gates below
+    // way) yields the edge count m for the profile
     val m = eo0.count()
     // the warm seed's row count bounds its total mass (see nBound); it
-    // also gates the local path — a corpus-scale seed never collects
+    // also sizes the profile — a corpus-scale seed never collects
     val warmN = warm.map(_.count()).getOrElse(0L)
-    if (m <= driverCap && warmN <= driverCap) {
+    val callerSpark = edges.sparkSession
+    val p = Rounds.profile(math.max(m, warmN), hasLocal = true)
+    if (p == Rounds.Local) {
       val eo = eo0.collect()
       eo0.unpersist(blocking = false)
       val seed = new java.util.HashMap[Long, Long]()
       warm.foreach(_.select(col("node").cast("long"), col("rank").cast("long"))
         .collect().foreach(r => seed.put(r.getLong(0), r.getLong(1))))
-      return solveLocal(edges.sparkSession, eo, seed, iters, dampingPct,
-        scale, warmN)
+      return solveLocal(callerSpark, eo, seed, iters, dampingPct, scale,
+        warmN)
     }
-    // ---- small-graph execution profile (r17, the Rounds.narrowSession
-    // pattern): a round's data volume is bounded by the edge list, so
-    // when m fits a handful of partitions, the loop runs on the
-    // narrowed clone — host/domain graphs are typically millions of
-    // nodes even when the corpus is 100 TB, so the per-round fixed
-    // costs (corpus-width exchanges, AQE replans, iters times over)
-    // dominate the actual data movement. Bigger graphs keep the
-    // caller's width; the returned plan re-roots on the caller's
-    // session either way.
-    val callerSpark = edges.sparkSession
-    val narrow = m <= narrowCap
-    val sx = if (narrow) Rounds.narrowSession(callerSpark) else callerSpark
-    def onSx(df: DataFrame): DataFrame =
-      if (narrow) org.apache.spark.sql.GraftBridge.onSession(sx, df) else df
-    val e = onSx(e0)
-    val outdeg = onSx(outdeg0)
-    val eo = onSx(eo0)
+    val loop = Rounds.session(callerSpark, p)
+    val e = loop.bind(e0)
+    val outdeg = loop.bind(outdeg0)
+    val eo = loop.bind(eo0)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().persist(lvl)
     val dangIds = nodes.join(outdeg, nodes("node") === outdeg("src"),
@@ -211,9 +185,9 @@ object HostRank {
     * distributed plan's BIGINT expression bit for bit — `div` on
     * non-negative longs is Java `/`, sums of longs are exact in any
     * order — so the emitted (node, rank) rows equal the distributed
-    * loop's exactly (ProfileParitySpec). Gated by the caller on edge
-    * and warm-seed counts, so memory is bounded by `driverCap` rows
-    * of three longs. */
+    * loop's exactly (ProfileParitySpec). Taken only under the `Local`
+    * profile, so memory is bounded by [[Rounds.LocalRows]] rows of
+    * three longs. */
   private def solveLocal(spark: org.apache.spark.sql.SparkSession,
                          eo: Array[org.apache.spark.sql.Row],
                          seed: java.util.HashMap[Long, Long],

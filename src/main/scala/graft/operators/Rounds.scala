@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.storage.StorageLevel
 
@@ -10,14 +10,15 @@ import org.apache.spark.storage.StorageLevel
   * re-rooting on a persisted InternalRow RDD, keeping Catalyst's
   * optimization time constant per round instead of geometric in the
   * round count, with the block lifecycle under caller control (unlike
-  * `localCheckpoint`, whose blocks only GC frees). */
+  * `localCheckpoint`, whose blocks only GC frees) — and the one size
+  * policy ([[Profile]]) that decides where such a loop runs. */
 private[graft] object Rounds {
   /** UnsafeRows are reused by the scanner, so copy before persisting
     * (the localCheckpoint trick). */
   def materialize(df: DataFrame, lvl: StorageLevel)
       : (DataFrame, RDD[InternalRow]) = {
     val rdd = df.queryExecution.toRdd.map(_.copy()).persist(lvl)
-    (org.apache.spark.sql.GraftBridge.internalDF(df.sparkSession, rdd, df.schema), rdd)
+    (GraftBridge.internalDF(df.sparkSession, rdd, df.schema), rdd)
   }
 
   /** [[materialize]] + an exact row count matching `pred`, in ONE
@@ -37,25 +38,71 @@ private[graft] object Rounds {
       .mapPartitions(it => Iterator.single(it.count(pred).toLong),
         preservesPartitioning = true)
       .collect().sum
-    (org.apache.spark.sql.GraftBridge.internalDF(df.sparkSession, rdd,
-      df.schema), rdd, matched)
+    (GraftBridge.internalDF(df.sparkSession, rdd, df.schema), rdd, matched)
   }
 
-  /** Small-loop execution profile (r17 — the NnDescent r15 pattern
-    * generalized): a CLONED session (`newSession`: same SparkContext
-    * and caches, its own SQLConf) narrowed to `parts` shuffle
-    * partitions with AQE off, for iterative loops whose per-round data
-    * volume is measured-small — there, corpus-width shuffles and AQE's
-    * per-stage replanning are pure driver latency multiplied by the
-    * round count. Callers gate on a MEASURED size (node/edge/corpus
-    * counts they already take), keep their own session above the gate,
-    * and re-root the returned plan on the caller's session so
-    * downstream consumption plans at full width. Physical knobs only —
-    * results are bit-identical either way. */
-  def narrowSession(spark: org.apache.spark.sql.SparkSession,
-                    parts: Int = 8): org.apache.spark.sql.SparkSession = {
+  /** Where an iterative loop runs — the ONE size policy the
+    * iterative operators share (HostRank, GraphSearch's walk,
+    * NnDescent's build and insert, CorpusIncrement's middle phase and
+    * touched-subgraph union-find). Each loop passes a row count it
+    * already holds (no extra job) to [[profile]]:
+    *  - `Local`: at most [[LocalRows]] rows and the loop has a driver
+    *    twin — the whole state is a few MB, while the distributed loop
+    *    costs several scheduled jobs per round of pure launch latency.
+    *    The twin runs the identical recurrence with the identical
+    *    kernels, so its rows are bit-identical;
+    *  - `Narrow`: at most [[NarrowRows]] rows — the loop plans on a
+    *    CLONED session (`newSession`: same SparkContext and caches,
+    *    its own SQLConf) narrowed to 8 shuffle partitions with AQE
+    *    off, where corpus-width shuffles and AQE's per-stage replans
+    *    would be driver latency times the round count. The fixed width
+    *    is measured: `TopKEdges`' map-side partials weaken with width
+    *    (r18: NnDescent widened to ~21 partitions read 9.1 s vs 6.4 s);
+    *  - `Wide`: the caller's session, width and skew handling.
+    * Every profile is a physical choice only — results are
+    * bit-identical (ProfileParitySpec), and a loop's returned plan
+    * re-roots on the caller's session so downstream consumers plan at
+    * the caller's width. Decisions are taken on the caller's thread. */
+  sealed abstract class Profile
+  case object Local extends Profile
+  case object Narrow extends Profile
+  case object Wide extends Profile
+
+  val LocalRows = 500000L
+  val NarrowRows = 2000000L
+
+  private val forced = new scala.util.DynamicVariable[Option[Profile]](None)
+
+  /** Run `body` with every [[profile]] decision on this thread forced
+    * to `p` (`Local` reads as `Narrow` for loops without a driver
+    * twin) — the parity specs' seam, scoped to the block. */
+  def forcing[T](p: Profile)(body: => T): T = forced.withValue(Some(p))(body)
+
+  def profile(rows: Long, hasLocal: Boolean): Profile = forced.value match {
+    case Some(Local) if !hasLocal => Narrow
+    case Some(p) => p
+    case None =>
+      if (hasLocal && rows <= LocalRows) Local
+      else if (rows <= NarrowRows) Narrow
+      else Wide
+  }
+
+  /** The session a loop of profile `p` plans on: the narrowed clone
+    * unless `p` is `Wide` (a `Local` loop's residual plans, such as
+    * GraphSearch's entry collects, run there too). */
+  final class LoopSession private[Rounds] (caller: SparkSession,
+                                           val spark: SparkSession) {
+    /** `df` re-bound to the loop's session (identity at caller width). */
+    def bind(df: DataFrame): DataFrame =
+      if (spark eq caller) df else GraftBridge.onSession(spark, df)
+  }
+
+  def session(caller: SparkSession, p: Profile): LoopSession =
+    new LoopSession(caller, if (p == Wide) caller else narrowSession(caller))
+
+  private def narrowSession(spark: SparkSession): SparkSession = {
     val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    s2.conf.set("spark.sql.shuffle.partitions", "8")
     s2.conf.set("spark.sql.adaptive.enabled", "false")
     // broadcast builds over LOCALIZED relations still run one scheduled
     // job (SparkPlan.executeCollectIterator is an RDD collect even for
@@ -70,6 +117,12 @@ private[graft] object Rounds {
     // CPU (r18: the NnDescent local join + score joins sort millions
     // of 8-byte pairs per round at width 8)
     s2.conf.set("spark.sql.join.preferSortMergeJoin", "false")
+    // the clone's file-status cache starts cold and every pruned read
+    // lists explicit leaf files; above the default 32-path threshold
+    // Spark runs each listing as a distributed JOB — pure launch
+    // latency at loop grain. Keep listings driver-side (metadata-only).
+    s2.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
+      "10000")
     s2
   }
 }

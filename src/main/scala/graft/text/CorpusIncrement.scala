@@ -152,8 +152,8 @@ object CorpusIncrement {
     private val dropped = scala.collection.mutable.Set.empty[String]
 
     /** The session [[table]] plans on — the increment points it at
-      * its narrowed CLONE for the batch-grain middle phase and back
-      * at the caller's session for the returned assembly. */
+      * its profile's session for the batch-grain middle phase and
+      * back at the caller's session for the returned assembly. */
     private var cur: SparkSession = spark
     def useSession(s: SparkSession): Unit = { cur = s }
 
@@ -584,31 +584,11 @@ object CorpusIncrement {
 
     // ---- increment-grain execution profile: from here to the publish
     // every stage carries BATCH-sized data (bounded-batch contract) or
-    // a batch-pruned sliver of the store, where a corpus-sized shuffle
-    // width is pure task-scheduling latency and AQE's per-stage
-    // replanning adds a driver round-trip per stage with nothing to
-    // re-plan. For small batches the middle phase runs on a CLONED
-    // session (`newSession`: same SparkContext, block manager, and
-    // caches — its own SQLConf) narrowed to 8 shuffle partitions with
-    // AQE off; r15: the clone replaces the r14 mutate-and-restore of
-    // the SHARED session's conf, whose window a concurrent query
-    // planned on the same SparkSession would have inherited. Physical-
-    // execution knobs only, the output is bit-identical, and the
-    // returned assembly re-roots on the caller's session (full width).
-    // Large batches keep the caller session throughout (AQE skew
-    // handling intact).
-    val narrow = nBatch <= 200000L
-    val sx = if (narrow) {
-      val s2 = Rounds.narrowSession(spark)
-      // the clone's file-status cache starts cold and every pruned
-      // read lists explicit leaf files; above the default 32-path
-      // threshold Spark runs each listing as a distributed JOB —
-      // pure launch latency at increment grain. Keep listings
-      // driver-side on the clone (hundreds of paths, metadata-only).
-      s2.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        "10000")
-      s2
-    } else spark
+    // a batch-pruned sliver of the store, so the middle phase runs on
+    // the [[Rounds.profile]] session for the batch rows; the returned
+    // assembly re-roots on the caller's session (full width).
+    val sx = Rounds.session(spark, Rounds.profile(nBatch, hasLocal = false))
+      .spark
     st.useSession(sx)
     val bxN = org.apache.spark.sql.GraftBridge.internalDF(
       sx, bxRdd, bx.schema)
@@ -798,6 +778,12 @@ object CorpusIncrement {
     val (se, seRdd) = Rounds.materialize(
       fp.join(broadcast(subNodes.toDF("d1")), Seq("d1"), "left_semi"), lvl)
     val nSub = seRdd.count()
+    // solve the touched subgraph where it lives: an increment-grain
+    // splice is usually a few thousand edges, for which the distributed
+    // star rounds cost ~10 job launches of pure overhead — under the
+    // Local profile one collect + the driver union-find replaces them,
+    // emitting the same (node, min-id component) labels bit-for-bit
+    val localSolve = Rounds.profile(nSub, hasLocal = true) == Rounds.Local
     // the replacement pair graph, labels, and meta land as FRESH part
     // subtrees whose lines supersede the old ones in the same
     // generation — fresh paths, so no write overwrites a path its own
@@ -815,40 +801,15 @@ object CorpusIncrement {
     inParallel(Seq(
       () => fp.write.parquet(s"$dir/$relPr"),
       () => {
-        // solve the touched subgraph where it lives: an increment-
-        // grain splice is usually a few thousand edges, for which the
-        // distributed star rounds cost ~10 job launches of pure
-        // overhead — below an explicit driver-size cap (500k edges ≈
-        // tens of MB) one collect + a local union-find replaces them,
-        // emitting the same (node, min-id component) labels
-        // bit-for-bit; past the cap the distributed path takes over
-        // unchanged
         val subLabels =
           if (nSub == 0) {
             import spark.implicits._
             Seq.empty[(Long, Long)].toDF("node", "component")
-          } else if (nSub <= 500000L) {
+          } else if (localSolve) {
             import spark.implicits._
-            val es = se.select(col("d1"), col("d2")).as[(Long, Long)].collect()
-            val parent = new java.util.HashMap[Long, Long]()
-            def find(a: Long): Long = {
-              var x = a
-              while (parent.getOrDefault(x, x) != x) {
-                parent.put(x,
-                  parent.getOrDefault(parent.get(x), parent.get(x)))
-                x = parent.get(x)
-              }
-              x
-            }
-            es.foreach { case (a, b) =>
-              val (ra, rb) = (find(a), find(b))
-              if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-            }
-            val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
-            // root compression gives min-id labels directly: unions
-            // always point the larger root at the smaller, so every
-            // chain ends at its component's minimum id
-            nodes.map(n => (n, find(n))).toSeq.toDF("node", "component")
+            ConnectedComponents.minRoots(
+                se.select(col("d1"), col("d2")).as[(Long, Long)].collect().iterator)
+              .toSeq.toDF("node", "component")
           } else
             // size the CC rounds to the subgraph: big graphs get a
             // partition per ~1M edges

@@ -56,21 +56,16 @@ object GraphSearch {
     */
   def topK(graph: DataFrame, corpus: DataFrame, queries: DataFrame,
            k: Int, beam: Int, maxHops: Int = 10,
-           seed: Long = 42L, narrowCap: Long = 2000000L,
-           driverCap: Long = 1000000L): DataFrame =
-    topKWithHops(graph, corpus, queries, k, beam, maxHops, seed,
-      narrowCap, driverCap)._1
+           seed: Long = 42L): DataFrame =
+    topKWithHops(graph, corpus, queries, k, beam, maxHops, seed)._1
 
   /** [[topK]] plus the number of hops the walk ran — the spec's
     * measurement surface. */
   private[graft] def topKWithHops(graph: DataFrame, corpus: DataFrame,
                                   queries: DataFrame, k: Int, beam: Int,
-                                  maxHops: Int = 10, seed: Long = 42L,
-                                  narrowCap: Long = 2000000L,
-                                  driverCap: Long = 1000000L)
+                                  maxHops: Int = 10, seed: Long = 42L)
       : (DataFrame, Int) =
-    walk(graph, corpus, queries, k, beam, maxHops, narrowCap,
-      driverCap = driverCap, entryCand = (v, q) => {
+    walk(graph, corpus, queries, k, beam, maxHops, entryCand = (v, q) => {
       // deterministic global entry set, shared by every query
       val entries = v.select(col("node"))
         .orderBy(xxhash64(lit(seed), col("node")), col("node"))
@@ -98,22 +93,18 @@ object GraphSearch {
     * nothing (tiny corpora). Bit-deterministic either way. */
   def topKHier(graph: DataFrame, corpus: DataFrame, queries: DataFrame,
                k: Int, beam: Int, fanout: Int = 32, maxHops: Int = 10,
-               seed: Long = 42L, narrowCap: Long = 2000000L,
-               driverCap: Long = 1000000L): DataFrame =
+               seed: Long = 42L): DataFrame =
     topKHierWithHops(graph, corpus, queries, k, beam, fanout, maxHops,
-      seed, narrowCap, driverCap)._1
+      seed)._1
 
   /** [[topKHier]] plus the hop count, for the spec's measurement. */
   private[graft] def topKHierWithHops(graph: DataFrame, corpus: DataFrame,
                                       queries: DataFrame, k: Int, beam: Int,
                                       fanout: Int = 32, maxHops: Int = 10,
-                                      seed: Long = 42L,
-                                      narrowCap: Long = 2000000L,
-                                      driverCap: Long = 1000000L)
+                                      seed: Long = 42L)
       : (DataFrame, Int) = {
     require(fanout >= 1, "fanout must be >= 1")
-    walk(graph, corpus, queries, k, beam, maxHops, narrowCap,
-      driverCap = driverCap, entryCand = (v, q) => {
+    walk(graph, corpus, queries, k, beam, maxHops, entryCand = (v, q) => {
       val layer = v.select(col("node"))
         .filter(pmod(xxhash64(lit(seed + 1), col("node")), lit(fanout))
           === 0)
@@ -179,10 +170,9 @@ object GraphSearch {
   def topKLayered(graph: DataFrame, layerGraphs: Seq[DataFrame],
                   corpus: DataFrame, queries: DataFrame, k: Int, beam: Int,
                   fanout: Int, entryBeam: Int = 4, maxHops: Int = 10,
-                  seed: Long = 42L, narrowCap: Long = 2000000L,
-                  driverCap: Long = 1000000L): DataFrame =
+                  seed: Long = 42L): DataFrame =
     topKLayeredWithHops(graph, layerGraphs, corpus, queries, k, beam,
-      fanout, entryBeam, maxHops, seed, narrowCap, driverCap)._1
+      fanout, entryBeam, maxHops, seed)._1
 
   /** [[topKLayered]] plus per-phase hop counts (top-down, layer 0
     * last) — the spec's measurement surface. `entryBeam` is the
@@ -195,9 +185,7 @@ object GraphSearch {
                                          corpus: DataFrame, queries: DataFrame,
                                          k: Int, beam: Int, fanout: Int,
                                          entryBeam: Int = 4,
-                                         maxHops: Int = 10, seed: Long = 42L,
-                                         narrowCap: Long = 2000000L,
-                                         driverCap: Long = 1000000L)
+                                         maxHops: Int = 10, seed: Long = 42L)
       : (DataFrame, Seq[Int]) = {
     require(layerGraphs.nonEmpty, "need at least one layer graph")
     require(entryBeam >= 1, "entryBeam must be >= 1")
@@ -206,8 +194,7 @@ object GraphSearch {
     // top layer: exhaustive scan (it is built to be scan-cheap)
     var (entries, h0) = walk(layerGraphs.last,
       corpus.filter(member(top, fanout, seed)(col("vec_id"))), queries,
-      k = entryBeam, beam = entryBeam, maxHops = 1, narrowCap,
-      driverCap = driverCap, entryCand = (v, q) =>
+      k = entryBeam, beam = entryBeam, maxHops = 1, entryCand = (v, q) =>
         q.select(col("q_id")).crossJoin(v.select(col("node"))))
     hops += h0
     // descend: each layer's walk is seeded by the layer above
@@ -215,14 +202,14 @@ object GraphSearch {
       val seedEntries = entries.select(col("q_id"), col("n_id").as("node"))
       val (e2, h) = walk(layerGraphs(l - 1),
         corpus.filter(member(l, fanout, seed)(col("vec_id"))), queries,
-        k = entryBeam, beam = entryBeam, maxHops = maxHops, narrowCap,
-        driverCap = driverCap, entryCand = (_, _) => seedEntries)
+        k = entryBeam, beam = entryBeam, maxHops = maxHops,
+        entryCand = (_, _) => seedEntries)
       entries = e2
       hops += h
     }
     val seedEntries = entries.select(col("q_id"), col("n_id").as("node"))
-    val (out, hL) = walk(graph, corpus, queries, k, beam, maxHops, narrowCap,
-      driverCap = driverCap, entryCand = (_, _) => seedEntries)
+    val (out, hL) = walk(graph, corpus, queries, k, beam, maxHops,
+      entryCand = (_, _) => seedEntries)
     hops += hL
     (out, hops.result())
   }
@@ -235,10 +222,9 @@ object GraphSearch {
     * state — no extra scan). Returns (ranked top-k, hops the loop
     * ran). */
   private def walk(graph: DataFrame, corpus: DataFrame, queries: DataFrame,
-                   k: Int, beam: Int, maxHops: Int, narrowCap: Long,
+                   k: Int, beam: Int, maxHops: Int,
                    entryCand: (DataFrame, DataFrame) => DataFrame,
-                   fallback: Option[(DataFrame, DataFrame) => DataFrame] = None,
-                   driverCap: Long = 1000000L)
+                   fallback: Option[(DataFrame, DataFrame) => DataFrame] = None)
       : (DataFrame, Int) = {
     require(k >= 1, "k must be >= 1")
     require(beam >= k, s"beam ($beam) must be >= k ($k)")
@@ -253,27 +239,18 @@ object GraphSearch {
       .distinct()
       .persist(lvl)
     // materializing the adjacency here (every hop joins it anyway)
-    // yields the edge count for the small-loop gate: per-hop candidate
-    // volume is bounded by frontier·degree and the hop stages re-read
-    // this edge list, so when it fits a handful of partitions the walk
-    // runs on the narrowed clone (r17, the Rounds.narrowSession
-    // pattern) — serving walks over small-to-medium graphs otherwise
-    // pay corpus-width exchanges + AQE replanning per hop, times the
-    // hop count. Larger graphs keep the caller's width; the returned
-    // plan re-roots on the caller's session either way.
+    // yields the edge count for the profile: per-hop candidate volume
+    // is bounded by frontier·degree and the hop stages re-read this
+    // edge list; the vector table sizes a driver walk too
     val nEdges = adj0.count()
-    val narrow = nEdges <= narrowCap
-    val sx =
-      if (narrow) graft.operators.Rounds.narrowSession(callerSpark)
-      else callerSpark
-    def onSx(df: DataFrame): DataFrame =
-      if (narrow) org.apache.spark.sql.GraftBridge.onSession(sx, df) else df
-    val adj = onSx(adj0)
-
     val vc = corpus.select(col("vec_id").as("node"), col("embedding"),
         Similarity.norm(col("embedding")).as("nrm"))
       .persist(lvl)
-    val v = onSx(vc)
+    val vCount = if (nEdges <= Rounds.LocalRows) vc.count() else 0L
+    val p = Rounds.profile(math.max(nEdges, vCount), hasLocal = true)
+    val loop = Rounds.session(callerSpark, p)
+    val adj = loop.bind(adj0)
+    val v = loop.bind(vc)
     // the query batch is driver-sized by contract and its broadcast is
     // rebuilt by EVERY hop's plan — collect it ONCE into a
     // LocalRelation (r17), so each hop's broadcast build is a
@@ -285,25 +262,20 @@ object GraphSearch {
     val qRows = qProj.collect()
     val qLocal = callerSpark.createDataFrame(
       java.util.Arrays.asList(qRows: _*), qProj.schema)
-    val q = broadcast(onSx(qLocal))
+    val q = broadcast(loop.bind(qLocal))
 
-    // ---- DRIVER-LOCAL hop loop (r18 — the HostRank/CorpusIncrement
-    // local-solve precedent at this operator's grain): below the
-    // driver caps the whole walk state is a few MB — the vector table
-    // is ALREADY the broadcast build side of every hop's score join
-    // (driver-materialized each hop by definition) and the per-hop
-    // state is |queries|·beam rows — while the distributed loop costs
-    // ~4 scheduled jobs per hop of pure launch latency (measured:
-    // q_walk spent <2 s of its 3.9 s in stages). The local loop runs
-    // the identical recurrence with the identical kernels: entry
-    // candidates come from the UNCHANGED entryCand/fallback plans
-    // (collected — they are |queries|·entries slivers), sims call the
-    // same left-to-right double accumulation as [[DotProduct.compute]]
-    // on the same Spark-computed norms, and the beam re-selection IS
-    // [[graft.functions.TopKEdges.prune]] — so the emitted rows are
-    // bit-identical (ProfileParitySpec pins local == narrow == wide).
-    // Above the caps the distributed loop below runs unchanged.
-    if (nEdges <= driverCap && vc.count() <= 200000L) {
+    // ---- DRIVER-LOCAL hop loop (r18): under the Local profile the
+    // vector table is ALREADY the broadcast build side of every hop's
+    // score join and the per-hop state is |queries|·beam rows, while
+    // the distributed loop costs ~4 scheduled jobs per hop of pure
+    // launch latency (q_walk spent <2 s of its 3.9 s in stages). The
+    // driver loop runs the identical recurrence with the identical
+    // kernels: entry candidates come from the UNCHANGED entryCand/
+    // fallback plans (collected — they are |queries|·entries
+    // slivers), sims call the same left-to-right double accumulation
+    // as [[DotProduct.compute]] on the same Spark-computed norms, and
+    // the beam re-selection IS [[graft.functions.TopKEdges.prune]].
+    if (p == Rounds.Local) {
       val entries = entryCand(v, q).collect()
       val fb = fallback.map(f => () => f(v, q).collect())
       val out = walkLocal(callerSpark, adj0.collect(), vc.collect(), qRows,
@@ -331,8 +303,8 @@ object GraphSearch {
 
     // entry candidates may arrive from a caller-session frame (the
     // layered descent seeds); rebind so the whole walk — init included
-    // — plans on the narrowed clone when the gate chose it
-    val init = topBeam(score(onSx(entryCand(v, q))))
+    // — plans on the loop's session
+    val init = topBeam(score(loop.bind(entryCand(v, q))))
       .withColumn("exp", lit(false))
 
     // the init row count rides the materializing job (r17) — it is
@@ -343,7 +315,7 @@ object GraphSearch {
       if (nInit == 0L) { // e.g. the coarse layer sampled no nodes
         stateRdd.unpersist(blocking = false)
         val (s2, r2) = Rounds.materialize(
-          topBeam(score(onSx(fb(v, q)))).withColumn("exp", lit(false)), lvl)
+          topBeam(score(loop.bind(fb(v, q)))).withColumn("exp", lit(false)), lvl)
         state = s2
         stateRdd = r2
       }

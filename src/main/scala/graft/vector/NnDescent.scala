@@ -59,8 +59,7 @@ object NnDescent {
     * seen, which is k for any corpus with > k vectors). */
   def build(corpus: DataFrame, k: Int, maxRounds: Int = 10,
             convergedFrac: Double = 0.001, seed: Long = 42L,
-            overbuild: Int = 2,
-            narrowCap: Long = 50000000L): DataFrame = {
+            overbuild: Int = 2): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(maxRounds >= 1, "maxRounds must be >= 1")
     require(overbuild >= 1, "overbuild must be >= 1")
@@ -76,45 +75,24 @@ object NnDescent {
     val lvl = StorageLevel.MEMORY_AND_DISK
 
     // embeddings + norms: read by every round's scoring join
-    // (columnar-cached; the narrowed clone below sees the same cache
-    // through the shared CacheManager)
+    // (columnar-cached; a narrowed clone sees the same cache through
+    // the shared CacheManager)
     val v0 = corpus.select(col("vec_id"), col("embedding"),
         Similarity.norm(col("embedding")).as("nrm"))
       .persist(lvl)
     val n = v0.count()
     require(n > kb, s"corpus has $n vectors, need > overbuild*k=$kb")
 
-    // ---- small-corpus execution profile (the corpus-increment r14
-    // pattern): a round is ~8 narrow stages whose data volume is
-    // bounded by the local-join candidate count n·(2·kb)²; when that
-    // fits comfortably in a handful of partitions, corpus-width
-    // shuffles and AQE's per-stage replanning are pure driver latency
-    // multiplied by maxRounds. Under the 50M-candidate gate the build
-    // runs on a CLONED session (`newSession`: same SparkContext and
-    // caches, its own SQLConf) narrowed to 8 shuffle partitions with
-    // AQE off — r15: the clone replaces the r14 mutate-and-restore of
-    // the SHARED session's conf, whose window a concurrent query
-    // planned on the same SparkSession would have inherited. Physical
-    // knobs only; the build is bit-deterministic either way. Bigger
-    // corpora keep the caller session's own width and skew handling,
-    // and the RETURNED plan is re-rooted on the caller's session
-    // either way, so downstream consumption runs at full width.
-    val narrow = n * (2L * kb) * (2L * kb) <= narrowCap
-    // MEASURED NEGATIVE (r18, left for the record): widening the
-    // narrow profile proportionally to candidate volume (8 → ~21
-    // partitions at sf0.1's 3.2M-pair rounds) read 9.1 s vs 6.4 s and
-    // grew the build shuffle 52 → 74 MB — TopKEdges' map-side partial
-    // aggregation weakens with width (more ≤ kb partial buffers per id
-    // cross the exchange), exactly the effect the r17 fixed-8 profile
-    // exploits. The fixed width stays.
-    val sx = if (narrow) Rounds.narrowSession(spark) else spark
-    val v =
-      if (narrow) org.apache.spark.sql.GraftBridge.onSession(sx, v0) else v0
+    // a round's state is n·2kb adjacency rows (forward + capped
+    // reverse lists), the profile's size
+    val p = Rounds.profile(n * 2L * kb, hasLocal = false)
+    val loop = Rounds.session(spark, p)
+    val v = loop.bind(v0)
 
     // dense index 0..n-1 per vec_id (sorted => deterministic), for
     // uniform pseudo-random initial candidates; distributed sort +
     // zipWithIndex, never a single-partition window
-    import sx.implicits._
+    import loop.spark.implicits._
     val idmap = v.select(col("vec_id")).sort("vec_id")
       .as[Long].rdd.zipWithIndex.toDF("vec_id", "idx")
       .persist(lvl)
@@ -180,9 +158,9 @@ object NnDescent {
         .groupBy(col("id"), col("nbr")).agg(max(col("flag")).as("flag"))
       // local join: every neighbor pair of every node with at least
       // one NEW member — narrow 8-byte id pairs only. Under the
-      // narrow profile the candidate dedup exchange is SKIPPED (r17):
+      // Narrow profile the candidate dedup exchange is SKIPPED (r17):
       // there the scoring joins are broadcast (the cached vector
-      // table is driver-sized by the same gate), so duplicated
+      // table is driver-sized by the same profile), so duplicated
       // candidates cost only map-side re-scores that the bounded
       // topK aggregate dedups before its one exchange — the
       // distinct() was the round's dominant shuffle (the sf0.1
@@ -193,7 +171,7 @@ object NnDescent {
           col("a.id") === col("b.id") && col("a.nbr") < col("b.nbr")
             && (col("a.flag") || col("b.flag")))
         .select(col("a.nbr").as("id"), col("b.nbr").as("nbr"))
-      val scored = score(if (narrow) cand0 else cand0.distinct())
+      val scored = score(if (p == Rounds.Narrow) cand0 else cand0.distinct())
       val updates = scored.union(
           scored.select(col("nbr").as("id"), col("id").as("nbr"), col("sim")))
         .withColumn("old", lit(false))
@@ -330,33 +308,30 @@ object NnDescent {
       .select(col("vec_id"), (col("_p") + 1).as("rank"),
         col("_t.nbr").as("n_id"), col("_t.sim").as("sim"))
 
-    // ---- batch-grain tail profile (r18, the Rounds.narrowSession
-    // pattern): steps (3)-(4) below carry batch- and sliver-grain data
-    // only (newLists ≤ batch·(beam+2k) rows, touchedLists ≤ 2·batch·k),
-    // so at caller width their ~20 AQE stage-jobs were pure launch
-    // latency. Under the bounded-batch gate the two sliver plans bind
-    // to the narrowed clone and materialize on persisted RDDs
-    // (lazily — the caller's one action computes them), re-rooted on
-    // the caller's session; the corpus-scale untouched passthrough
-    // NEVER binds to the clone — it stays a caller-width map-only
-    // anti join. The touched set gets an explicit broadcast hint on
-    // the clone (AQE is off there; it is ≤ batch·k rows by the
-    // micro-batch contract — the wide path keeps AQE's own choice).
-    val narrow = nBatch <= 200000L
-    val sx =
-      if (narrow) graft.operators.Rounds.narrowSession(spark) else spark
-    def onSx(df: DataFrame): DataFrame =
-      if (narrow) org.apache.spark.sql.GraftBridge.onSession(sx, df) else df
+    // ---- batch-grain tail (r18): steps (3)-(4) below carry batch-
+    // and sliver-grain data only (newLists ≤ batch·(beam+2k) rows, the
+    // profile's size; touchedLists ≤ 2·batch·k), so at caller width
+    // their ~20 AQE stage-jobs were pure launch latency. Under the
+    // Narrow profile the two sliver plans bind to the clone and
+    // materialize on persisted RDDs (lazily — the caller's one action
+    // computes them), re-rooted on the caller's session; the
+    // corpus-scale untouched passthrough NEVER binds to the clone — it
+    // stays a caller-width map-only anti join. The touched set gets an
+    // explicit broadcast hint on the clone (AQE is off there; it is
+    // ≤ batch·k rows by the micro-batch contract — the wide path keeps
+    // AQE's own choice).
+    val p = Rounds.profile(nBatch * (bm + 2L * k), hasLocal = false)
+    val loop = Rounds.session(spark, p)
     def reroot(df: DataFrame): DataFrame =
-      if (narrow) {
-        val (_, rdd) = graft.operators.Rounds.materialize(df, lvl)
+      if (p == Rounds.Narrow) {
+        val (_, rdd) = Rounds.materialize(df, lvl)
         org.apache.spark.sql.GraftBridge.internalDF(spark, rdd, df.schema)
       } else df
 
     // (3) new-node lists: best k of cross ∪ internal ∪ reversed
     // internal (x→y within the batch proposes y→x too — sims are
     // symmetric and exact, the trim keeps whichever k win)
-    val newLists = reroot(rankTopK(onSx(searched
+    val newLists = reroot(rankTopK(loop.bind(searched
       .union(internal)
       .union(internal.select(col("nbr").as("id"), col("id").as("nbr"),
         col("sim"))))))
@@ -366,11 +341,11 @@ object NnDescent {
     val revProps = searched.select(col("nbr").as("id"), col("id").as("nbr"),
       col("sim"))
     val touched = revProps.select(col("id")).distinct()
-    val touchedB = if (narrow) broadcast(touched) else touched
+    val touchedB = if (p == Rounds.Narrow) broadcast(touched) else touched
     val touchedOld = graph.join(touchedB,
         graph("vec_id") === touchedB("id"))
       .select(col("vec_id").as("id"), col("n_id").as("nbr"), col("sim"))
-    val touchedLists = reroot(rankTopK(onSx(touchedOld.union(revProps))))
+    val touchedLists = reroot(rankTopK(loop.bind(touchedOld.union(revProps))))
 
     // untouched base rows ride through unchanged (rank and sim kept)
     // — on the CALLER's session: the passthrough is the corpus-scale

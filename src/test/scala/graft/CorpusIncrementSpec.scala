@@ -15,56 +15,11 @@ import graft.text.{CorpusBuild, CorpusIncrement}
   * a base-base pair and RESURRECTS a suppressed base doc. */
 class CorpusIncrementSpec extends SparkSpec {
   import spark.implicits._
-
-  private val evalDocs = Seq(
-    (1L, "quick brown fox jumps over the lazy sleeping dog tonight", "en", "ev"))
-
-  private val base = Seq(
-    // near-dup pair at J=0.5: 101 suppressed under canon 100
-    (100L, "the alpha beta gamma delta", "en", "s1"),
-    (101L, "the alpha beta gamma epsilon", "en", "s1"),
-    (102L, "the kappa lambda mu nu xi", "en", "s1"),
-    (103L, "the one two three four five", "en", "s1"),
-    // two clusters-to-be sharing one (in-band) shingle, J below 0.4
-    (104L, "the red green blue pink gold", "en", "s1"),
-    (105L, "the red green teal aqua jade", "en", "s1"),
-    // pair-less base doc: the enter-band target
-    (106L, "the apple mango peach plum berry", "en", "s1"),
-    // decon'd at build (shares an eval 8-gram)
-    (107L, "beta quick brown fox jumps over the lazy sleeping dog psi", "en", "s1"),
-    // in-base exact dup of 102
-    (108L, "the kappa lambda mu nu xi", "en", "s1"))
-
-  private val batch = Seq(
-    // exact dup of base 102 -> dropped
-    (1001L, "the kappa lambda mu nu xi", "en", "s1"),
-    // in-batch exact dup pair: 1002 kept, 1003 dropped
-    (1002L, "the rho sigma tau upsilon phi", "en", "s1"),
-    (1003L, "the rho sigma tau upsilon phi", "en", "s1"),
-    // quality-gate fail (2 tokens)
-    (1004L, "tiny text", "en", "s1"),
-    // near-dup of base 103 (J=0.6): suppressed under canon 103
-    (1005L, "the one two three four six", "en", "s1"),
-    // the BRIDGE: near-dups 104 AND 105 (J=4/9 each), merging their
-    // clusters -> canon 104, so base doc 105 LOSES its keep
-    (1006L, "the red green blue pink gold red green teal aqua jade", "en", "s1"),
-    // exit-band pair: two batch docs push df('alpha beta gamma') to 4
-    // (> maxDf 3) -> base pair (100,101) dies -> 101 RESURRECTS
-    (1010L, "the zeta alpha beta gamma", "en", "s1"),
-    (1011L, "the eta alpha beta gamma", "en", "s1"),
-    // enter-band pair: shingles at df_base=1 reach 2 -> NEW pair
-    // (106,1012) -> 1012 suppressed under canon 106
-    (1012L, "the apple mango peach plum cherry", "en", "s1"),
-    // decon casualty: carries an eval 8-gram verbatim
-    (1013L, "alpha quick brown fox jumps over the lazy sleeping dog omega", "en", "s1"),
-    // sampling casualty: lang xx is rated 0.0
-    (1014L, "the wibble wobble wubble flib flub", "xx", "s1"))
+  import CorpusIncrementSpec._
 
   private val cols = Seq("doc_id", "text", "lang", "source")
   private def df(rows: Seq[(Long, String, String, String)]): DataFrame =
     rows.toDF(cols: _*)
-
-  private val rates = Map("xx" -> 0.0)
 
   private def run(corpus: DataFrame, eval: DataFrame): Set[(Long, String, String)] =
     CorpusBuild.run(corpus, eval, shingleK = 3, threshold = 0.4, maxDf = 3L,
@@ -282,4 +237,53 @@ class CorpusIncrementSpec extends SparkSpec {
     assert(CorpusIncrement.assemble(spark, dir)
       .as[(Long, String, String)].collect().toSet == got)
   }
+}
+
+/** The planted-casualty corpus, shared with ProfileParitySpec. */
+object CorpusIncrementSpec {
+  val evalDocs = Seq(
+    (1L, "quick brown fox jumps over the lazy sleeping dog tonight", "en", "ev"))
+
+  val base = Seq(
+    // near-dup pair at J=0.5: 101 suppressed under canon 100
+    (100L, "the alpha beta gamma delta", "en", "s1"),
+    (101L, "the alpha beta gamma epsilon", "en", "s1"),
+    (102L, "the kappa lambda mu nu xi", "en", "s1"),
+    (103L, "the one two three four five", "en", "s1"),
+    // two clusters-to-be sharing one (in-band) shingle, J below 0.4
+    (104L, "the red green blue pink gold", "en", "s1"),
+    (105L, "the red green teal aqua jade", "en", "s1"),
+    // pair-less base doc: the enter-band target
+    (106L, "the apple mango peach plum berry", "en", "s1"),
+    // decon'd at build (shares an eval 8-gram)
+    (107L, "beta quick brown fox jumps over the lazy sleeping dog psi", "en", "s1"),
+    // in-base exact dup of 102
+    (108L, "the kappa lambda mu nu xi", "en", "s1"))
+
+  val batch = Seq(
+    // exact dup of base 102 -> dropped
+    (1001L, "the kappa lambda mu nu xi", "en", "s1"),
+    // in-batch exact dup pair: 1002 kept, 1003 dropped
+    (1002L, "the rho sigma tau upsilon phi", "en", "s1"),
+    (1003L, "the rho sigma tau upsilon phi", "en", "s1"),
+    // quality-gate fail (2 tokens)
+    (1004L, "tiny text", "en", "s1"),
+    // near-dup of base 103 (J=0.6): suppressed under canon 103
+    (1005L, "the one two three four six", "en", "s1"),
+    // the BRIDGE: near-dups 104 AND 105 (J=4/9 each), merging their
+    // clusters -> canon 104, so base doc 105 LOSES its keep
+    (1006L, "the red green blue pink gold red green teal aqua jade", "en", "s1"),
+    // exit-band pair: two batch docs push df('alpha beta gamma') to 4
+    // (> maxDf 3) -> base pair (100,101) dies -> 101 RESURRECTS
+    (1010L, "the zeta alpha beta gamma", "en", "s1"),
+    (1011L, "the eta alpha beta gamma", "en", "s1"),
+    // enter-band pair: shingles at df_base=1 reach 2 -> NEW pair
+    // (106,1012) -> 1012 suppressed under canon 106
+    (1012L, "the apple mango peach plum cherry", "en", "s1"),
+    // decon casualty: carries an eval 8-gram verbatim
+    (1013L, "alpha quick brown fox jumps over the lazy sleeping dog omega", "en", "s1"),
+    // sampling casualty: lang xx is rated 0.0
+    (1014L, "the wibble wobble wubble flib flub", "xx", "s1"))
+
+  val rates = Map("xx" -> 0.0)
 }
