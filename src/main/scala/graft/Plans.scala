@@ -58,7 +58,7 @@ object Plans {
       "q_incnear" -> "incremental near-dup against the corpus band index: ONE map-only signature pass per side, candidates from an EQUI-join on the 8-byte (band, bh) bucket key — only bucket collisions shuffle, corpus text never re-shingled — estimate as a codegen'd zip_with/aggregate over the carried signatures, dup_of by packed min_by",
       "q_profile" -> "one-pass data profiling: the stacked (column, value) explode feeds ONE map-side-combined value-grain count — the only full-data exchange; distincts, null mass, min/max and the top-k heads all aggregate that small table at column grain",
       "q_interact" -> "track interaction: grid-binned same-frame proximity join (equi-keys (f, cx, cy), 3x3 probe explode — no track-pair cross join), candidate pairs deduped on an EXPLICIT-width pair exchange (r17 — AQE's size-based coalescing packed the byte-tiny pair set and the whole CPU-dense phase 2 behind it onto one task), then ONLY the candidate sliver joins back to the persisted step series; decimal-quantized correlation sums aggregate map-side; the density fail-fast rides a broadcast join against the normally-empty overflow cells",
-      "q_nnd" -> "NN-descent K-NN graph: every round is equi-joins/aggs on node id only — reverse-capped adjacency self-join moves 8-byte id pairs, the per-round state trim is ONE bounded top-k aggregate (r17 TopKEdges: map-side partials collapse to k entries per node before the exchange; when Rounds.profile picks Narrow the candidate dedup exchange is skipped — broadcast re-scores are cheaper, and at Wide the distinct stays), state re-rooted on a persisted RDD per round, convergence counted by the materializing job itself",
+      "q_nnd" -> "NN-descent K-NN graph. When Rounds.profile picks Local (the n·2kb adjacency state within LocalRows: n ≤ 12 500 vectors at k = 10, which covers sf0.001-sf0.1) the descent runs on the driver after ONE count job (filling the vector cache) and ONE collect, with the distributed loop's kernels (Spark's XXH64 chain for the draws and reverse cap, DotProduct.compute, TopKEdges.prune per node), bit-identical (ProfileParitySpec), so the plan shown is the ranked LocalRelation, coalesced to one partition. Under Narrow or Wide every round is equi-joins/aggs on node id only — reverse-capped adjacency self-join moves 8-byte id pairs, the per-round state trim is ONE bounded top-k aggregate (r17 TopKEdges: map-side partials collapse to k entries per node before the exchange; at Narrow the candidate dedup exchange is skipped — broadcast re-scores are cheaper, and at Wide the distinct stays), state re-rooted on a persisted RDD per round, convergence counted by the materializing job itself",
       "q_walk" -> "graph-ANN serving: beam search over the PERSISTED K-NN graph. When Rounds.profile picks Local (r18 — both hop-join build sides were already driver-materialized per hop as broadcasts) the hop loop runs on the driver over the collected adjacency/vectors with the SAME kernels (DotProduct's accumulation order, TopKEdges.prune itself), bit-identical (ProfileParitySpec + an sf0.1 three-profile check), so the served plan at this SF is the ranked LocalRelation shown here after a handful of setup jobs. Under Narrow or Wide the r17 distributed hop shape is unchanged: per hop the frontier equi-joins the symmetrized 8-byte adjacency, embeddings join in for DISTINCT proposals only, the beam re-selection is ONE bounded top-k aggregate, state re-rooted per hop with the new-entrant count riding the materializing job",
       "q_rrf" -> "hybrid RRF retrieval: BM25's broadcast-filtered postings + bruteTopK's broadcast-query corpus scan each emit a |queries|*k ranked sliver; fusion is a union + one (query, doc) aggregate + one per-query window on slivers — corpus-independent",
       "q_gsplit" -> "leakage-safe grouped split: MAP-ONLY — the group key hashes per-row (PolyFingerprint mod 100), no group table, no join, no exchange anywhere in the plan",

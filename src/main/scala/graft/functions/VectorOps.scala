@@ -49,6 +49,20 @@ object DotProduct {
     }
     acc
   }
+
+  /** The same kernel over driver-side float arrays: the driver twins
+    * of the graph loops and the stream router score with it, so their
+    * sums are bit-equal to the codegen'd expression's. */
+  def compute(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      acc += a(i).toDouble * b(i).toDouble
+      i += 1
+    }
+    acc
+  }
 }
 
 /** All `tables` random-hyperplane LSH buckets of an embedding in ONE

@@ -50,7 +50,9 @@ private[graft] object Rounds {
     *    twin — the whole state is a few MB, while the distributed loop
     *    costs several scheduled jobs per round of pure launch latency.
     *    The twin runs the identical recurrence with the identical
-    *    kernels, so its rows are bit-identical;
+    *    kernels, so its rows are bit-identical. Loops with a twin:
+    *    HostRank, GraphSearch's walk, NnDescent's build and
+    *    CorpusIncrement's touched-subgraph union-find;
     *  - `Narrow`: at most [[NarrowRows]] rows — the loop plans on a
     *    CLONED session (`newSession`: same SparkContext and caches,
     *    its own SQLConf) narrowed to 8 shuffle partitions with AQE

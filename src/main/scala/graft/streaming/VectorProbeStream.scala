@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery}
 
+import graft.functions.DotProduct
 import graft.vector.Similarity
 
 /** One routed probe row: a query replicated to one IVF cell.
@@ -93,9 +94,9 @@ object VectorProbeStream {
     * append (write path): each vector to its `np` nearest cells by the
     * batch plan's geometry (argmin |c|^2 - 2 q.c, ties by cell), the
     * centroid table collected once and shipped as an explicit
-    * broadcast. Accumulation order matches the codegen'd DotProduct
-    * (floats widened to double, summed left to right), so routing
-    * scores are bit-equal to the batch plan's. */
+    * broadcast. The dot product is [[DotProduct.compute]], the kernel
+    * the codegen'd expression calls, so routing scores are bit-equal
+    * to the batch plan's. */
   private def route(queries: Dataset[VecAt], cents: DataFrame,
                     nprobe: Int): Dataset[RoutedVec] = {
     val spark = queries.sparkSession
@@ -115,15 +116,12 @@ object VectorProbeStream {
       require(q.embedding.length == cs(0)._2.length,
         s"arrival dim ${q.embedding.length} != index dim ${cs(0)._2.length} " +
           s"(vec_id ${q.vec_id})")
+      val qe = q.embedding.toArray
       val scored = new Array[(Double, Int)](cs.length)
       var ci = 0
       while (ci < cs.length) {
         val (cell, cEmb, cNorm2) = cs(ci)
-        val n = cEmb.length
-        var acc = 0.0
-        var i = 0
-        while (i < n) { acc += q.embedding(i).toDouble * cEmb(i).toDouble; i += 1 }
-        scored(ci) = (cNorm2 - 2.0 * acc, cell)
+        scored(ci) = (cNorm2 - 2.0 * DotProduct.compute(qe, cEmb), cell)
         ci += 1
       }
       scored.sortBy(identity).iterator.take(np)

@@ -375,9 +375,10 @@ object GraphSearch {
     * query batch (q_id, q_emb, q_nrm), and the UNSCORED entry
     * candidate pairs from the entry plan. Every step mirrors the
     * distributed loop operation for operation:
-    *  - sims are `DotProduct.compute`'s left-to-right double
-    *    accumulation over float arrays, divided by the collected
-    *    norms' product — the identical IEEE op sequence;
+    *  - sims are [[Similarity.cosineLocal]]: `DotProduct.compute`'s
+    *    left-to-right double accumulation over float arrays, divided
+    *    by the collected norms' product — the identical IEEE op
+    *    sequence, failing on a zero norm as ANSI division does;
     *  - the per-hop beam re-selection calls
     *    [[graft.functions.TopKEdges.prune]] itself (dedup by nbr with
     *    flag-OR over equal sims, trim to beam by (sim desc, nbr));
@@ -415,15 +416,6 @@ object GraphSearch {
       qNrm.put(r.getLong(0), r.getDouble(2))
       ()
     }
-    // DotProduct.compute's exact loop: double accumulation, left to
-    // right, over min-length
-    def dot(a: Array[Float], b: Array[Float]): Double = {
-      val n = math.min(a.length, b.length)
-      var acc = 0.0
-      var i = 0
-      while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-      acc
-    }
     // the score joins' row semantics: self-id filtered, inner joins
     // drop nodes/queries absent from their tables
     def score(qid: Long, node: Long): Option[TopKEdges.Entry] =
@@ -433,7 +425,8 @@ object GraphSearch {
         val qe = qEmb.get(qid)
         if (e == null || qe == null) None
         else Some(TopKEdges.Entry(node,
-          dot(qe, e) / (qNrm.get(qid) * vNrm.get(node)), flag = false))
+          Similarity.cosineLocal(qe, e, qNrm.get(qid) * vNrm.get(node)),
+          flag = false))
       }
 
     // init: score the entry pairs, rank by (sim desc, node), keep beam
@@ -479,26 +472,31 @@ object GraphSearch {
       hop += 1
     }
 
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("q_id",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.IntegerType, nullable = true),
-      org.apache.spark.sql.types.StructField("n_id",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("sim",
-        org.apache.spark.sql.types.DoubleType, nullable = true)))
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
     import scala.jdk.CollectionConverters._
-    state.entrySet().asScala.toSeq.sortBy(_.getKey.longValue()).foreach { ent =>
-      // the state is prune-ordered by (sim desc, nbr) already — the
-      // distributed tail's row_number over the same ordering
-      ent.getValue.take(k).zipWithIndex.foreach { case (e, i) =>
-        rows.add(org.apache.spark.sql.Row(ent.getKey.longValue(), i + 1,
-          e.nbr, e.sim))
+    (ranked(spark, "q_id", state.entrySet().asScala.toSeq
+      .sortBy(_.getKey.longValue())
+      .map(ent => (ent.getKey.longValue(), ent.getValue)), k), hop)
+  }
+
+  /** A driver twin's result as (`key`, rank, n_id, sim) rows on the
+    * caller's session. Each list is prune-ordered by (sim desc, nbr)
+    * already, so rank is list position — the distributed tails'
+    * row_number over the same ordering. */
+  private[vector] def ranked(spark: org.apache.spark.sql.SparkSession,
+                             key: String,
+                             lists: Seq[(Long, Seq[graft.functions.TopKEdges.Entry])],
+                             k: Int): DataFrame = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField(key, LongType),
+      StructField("rank", IntegerType), StructField("n_id", LongType),
+      StructField("sim", DoubleType)))
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    lists.foreach { case (id, es) =>
+      es.take(k).zipWithIndex.foreach { case (e, i) =>
+        rows.add(org.apache.spark.sql.Row(id, i + 1, e.nbr, e.sim))
         ()
       }
     }
-    (spark.createDataFrame(rows, schema), hop)
+    spark.createDataFrame(rows, schema)
   }
 }

@@ -22,8 +22,8 @@ import graft.operators.Rounds
   * cost is ~O(n^1.14) exact comparisons (the paper's result) versus
   * n² brute force.
   *
-  * Distributed shape — every step is an equi-join or aggregation on
-  * node id, no cross join anywhere:
+  * Distributed shape (the `Narrow` and `Wide` profiles) — every step
+  * is an equi-join or aggregation on node id, no cross join anywhere:
   *  - the adjacency state is `overbuild`·K rows per node; a round's
   *    local join is `lists SELF-JOIN on node id`, so candidate volume
   *    is bounded by n·(2·overbuild·K)² rows of 8-byte id pairs — the
@@ -39,6 +39,18 @@ import graft.operators.Rounds
   *    stays constant-size across rounds;
   *  - all randomness is xxhash64 of (seed, round, ids) — the build is
   *    bit-deterministic, same graph every run.
+  *
+  * Local shape — [[graft.operators.Rounds.profile]] picks `Local` when
+  * the n·2·`overbuild`·k adjacency state is within `Rounds.LocalRows`
+  * (n ≤ 12 500 vectors at k = 10, overbuild 2): one job counts the
+  * corpus (filling its cache), one collects (vec_id, embedding, norm),
+  * and the descent runs on the driver over dense indices with the
+  * same kernels — Spark's XXH64 chain for the draws and the reverse
+  * cap, `DotProduct.compute` for sims, `TopKEdges.prune` for every
+  * node's merge — so its rows are bit-identical to the distributed
+  * loop's (ProfileParitySpec). The graph comes back as a one-partition
+  * local relation on the caller's session. Memory is the state, n·2kb
+  * entries, never a round's candidate set.
   *
   * Convergence: the paper's termination counts UPDATES per round;
   * here a round's update count is the number of (node, neighbor)
@@ -59,7 +71,16 @@ object NnDescent {
     * seen, which is k for any corpus with > k vectors). */
   def build(corpus: DataFrame, k: Int, maxRounds: Int = 10,
             convergedFrac: Double = 0.001, seed: Long = 42L,
-            overbuild: Int = 2): DataFrame = {
+            overbuild: Int = 2): DataFrame =
+    buildWithRounds(corpus, k, maxRounds, convergedFrac, seed, overbuild)._1
+
+  /** [[build]] plus the number of rounds the descent ran — the spec's
+    * measurement surface. */
+  private[graft] def buildWithRounds(corpus: DataFrame, k: Int,
+                                     maxRounds: Int = 10,
+                                     convergedFrac: Double = 0.001,
+                                     seed: Long = 42L, overbuild: Int = 2)
+      : (DataFrame, Int) = {
     require(k >= 1, "k must be >= 1")
     require(maxRounds >= 1, "maxRounds must be >= 1")
     require(overbuild >= 1, "overbuild must be >= 1")
@@ -80,12 +101,21 @@ object NnDescent {
     val v0 = corpus.select(col("vec_id"), col("embedding"),
         Similarity.norm(col("embedding")).as("nrm"))
       .persist(lvl)
-    val n = v0.count()
+    // an RDD count over the persisted plan fills the cache in ONE job;
+    // Dataset.count() under AQE runs the cache stage plus a two-stage
+    // aggregate
+    val n = v0.queryExecution.toRdd.count()
     require(n > kb, s"corpus has $n vectors, need > overbuild*k=$kb")
 
     // a round's state is n·2kb adjacency rows (forward + capped
     // reverse lists), the profile's size
-    val p = Rounds.profile(n * 2L * kb, hasLocal = false)
+    val p = Rounds.profile(n * 2L * kb, hasLocal = true)
+    if (p == Rounds.Local) {
+      val rows = v0.select(col("vec_id").cast("long"), col("embedding"),
+        col("nrm")).collect()
+      v0.unpersist(blocking = false)
+      return buildLocal(spark, rows, k, kb, maxRounds, convergedFrac, seed)
+    }
     val loop = Rounds.session(spark, p)
     val v = loop.bind(v0)
 
@@ -195,13 +225,113 @@ object NnDescent {
     // caller drops the plan, the ConnectedComponents contract)
     idmap.unpersist(blocking = false)
     v0.unpersist(blocking = false)
-    org.apache.spark.sql.GraftBridge.internalDF(spark, knnRdd, knn.schema)
+    (org.apache.spark.sql.GraftBridge.internalDF(spark, knnRdd, knn.schema)
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("id"))
           .orderBy(col("sim").desc, col("nbr"))))
       .filter(col("rank") <= k)
       .select(col("id").as("vec_id"), col("rank"), col("nbr").as("n_id"),
-        col("sim"))
+        col("sim")), round)
+  }
+
+  /** The driver-local build (Local profile). `rows` are the collected
+    * (vec_id, embedding, nrm) table — the norms are the Spark-computed
+    * doubles. Every step is the distributed round's, over dense
+    * indices (position in sorted vec_id order, so index order IS id
+    * order and every (sim desc, nbr) tie breaks as it does on ids):
+    *  - init draws are the same `xxhash64(seed, idx, j)` chain through
+    *    Spark's own XXH64, `pmod` n-1, shifted past self;
+    *  - reverse lists keep each node's first kb proposers by
+    *    (`xxhash64(seed, round, nbr)`, nbr), forward and reverse
+    *    edges flag-ORed into one list per node;
+    *  - candidates are the list pairs a.nbr < b.nbr with a NEW member,
+    *    scored by [[Similarity.cosineLocal]] (the SQL `sim` kernel,
+    *    DIVIDE_BY_ZERO included) and offered to both endpoints;
+    *  - each node's merge is [[graft.functions.TopKEdges.prune]] over
+    *    its old state (old = true) and its updates, pruned every 2·kb
+    *    entries as the aggregator's `reduce` is — so memory stays
+    *    n·2kb entries, never a round's candidate set — and emitted
+    *    with flag = !old;
+    *  - `changed` counts flagged entries after the merge, stopping the
+    *    loop below convergedFrac·n·kb, or at maxRounds. */
+  private def buildLocal(spark: org.apache.spark.sql.SparkSession,
+                         rows: Array[org.apache.spark.sql.Row], k: Int,
+                         kb: Int, maxRounds: Int, convergedFrac: Double,
+                         seed: Long): (DataFrame, Int) = {
+    import graft.functions.TopKEdges
+    import graft.functions.TopKEdges.Entry
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    val sorted = rows.sortBy(_.getLong(0))
+    val n = sorted.length
+    val ids = sorted.map(_.getLong(0))
+    val emb = sorted.map(_.getSeq[Float](1).toArray)
+    val nrm = sorted.map(_.getDouble(2))
+    def sim(a: Int, b: Int): Double =
+      Similarity.cosineLocal(emb(a), emb(b), nrm(a) * nrm(b))
+    // xxhash64(lit(seed), ...) starts every chain at hashLong(seed, 42)
+    val seedH = XXH64.hashLong(seed, 42L)
+    // the aggregator's output: flag = !old (new this round)
+    def emit(es: Seq[Entry]) = es.map(e => e.copy(flag = !e.flag))
+
+    // state(a): node a's list, prune-ordered, nbr = dense index
+    val state = Array.tabulate(n) { a =>
+      val h = XXH64.hashLong(a.toLong, seedH)
+      emit(TopKEdges.prune((0 until kb).map { j =>
+        val c = java.lang.Math.floorMod(XXH64.hashInt(j, h), n - 1L).toInt
+        val b = if (c >= a) c + 1 else c
+        Entry(b, sim(a, b), flag = false)
+      }, kb))
+    }
+
+    var round = 0
+    var done = false
+    while (!done && round < maxRounds) {
+      val roundH = XXH64.hashInt(round, seedH)
+      val rev = Array.fill(n)(
+        scala.collection.mutable.ArrayBuffer[(Long, Int, Boolean)]())
+      for (a <- 0 until n; e <- state(a))
+        rev(e.nbr.toInt) += ((XXH64.hashLong(ids(a), roundH), a, e.flag))
+      val buf = Array.tabulate(n)(a => scala.collection.mutable.ArrayBuffer(
+        state(a).map(e => Entry(e.nbr, e.sim, flag = true)): _*))
+      def offer(a: Int, e: Entry): Unit = {
+        buf(a) += e
+        if (buf(a).length >= 2 * kb) {
+          val kept = TopKEdges.prune(buf(a).toSeq, kb)
+          buf(a).clear()
+          buf(a) ++= kept
+        }
+      }
+      for (u <- 0 until n) {
+        val list = scala.collection.mutable.LinkedHashMap[Int, Boolean]()
+        def add(nb: Int, flag: Boolean): Unit =
+          list(nb) = list.getOrElse(nb, false) || flag
+        state(u).foreach(e => add(e.nbr.toInt, e.flag))
+        rev(u).sortBy(r => (r._1, r._2)).take(kb).foreach(r => add(r._2, r._3))
+        val ls = list.toArray
+        for (i <- ls.indices; j <- ls.indices) {
+          val (x, fx) = ls(i)
+          val (y, fy) = ls(j)
+          if (x < y && (fx || fy)) {
+            val s = sim(x, y)
+            offer(x, Entry(y, s, flag = false))
+            offer(y, Entry(x, s, flag = false))
+          }
+        }
+      }
+      var changed = 0L
+      for (a <- 0 until n) {
+        state(a) = emit(TopKEdges.prune(buf(a).toSeq, kb))
+        changed += state(a).count(_.flag)
+      }
+      done = changed < convergedFrac * n * kb
+      round += 1
+    }
+    // one partition: a local relation splits into one slice per core,
+    // and every consumer of the graph (persist, insert's joins, a save)
+    // would run that many tasks over a driver-sized sliver
+    (GraphSearch.ranked(spark, "vec_id", (0 until n).map(a =>
+      (ids(a), state(a).map(e => e.copy(nbr = ids(e.nbr.toInt))))), k)
+      .coalesce(1), round)
   }
 
   /** INCREMENTAL insert: extend an existing K-NN `graph` over `base`

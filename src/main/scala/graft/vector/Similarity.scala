@@ -25,6 +25,16 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
+  /** `dot(a, b) / den` on the driver, as the loops' ANSI `sim`
+    * expression computes it: [[graft.functions.DotProduct.compute]]'s
+    * accumulation, and DIVIDE_BY_ZERO on a zero denominator (a
+    * zero-norm vector) instead of an Infinity or NaN sim. */
+  private[vector] def cosineLocal(a: Array[Float], b: Array[Float],
+                                  den: Double): Double = {
+    if (den == 0.0) throw org.apache.spark.sql.GraftBridge.divideByZero()
+    graft.functions.DotProduct.compute(a, b) / den
+  }
+
   /** Random-hyperplane LSH buckets: `tables` independent hash tables of
     * `planes` sign-projections each. Returns (vec_id, t, bucket).
     * Plane signs are deterministic ±1 from xxhash64 so buckets are

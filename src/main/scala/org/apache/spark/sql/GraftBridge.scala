@@ -18,6 +18,11 @@ object GraftBridge {
   def drainListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** The error ANSI `Divide` raises on a zero divisor, for driver-side
+    * kernels that must fail exactly where the SQL expression does. */
+  def divideByZero(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
+
   /** Re-bind a DataFrame's logical plan to another session of the
     * SAME SparkContext (the execution-profile clones): the plan —
     * including any persisted cache, which lives in the shared

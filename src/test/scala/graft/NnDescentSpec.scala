@@ -1,7 +1,12 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 
+import graft.operators.Rounds
 import graft.vector.{IndexStore, NnDescent, Similarity}
 
 class NnDescentSpec extends SparkSpec {
@@ -23,11 +28,38 @@ class NnDescentSpec extends SparkSpec {
   }
 
   test("the build is bit-deterministic") {
-    val a = NnDescent.build(emb, 4, maxRounds = 2).collect()
+    def run() = NnDescent.build(emb, 4, maxRounds = 2).collect()
       .map(_.toString).sorted.toSeq
-    val b = NnDescent.build(emb, 4, maxRounds = 2).collect()
-      .map(_.toString).sorted.toSeq
-    assert(a == b)
+    val a = run()
+    assert(run() == a)
+    // the default profile is Local at this size: the distributed loop
+    // must give the same graph, run after run
+    val narrow = Rounds.forcing(Rounds.Narrow)(run())
+    assert(narrow == a)
+    assert(Rounds.forcing(Rounds.Narrow)(run()) == narrow)
+  }
+
+  test("a default-profile build over 475 x 64-d vectors launches at " +
+    "most 3 jobs, the same count every rep") {
+    val rnd = new scala.util.Random(475)
+    val v = (0 until 475).map(i =>
+      (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val counts = (1 to 5).map { _ =>
+        GraftBridge.drainListeners(spark)
+        jobs.set(0)
+        NnDescent.build(v, k = 10)
+        GraftBridge.drainListeners(spark)
+        jobs.get
+      }
+      assert(counts.head <= 3 && counts.distinct.size == 1, counts)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("recall@10 against brute force on the real embeddings") {

@@ -31,6 +31,62 @@ class ProfileParitySpec extends SparkSpec {
     assert(narrow.nonEmpty)
   }
 
+  // the driver twin's fixture: 64-d points scattered around the
+  // all-ones direction, so the hub (the all-ones vector) is nearer to
+  // each than they are to each other — its reverse list far exceeds
+  // overbuild·k and the per-round cap bites — plus three exact copies
+  // of ten points (i, 1000+i, 2000+i), so sims tie and the nbr
+  // tie-break decides
+  private val hubId = 5000L
+  private lazy val hubVecs = {
+    val rnd = new scala.util.Random(150)
+    val pts = (0 until 150).map(i =>
+      (i.toLong, Array.fill(64)(1.0f + 2.0f * rnd.nextFloat() - 1.0f)))
+    val copies = for (c <- Seq(1000L, 2000L); i <- 0 until 10)
+      yield (c + i, pts(i)._2)
+    ((pts ++ copies) :+ ((hubId, Array.fill(64)(1.0f))))
+      .toDF("vec_id", "embedding")
+  }
+
+  test("NnDescent.build: local and distributed profiles are bit-identical") {
+    // (overbuild, convergedFrac, maxRounds): fixed round counts at
+    // overbuild 1 and 2, then a loose stop that ends the descent early
+    for ((ob, frac, rounds) <- Seq((1, 0.0, 3), (2, 0.0, 3), (2, 0.05, 8))) {
+      def run(p: Rounds.Profile) = Rounds.forcing(p) {
+        val (g, r) = NnDescent.buildWithRounds(hubVecs, k = 4,
+          maxRounds = rounds, convergedFrac = frac, overbuild = ob)
+        (g.as[(Long, Int, Long, Double)].collect().toSet, r)
+      }
+      val (local, lr) = run(Local)
+      val (narrow, nr) = run(Narrow)
+      val cfg = s"overbuild $ob, convergedFrac $frac"
+      assert(local == narrow, cfg)
+      assert(lr == nr, cfg)
+      assert(local.size == 171 * 4, cfg)
+      // the fixture exercises what it is for
+      assert(local.count(_._3 == hubId) > ob * 4, s"$cfg: hub under the cap")
+      assert(local.groupBy(r => (r._1, r._4)).exists(_._2.size > 1),
+        s"$cfg: no tied sims")
+      if (frac > 0) assert(lr > 1 && lr < rounds, s"$cfg: ran $lr rounds")
+    }
+  }
+
+  test("NnDescent.build: a zero-norm vector and a corpus of at most " +
+    "overbuild*k vectors fail alike on every profile") {
+    val zero = vecs(60).withColumn("embedding",
+      when(col("vec_id") === 7L, array((0 until 8).map(_ => lit(0.0f)): _*))
+        .otherwise(col("embedding")))
+    for (p <- Seq(Local, Narrow, Wide)) {
+      val e = intercept[ArithmeticException](Rounds.forcing(p)(
+        NnDescent.build(zero, k = 4, maxRounds = 2)))
+      assert(e.asInstanceOf[org.apache.spark.SparkThrowable].getCondition ==
+        "DIVIDE_BY_ZERO", p)
+      val small = intercept[IllegalArgumentException](Rounds.forcing(p)(
+        NnDescent.build(vecs(8), k = 4, maxRounds = 2)))
+      assert(small.getMessage.contains("corpus has 8 vectors"), p)
+    }
+  }
+
   test("GraphSearch.topK: local, narrow and wide profiles are " +
     "bit-identical") {
     val v = vecs(120)
@@ -118,6 +174,21 @@ class ProfileParitySpec extends SparkSpec {
     val wide = run(Wide)
     assert(wide == narrow)
     assert(narrow.map(_._1) == (0L until 140L).toSet)
+  }
+
+  test("NnDescent.insert over a Local-built graph equals insert over a " +
+    "Narrow-built graph") {
+    val v = vecs(140)
+    val base = v.filter(col("vec_id") < 120)
+    val batch = v.filter(col("vec_id") >= 120)
+    def graph(p: Rounds.Profile) =
+      Rounds.forcing(p)(NnDescent.build(base, k = 4, maxRounds = 3))
+    def insert(g: org.apache.spark.sql.DataFrame) =
+      NnDescent.insert(g, base, batch, k = 4)
+        .as[(Long, Int, Long, Double)].collect().toSet
+    val local = insert(graph(Local))
+    assert(local == insert(graph(Narrow)))
+    assert(local.map(_._1) == (0L until 140L).toSet)
   }
 
   // the planted-casualty corpus through build + increment under each
