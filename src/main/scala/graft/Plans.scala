@@ -68,7 +68,7 @@ object Plans {
       "q_quant" -> "int8 quantization: in-row absmax fold + in-row transform at (vec_id, dim) grain — map-only, no exchange anywhere",
       "q_vad" -> "voice-activity segmentation: the batched one-pass PCM decode, then ONE doc-grain window over the rms-gated sliver + one segment-grain aggregate — gaps-and-islands, never a dense self-join",
       "q_afp" -> "audio fingerprint dedup: per-asset collect bounded at bits+1 frames BEFORE the one doc-grain aggregate, in-row MSB-first fold, duplicate grouping a window on the 8-byte (n_bits, fp) key",
-      "q_knn_ins" -> "graph-ANN incremental insert: beam-searched cross edges over the persisted base graph (the r18 driver-local walk when Rounds.profile picks Local) + batch-local brute/descent edges; the batch/sliver-grain list trims run on the Narrow profile's clone and re-root on persisted RDDs (r18 — they were ~20 caller-width AQE stage-jobs of launch latency), while the corpus-scale passthrough stays THIS caller-width plan: a map-only broadcast anti join — every untouched base row rides through unshuffled, so the plan's cost scales with the batch, never the corpus",
+      "q_knn_ins" -> "graph-ANN incremental insert. When Rounds.profile picks Local (the largest state the driver twin holds — graph rows, base vectors, nBatch·(beam+2k) — within LocalRows, which covers sf0.001-sf0.1) the whole insert runs on the driver after ONE collect of the batch and ONE count plus ONE collect each of the graph and the base: the hierarchical walk (GraphSearch.walkLocal, entry rules in their driver form), the batch's brute or descent edges and every list trim (TopKEdges.prune) use the distributed kernels, bit-identical (ProfileParitySpec), so the plan shown is the merged LocalRelation, coalesced to one partition. Under Narrow or Wide: beam-searched cross edges over the persisted base graph + batch-local brute/descent edges; the batch/sliver-grain list trims run on the Narrow profile's clone and re-root on persisted RDDs (r18 — they were ~20 caller-width AQE stage-jobs of launch latency), while the corpus-scale passthrough stays a caller-width map-only broadcast anti join — every untouched base row rides through unshuffled, so the plan's cost scales with the batch, never the corpus",
       "q_url" -> "URL canonicalization + domain rollup: the six regex rules fuse into ONE map-only whole-stage-codegen select; the domain rollup is one hash aggregate joined back — nothing else exchanges",
       "q_qsk" -> "incremental quantile sketches: the bottom-k Aggregator's partial aggregation collapses every partition MAP-SIDE to <= k entries before each batch's one exchange; the union stage merges per-part ARRAYS (objectHashAggregate, no explode — sibling exact counts never fan out); the estimate is in-row array math",
       "q_bm25c" -> "BM25 serving THROUGH compaction: the same query-term bucket PartitionFilters + broadcast term join as the incremental index, now over one-file buckets — compaction changed the file census, not one operator of the serving plan",

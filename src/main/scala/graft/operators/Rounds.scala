@@ -51,13 +51,14 @@ private[graft] object Rounds {
     *    costs several scheduled jobs per round of pure launch latency.
     *    The twin runs the identical recurrence with the identical
     *    kernels, so its rows are bit-identical. Loops with a twin:
-    *    HostRank, GraphSearch's walk, NnDescent's build and
+    *    HostRank, GraphSearch's walk, NnDescent's build and insert, and
     *    CorpusIncrement's touched-subgraph union-find;
     *  - `Narrow`: at most [[NarrowRows]] rows — the loop plans on a
     *    CLONED session (`newSession`: same SparkContext and caches,
-    *    its own SQLConf) narrowed to 8 shuffle partitions with AQE
-    *    off, where corpus-width shuffles and AQE's per-stage replans
-    *    would be driver latency times the round count. The fixed width
+    *    a copy of the caller's SQLConf) narrowed to 8 shuffle
+    *    partitions with AQE off, where corpus-width shuffles and AQE's
+    *    per-stage replans would be driver latency times the round
+    *    count. The fixed width
     *    is measured: `TopKEdges`' map-side partials weaken with width
     *    (r18: NnDescent widened to ~21 partitions read 9.1 s vs 6.4 s);
     *  - `Wide`: the caller's session, width and skew handling.
@@ -103,7 +104,10 @@ private[graft] object Rounds {
     new LoopSession(caller, if (p == Wide) caller else narrowSession(caller))
 
   private def narrowSession(spark: SparkSession): SparkSession = {
-    val s2 = spark.newSession()
+    // the caller's SQL conf first (ANSI mode, time zone, …), so a loop's
+    // semantics never depend on the profile that ran it; then the five
+    // overrides that make the clone narrow
+    val s2 = GraftBridge.newSessionWithConf(spark)
     s2.conf.set("spark.sql.shuffle.partitions", "8")
     s2.conf.set("spark.sql.adaptive.enabled", "false")
     // broadcast builds over LOCALIZED relations still run one scheduled

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import scala.collection.mutable
+
 import graft.operators.Rounds
 
 /** Graph-ANN SERVING: batch best-first beam search over a persisted
@@ -65,13 +67,8 @@ object GraphSearch {
                                   queries: DataFrame, k: Int, beam: Int,
                                   maxHops: Int = 10, seed: Long = 42L)
       : (DataFrame, Int) =
-    walk(graph, corpus, queries, k, beam, maxHops, entryCand = (v, q) => {
-      // deterministic global entry set, shared by every query
-      val entries = v.select(col("node"))
-        .orderBy(xxhash64(lit(seed), col("node")), col("node"))
-        .limit(beam)
-      q.select(col("q_id")).crossJoin(broadcast(entries))
-    })
+    walk(graph, corpus, queries, k, beam, maxHops,
+      EntryRule.sample(beam, seed))
 
   /** HIERARCHICAL entry points — the HNSW upper-layer idea (Malkov &
     * Yashunin 2016): before the layer-0 beam walk, each query scans a
@@ -103,32 +100,83 @@ object GraphSearch {
                                       fanout: Int = 32, maxHops: Int = 10,
                                       seed: Long = 42L)
       : (DataFrame, Int) = {
-    require(fanout >= 1, "fanout must be >= 1")
-    walk(graph, corpus, queries, k, beam, maxHops, entryCand = (v, q) => {
-      val layer = v.select(col("node"))
-        .filter(pmod(xxhash64(lit(seed + 1), col("node")), lit(fanout))
-          === 0)
-      q.select(col("q_id")).crossJoin(layer)
-    },
-      // tiny-corpus fallback to the flat global entry sample — applied
-      // only if the layer produced NO scored entries, detected for
-      // free on the materialized init state instead of a pre-scan job
-      fallback = Some((v, q) => {
-        val entries = broadcast(v.select(col("node"))
-          .orderBy(xxhash64(lit(seed), col("node")), col("node"))
-          .limit(beam))
-        q.select(col("q_id")).crossJoin(entries)
-      }))
+    val (entry, fallback) = hierEntries(beam, fanout, seed)
+    walk(graph, corpus, queries, k, beam, maxHops, entry, Some(fallback))
   }
+
+  /** [[topKHier]]'s entry rules: the level-1 layer, and the flat global
+    * sample as the tiny-corpus fallback — applied only if the layer
+    * produced NO scored entries, detected for free on the materialized
+    * init state instead of a pre-scan job. */
+  private[vector] def hierEntries(beam: Int, fanout: Int, seed: Long)
+      : (EntryRule, EntryRule) =
+    (EntryRule.layer(1, fanout, seed), EntryRule.sample(beam, seed))
 
   /** Layer-ℓ membership: a deterministic nested sample — divisibility
     * by fanout^ℓ, so layer ℓ+1 ⊆ layer ℓ (the HNSW nesting property)
     * and membership is a map-only filter, never a global sort. */
   private def member(level: Int, fanout: Int, seed: Long)
-                    (node: org.apache.spark.sql.Column) = {
+                    (node: org.apache.spark.sql.Column) =
+    pmod(xxhash64(lit(seed + 1), node), lit(layerModulus(level, fanout))) === 0
+
+  private def layerModulus(level: Int, fanout: Int): Long = {
+    require(fanout >= 1, "fanout must be >= 1")
     var m = 1L
     (1 to level).foreach(_ => m *= fanout)
-    pmod(xxhash64(lit(seed + 1), node), lit(m)) === 0
+    m
+  }
+
+  /** `xxhash64(lit(s), node)` on the driver: Spark's XXH64 chain starts
+    * at seed 42 and hashes the long literal, then the node. */
+  private def hashLocal(s: Long, node: Long): Long = {
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    XXH64.hashLong(node, XXH64.hashLong(s, 42L))
+  }
+
+  /** A walk's entry rule: the unscored (q_id, node) pairs each query's
+    * beam starts from. One rule, two forms: `plan` over the vector
+    * table `v` (node, …) and the query batch `q` (q_id, …) for the
+    * distributed walk, and `local` over the corpus node ids and the
+    * query ids for the driver twins. The forms select the same pairs. */
+  private[vector] final case class EntryRule(
+      plan: (DataFrame, DataFrame) => DataFrame,
+      local: (Array[Long], Array[Long]) => Array[(Long, Long)])
+
+  private[vector] object EntryRule {
+    private def cross(qs: Array[Long], nodes: Array[Long]) =
+      for (q <- qs; n <- nodes) yield (q, n)
+
+    /** Every corpus node — the layered descent's scan-cheap top layer. */
+    val all: EntryRule = EntryRule(
+      (v, q) => q.select(col("q_id")).crossJoin(v.select(col("node"))),
+      (nodes, qs) => cross(qs, nodes))
+
+    /** The `beam` nodes minimizing (`xxhash64(seed, node)`, node): a
+      * deterministic corpus-wide sample, the same for every query
+      * (TakeOrdered in the plan, a sort on the driver). */
+    def sample(beam: Int, seed: Long): EntryRule = EntryRule(
+      (v, q) => q.select(col("q_id")).crossJoin(broadcast(
+        v.select(col("node"))
+          .orderBy(xxhash64(lit(seed), col("node")), col("node"))
+          .limit(beam))),
+      (nodes, qs) => cross(qs,
+        nodes.sortBy(n => (hashLocal(seed, n), n)).take(beam)))
+
+    /** The layer-`level` members ([[member]]) — a map-only filter in the
+      * plan, the same `pmod` test on the driver. */
+    def layer(level: Int, fanout: Int, seed: Long): EntryRule = {
+      val m = layerModulus(level, fanout)
+      EntryRule(
+        (v, q) => q.select(col("q_id")).crossJoin(
+          v.select(col("node")).filter(member(level, fanout, seed)(col("node")))),
+        (nodes, qs) => cross(qs,
+          nodes.filter(n => java.lang.Math.floorMod(hashLocal(seed + 1, n), m) == 0)))
+    }
+
+    /** Fixed (q_id, node) seeds — the layered descent's walk-to-walk
+      * hand-off. */
+    def seeded(seeds: DataFrame): EntryRule = EntryRule((_, _) => seeds,
+      (_, _) => seeds.collect().map(r => (r.getLong(0), r.getLong(1))))
   }
 
   /** Build the RECURSIVE layer stack over the same persisted format —
@@ -194,8 +242,7 @@ object GraphSearch {
     // top layer: exhaustive scan (it is built to be scan-cheap)
     var (entries, h0) = walk(layerGraphs.last,
       corpus.filter(member(top, fanout, seed)(col("vec_id"))), queries,
-      k = entryBeam, beam = entryBeam, maxHops = 1, entryCand = (v, q) =>
-        q.select(col("q_id")).crossJoin(v.select(col("node"))))
+      k = entryBeam, beam = entryBeam, maxHops = 1, EntryRule.all)
     hops += h0
     // descend: each layer's walk is seeded by the layer above
     (top - 1 to 1 by -1).foreach { l =>
@@ -203,32 +250,34 @@ object GraphSearch {
       val (e2, h) = walk(layerGraphs(l - 1),
         corpus.filter(member(l, fanout, seed)(col("vec_id"))), queries,
         k = entryBeam, beam = entryBeam, maxHops = maxHops,
-        entryCand = (_, _) => seedEntries)
+        EntryRule.seeded(seedEntries))
       entries = e2
       hops += h
     }
     val seedEntries = entries.select(col("q_id"), col("n_id").as("node"))
     val (out, hL) = walk(graph, corpus, queries, k, beam, maxHops,
-      entryCand = (_, _) => seedEntries)
+      EntryRule.seeded(seedEntries))
     hops += hL
     (out, hops.result())
   }
 
-  /** The shared walk: `entryCand(v, q)` produces the initial (q_id,
-    * node) candidate pairs; everything after the entry scoring is
-    * identical across entry strategies. `fallback`, when present, is
-    * a second entry generator used only if the first produced no
-    * scored entries at all (checked on the already-materialized init
-    * state — no extra scan). Returns (ranked top-k, hops the loop
-    * ran). */
-  private def walk(graph: DataFrame, corpus: DataFrame, queries: DataFrame,
-                   k: Int, beam: Int, maxHops: Int,
-                   entryCand: (DataFrame, DataFrame) => DataFrame,
-                   fallback: Option[(DataFrame, DataFrame) => DataFrame] = None)
-      : (DataFrame, Int) = {
+  private[vector] def requireWalk(k: Int, beam: Int, maxHops: Int): Unit = {
     require(k >= 1, "k must be >= 1")
     require(beam >= k, s"beam ($beam) must be >= k ($k)")
     require(maxHops >= 1, "maxHops must be >= 1")
+  }
+
+  /** The shared walk: the `entry` rule produces the initial (q_id,
+    * node) candidate pairs; everything after the entry scoring is
+    * identical across entry strategies. `fallback`, when present, is
+    * a second entry rule used only if the first produced no scored
+    * entries at all (checked on the already-materialized init state —
+    * no extra scan). Returns (ranked top-k, hops the loop ran). */
+  private def walk(graph: DataFrame, corpus: DataFrame, queries: DataFrame,
+                   k: Int, beam: Int, maxHops: Int, entry: EntryRule,
+                   fallback: Option[EntryRule] = None)
+      : (DataFrame, Int) = {
+    requireWalk(k, beam, maxHops)
     val lvl = StorageLevel.MEMORY_AND_DISK
     val callerSpark = graph.sparkSession
 
@@ -270,19 +319,18 @@ object GraphSearch {
     // the distributed loop costs ~4 scheduled jobs per hop of pure
     // launch latency (q_walk spent <2 s of its 3.9 s in stages). The
     // driver loop runs the identical recurrence with the identical
-    // kernels: entry candidates come from the UNCHANGED entryCand/
-    // fallback plans (collected — they are |queries|·entries
-    // slivers), sims call the same left-to-right double accumulation
-    // as [[DotProduct.compute]] on the same Spark-computed norms, and
-    // the beam re-selection IS [[graft.functions.TopKEdges.prune]].
+    // kernels: entry candidates come from the entry rules' driver
+    // forms, sims call the same left-to-right double accumulation as
+    // [[DotProduct.compute]] on the same Spark-computed norms, and the
+    // beam re-selection IS [[graft.functions.TopKEdges.prune]].
     if (p == Rounds.Local) {
-      val entries = entryCand(v, q).collect()
-      val fb = fallback.map(f => () => f(v, q).collect())
-      val out = walkLocal(callerSpark, adj0.collect(), vc.collect(), qRows,
-        entries, fb, k, beam, maxHops)
+      val (lists, hops) = walkLocal(
+        adjacencyLocal(adj0.collect().iterator.map(r => (r.getLong(0), r.getLong(1)))),
+        new Similarity.LocalVecs(vc.collect()),
+        new Similarity.LocalVecs(qRows), entry, fallback, beam, maxHops)
       adj0.unpersist(blocking = false)
       vc.unpersist(blocking = false)
-      return out
+      return (ranked(callerSpark, "q_id", lists, k), hops)
     }
 
     // score (q_id, node) proposals exactly; the query's own id never
@@ -304,7 +352,7 @@ object GraphSearch {
     // entry candidates may arrive from a caller-session frame (the
     // layered descent seeds); rebind so the whole walk — init included
     // — plans on the loop's session
-    val init = topBeam(score(loop.bind(entryCand(v, q))))
+    val init = topBeam(score(loop.bind(entry.plan(v, q))))
       .withColumn("exp", lit(false))
 
     // the init row count rides the materializing job (r17) — it is
@@ -315,7 +363,7 @@ object GraphSearch {
       if (nInit == 0L) { // e.g. the coarse layer sampled no nodes
         stateRdd.unpersist(blocking = false)
         val (s2, r2) = Rounds.materialize(
-          topBeam(score(loop.bind(fb(v, q)))).withColumn("exp", lit(false)), lvl)
+          topBeam(score(loop.bind(fb.plan(v, q)))).withColumn("exp", lit(false)), lvl)
         state = s2
         stateRdd = r2
       }
@@ -369,12 +417,26 @@ object GraphSearch {
     (out, hop)
   }
 
-  /** The driver-local hop loop (r18). Inputs are the collected
-    * adjacency (node, n_id), vector table (node, embedding, nrm — the
-    * norms are the SPARK-computed doubles, collected, not recomputed),
-    * query batch (q_id, q_emb, q_nrm), and the UNSCORED entry
-    * candidate pairs from the entry plan. Every step mirrors the
-    * distributed loop operation for operation:
+  /** The symmetrized adjacency of (a, b) edges on the driver — the
+    * walk's `adj0`: an edge in either direction is walkable, each
+    * neighbor listed once. */
+  private[vector] def adjacencyLocal(edges: Iterator[(Long, Long)])
+      : mutable.HashMap[Long, mutable.LinkedHashSet[Long]] = {
+    val adj = mutable.HashMap[Long, mutable.LinkedHashSet[Long]]()
+    def add(a: Long, b: Long): Unit = {
+      adj.getOrElseUpdate(a, mutable.LinkedHashSet[Long]()) += b
+      ()
+    }
+    edges.foreach { case (a, b) => add(a, b); add(b, a) }
+    adj
+  }
+
+  /** The driver-local hop loop (r18). Inputs are the symmetrized
+    * adjacency ([[adjacencyLocal]]), the corpus vector table and the
+    * query batch (the norms are the SPARK-computed doubles, collected,
+    * not recomputed), and the entry rules, whose driver forms select
+    * the pairs their plans do. Every step mirrors the distributed loop
+    * operation for operation:
     *  - sims are [[Similarity.cosineLocal]]: `DotProduct.compute`'s
     *    left-to-right double accumulation over float arrays, divided
     *    by the collected norms' product — the identical IEEE op
@@ -387,110 +449,83 @@ object GraphSearch {
     *    non-corpus nodes drop exactly where the joins dropped them;
     *  - the loop stops when a hop admits no flag=false entry
     *    (`entered == 0`) or at maxHops — the same convergence the
-    *    materializing count drove. */
-  private def walkLocal(spark: org.apache.spark.sql.SparkSession,
-                        adjRows: Array[org.apache.spark.sql.Row],
-                        vRows: Array[org.apache.spark.sql.Row],
-                        qRows: Array[org.apache.spark.sql.Row],
-                        initCand: Array[org.apache.spark.sql.Row],
-                        fallbackCand: Option[() => Array[org.apache.spark.sql.Row]],
-                        k: Int, beam: Int, maxHops: Int): (DataFrame, Int) = {
+    *    materializing count drove.
+    * Returns each query's final beam, prune-ordered and sorted by
+    * q_id, with the hop count. */
+  private[vector] def walkLocal(
+      adj: scala.collection.Map[Long, scala.collection.Set[Long]],
+      v: Similarity.LocalVecs, q: Similarity.LocalVecs, entry: EntryRule,
+      fallback: Option[EntryRule], beam: Int, maxHops: Int)
+      : (Seq[(Long, Seq[graft.functions.TopKEdges.Entry])], Int) = {
     import graft.functions.TopKEdges
-    val vEmb = new java.util.HashMap[Long, Array[Float]]()
-    val vNrm = new java.util.HashMap[Long, Double]()
-    vRows.foreach { r =>
-      vEmb.put(r.getLong(0), r.getSeq[Float](1).toArray)
-      vNrm.put(r.getLong(0), r.getDouble(2))
-      ()
-    }
-    val adjM = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-    adjRows.foreach { r =>
-      adjM.computeIfAbsent(r.getLong(0),
-        _ => scala.collection.mutable.ArrayBuffer[Long]()) += r.getLong(1)
-      ()
-    }
-    val qEmb = new java.util.HashMap[Long, Array[Float]]()
-    val qNrm = new java.util.HashMap[Long, Double]()
-    qRows.foreach { r =>
-      qEmb.put(r.getLong(0), r.getSeq[Float](1).toArray)
-      qNrm.put(r.getLong(0), r.getDouble(2))
-      ()
-    }
     // the score joins' row semantics: self-id filtered, inner joins
     // drop nodes/queries absent from their tables
     def score(qid: Long, node: Long): Option[TopKEdges.Entry] =
       if (node == qid) None
       else {
-        val e = vEmb.get(node)
-        val qe = qEmb.get(qid)
-        if (e == null || qe == null) None
+        val i = v.indexOf(node)
+        val j = q.indexOf(qid)
+        if (i < 0 || j < 0) None
         else Some(TopKEdges.Entry(node,
-          Similarity.cosineLocal(qe, e, qNrm.get(qid) * vNrm.get(node)),
-          flag = false))
+          Similarity.cosineLocal(q, j, v, i), flag = false))
       }
 
     // init: score the entry pairs, rank by (sim desc, node), keep beam
     // (the distributed topBeam window — entry pairs are distinct by
     // construction, so no dedup pass exists there either)
-    def initFrom(cand: Array[org.apache.spark.sql.Row])
-        : java.util.HashMap[Long, Seq[TopKEdges.Entry]] = {
-      val st = new java.util.HashMap[Long, Seq[TopKEdges.Entry]]()
-      cand.groupBy(_.getLong(0)).foreach { case (qid, rows) =>
-        val scored = rows.toSeq.flatMap(r => score(qid, r.getLong(1)))
+    def initFrom(rule: EntryRule)
+        : mutable.HashMap[Long, Seq[TopKEdges.Entry]] = {
+      val st = mutable.HashMap[Long, Seq[TopKEdges.Entry]]()
+      rule.local(v.ids, q.ids).groupBy(_._1).foreach { case (qid, pairs) =>
+        val scored = pairs.toSeq.flatMap(pr => score(qid, pr._2))
         if (scored.nonEmpty)
-          st.put(qid, scored.sorted(TopKEdges.ord).take(beam))
-        ()
+          st(qid) = scored.sorted(TopKEdges.ord).take(beam)
       }
       st
     }
-    var state = initFrom(initCand)
-    fallbackCand.foreach { fb => if (state.isEmpty) state = initFrom(fb()) }
+    var state = initFrom(entry)
+    fallback.foreach { fb => if (state.isEmpty) state = initFrom(fb) }
 
     var hop = 0
     var done = false
     while (!done && hop < maxHops) {
       var entered = 0L
-      val next = new java.util.HashMap[Long, Seq[TopKEdges.Entry]]()
-      state.forEach { (qid, es) =>
-        val candSet = new java.util.LinkedHashSet[Long]()
+      val next = mutable.HashMap[Long, Seq[TopKEdges.Entry]]()
+      state.foreach { case (qid, es) =>
+        val candSet = mutable.LinkedHashSet[Long]()
         es.foreach { e =>
-          if (!e.flag) {
-            val ns = adjM.get(e.nbr)
-            if (ns != null) ns.foreach { n => candSet.add(n); () }
-          }
+          if (!e.flag) adj.get(e.nbr).foreach(candSet ++= _)
         }
-        val scored = scala.collection.mutable.ArrayBuffer[TopKEdges.Entry]()
-        candSet.forEach { n => score(qid, n).foreach(scored += _); () }
         val merged = TopKEdges.prune(
-          es.map(_.copy(flag = true)) ++ scored, beam)
+          es.map(_.copy(flag = true)) ++ candSet.toSeq.flatMap(score(qid, _)),
+          beam)
         entered += merged.count(!_.flag)
-        if (merged.nonEmpty) next.put(qid, merged)
-        ()
+        if (merged.nonEmpty) next(qid) = merged
       }
       state = next
       done = entered == 0
       hop += 1
     }
-
-    import scala.jdk.CollectionConverters._
-    (ranked(spark, "q_id", state.entrySet().asScala.toSeq
-      .sortBy(_.getKey.longValue())
-      .map(ent => (ent.getKey.longValue(), ent.getValue)), k), hop)
+    (state.toSeq.sortBy(_._1), hop)
   }
 
   /** A driver twin's result as (`key`, rank, n_id, sim) rows on the
-    * caller's session. Each list is prune-ordered by (sim desc, nbr)
-    * already, so rank is list position — the distributed tails'
-    * row_number over the same ordering. */
+    * caller's session: `passthrough` rows as they are, then each list
+    * cut to `k`. Each list is prune-ordered by (sim desc, nbr) already,
+    * so rank is list position — the distributed tails' row_number over
+    * the same ordering. */
   private[vector] def ranked(spark: org.apache.spark.sql.SparkSession,
                              key: String,
                              lists: Seq[(Long, Seq[graft.functions.TopKEdges.Entry])],
-                             k: Int): DataFrame = {
+                             k: Int,
+                             passthrough: Seq[org.apache.spark.sql.Row] = Nil)
+      : DataFrame = {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField(key, LongType),
       StructField("rank", IntegerType), StructField("n_id", LongType),
       StructField("sim", DoubleType)))
     val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    passthrough.foreach { r => rows.add(r); () }
     lists.foreach { case (id, es) =>
       es.take(k).zipWithIndex.foreach { case (e, i) =>
         rows.add(org.apache.spark.sql.Row(id, i + 1, e.nbr, e.sim))

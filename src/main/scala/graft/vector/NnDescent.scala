@@ -258,16 +258,25 @@ object NnDescent {
                          rows: Array[org.apache.spark.sql.Row], k: Int,
                          kb: Int, maxRounds: Int, convergedFrac: Double,
                          seed: Long): (DataFrame, Int) = {
+    val (lists, round) = descendLocal(rows, kb, maxRounds, convergedFrac, seed)
+    // one partition: a local relation splits into one slice per core,
+    // and every consumer of the graph (persist, insert's joins, a save)
+    // would run that many tasks over a driver-sized sliver
+    (GraphSearch.ranked(spark, "vec_id", lists, k).coalesce(1), round)
+  }
+
+  /** [[buildLocal]]'s descent: each node's overbuilt list (by vec_id,
+    * prune-ordered, nbr = vec_id) and the rounds run. */
+  private def descendLocal(rows: Array[org.apache.spark.sql.Row], kb: Int,
+                           maxRounds: Int, convergedFrac: Double, seed: Long)
+      : (Seq[(Long, Seq[graft.functions.TopKEdges.Entry])], Int) = {
     import graft.functions.TopKEdges
     import graft.functions.TopKEdges.Entry
     import org.apache.spark.sql.catalyst.expressions.XXH64
-    val sorted = rows.sortBy(_.getLong(0))
-    val n = sorted.length
-    val ids = sorted.map(_.getLong(0))
-    val emb = sorted.map(_.getSeq[Float](1).toArray)
-    val nrm = sorted.map(_.getDouble(2))
-    def sim(a: Int, b: Int): Double =
-      Similarity.cosineLocal(emb(a), emb(b), nrm(a) * nrm(b))
+    val vs = new Similarity.LocalVecs(rows.sortBy(_.getLong(0)))
+    val n = vs.ids.length
+    val ids = vs.ids
+    def sim(a: Int, b: Int): Double = Similarity.cosineLocal(vs, a, vs, b)
     // xxhash64(lit(seed), ...) starts every chain at hashLong(seed, 42)
     val seedH = XXH64.hashLong(seed, 42L)
     // the aggregator's output: flag = !old (new this round)
@@ -326,12 +335,8 @@ object NnDescent {
       done = changed < convergedFrac * n * kb
       round += 1
     }
-    // one partition: a local relation splits into one slice per core,
-    // and every consumer of the graph (persist, insert's joins, a save)
-    // would run that many tasks over a driver-sized sliver
-    (GraphSearch.ranked(spark, "vec_id", (0 until n).map(a =>
-      (ids(a), state(a).map(e => e.copy(nbr = ids(e.nbr.toInt))))), k)
-      .coalesce(1), round)
+    ((0 until n).map(a =>
+      (ids(a), state(a).map(e => e.copy(nbr = ids(e.nbr.toInt))))), round)
   }
 
   /** INCREMENTAL insert: extend an existing K-NN `graph` over `base`
@@ -371,6 +376,17 @@ object NnDescent {
     * sims: callers pin recall against [[Similarity.bruteTopK]]
     * (GraphInsertSpec pins the fresh-build floor). Bit-deterministic.
     *
+    * Local shape — [[graft.operators.Rounds.profile]] picks `Local`
+    * when the largest state the driver twin holds (graph rows, base
+    * vectors, nBatch·(beam+2k)) is within `Rounds.LocalRows`: one job
+    * collects the batch, one persists and counts each of the graph and
+    * the base, one collects each, and steps (1)-(4) run on the driver
+    * with the distributed kernels ([[insertLocal]]) — the walk, the
+    * brute or descent internal edges, `TopKEdges.prune` for every
+    * trim — so the rows are bit-identical to the Narrow and Wide
+    * results (ProfileParitySpec). The merged graph comes back as a
+    * one-partition local relation on the caller's session.
+    *
     * Contract: the batch rides [[GraphSearch]]'s broadcast-queries
     * serving shape, so one insert call's batch must be bounded
     * (micro-batch grain — a caller ingesting an unbounded stream
@@ -387,9 +403,49 @@ object NnDescent {
     val bm = if (beam > 0) beam else 3 * k
     val spark = base.sparkSession
     val lvl = StorageLevel.MEMORY_AND_DISK
+    def withNorm(df: DataFrame) = df.select(col("vec_id").cast("long"),
+      col("embedding"), Similarity.norm(col("embedding")).as("nrm"))
 
-    val nBatch = batch.count()
+    // the batch is driver-sized by contract (every walk profile
+    // collects it), so ONE collect sizes it
+    val batchRows = withNorm(batch).collect()
+    val nBatch = batchRows.length.toLong
     require(nBatch >= 1, "batch is empty")
+    // batch-internal edges by descent above the floor, brute below it
+    val internalDescent =
+      nBatch > math.max(bruteFloor.toLong, overbuild.toLong * k + 1)
+
+    // ---- the one size decision. The Local twin holds the graph, the
+    // base vectors and the tail's nBatch·(beam+2k) rows: each
+    // corpus-scale input is persisted and counted in ONE job (an RDD
+    // count fills its cache, as build's does), and counted only while
+    // everything before it fits the Local band. Past the band the tail
+    // alone sizes Narrow vs Wide: the corpus-scale passthrough never
+    // binds to the clone, so a large graph must not widen the
+    // batch-grain tail.
+    val tail = nBatch * (bm + 2L * k)
+    val graphP = graph.select(col("vec_id").cast("long"),
+      col("rank").cast("int"), col("n_id").cast("long"),
+      col("sim").cast("double")).persist(lvl)
+    val baseP = withNorm(base).persist(lvl)
+    val held = Seq(graphP, baseP).foldLeft(tail) { (m, df) =>
+      if (m > Rounds.LocalRows) m
+      else math.max(m, df.queryExecution.toRdd.count())
+    }
+    val p = Rounds.profile(
+      if (held <= Rounds.LocalRows) held else math.max(tail, Rounds.LocalRows + 1),
+      hasLocal = true)
+    if (p == Rounds.Local) {
+      val graphRows = graphP.collect()
+      val baseRows = baseP.collect()
+      graphP.unpersist(blocking = false)
+      baseP.unpersist(blocking = false)
+      return insertLocal(spark, graphRows, baseRows, batchRows, k, bm,
+        entryFanout, searchHops, seed,
+        if (internalDescent) Some((overbuild, maxRounds, convergedFrac)) else None)
+    }
+    graphP.unpersist(blocking = false)
+    baseP.unpersist(blocking = false)
 
     // (1) cross edges: new vector -> its approximate k-NN in base,
     // via the hop-budgeted hierarchical beam walk over the existing
@@ -415,7 +471,7 @@ object NnDescent {
     // broadcast-future builds serializes on block locks and blocks
     // AQE's own exchange reuse across the two subtrees.
     val internal: DataFrame =
-      if (nBatch > math.max(bruteFloor.toLong, overbuild.toLong * k + 1))
+      if (internalDescent)
         build(batch, k, maxRounds, convergedFrac, seed, overbuild)
           .select(col("vec_id").as("id"), col("n_id").as("nbr"), col("sim"))
       else if (nBatch >= 2)
@@ -440,7 +496,7 @@ object NnDescent {
 
     // ---- batch-grain tail (r18): steps (3)-(4) below carry batch-
     // and sliver-grain data only (newLists ≤ batch·(beam+2k) rows, the
-    // profile's size; touchedLists ≤ 2·batch·k), so at caller width
+    // tail's size; touchedLists ≤ 2·batch·k), so at caller width
     // their ~20 AQE stage-jobs were pure launch latency. Under the
     // Narrow profile the two sliver plans bind to the clone and
     // materialize on persisted RDDs (lazily — the caller's one action
@@ -449,8 +505,8 @@ object NnDescent {
     // stays a caller-width map-only anti join. The touched set gets an
     // explicit broadcast hint on the clone (AQE is off there; it is
     // ≤ batch·k rows by the micro-batch contract — the wide path keeps
-    // AQE's own choice).
-    val p = Rounds.profile(nBatch * (bm + 2L * k), hasLocal = false)
+    // AQE's own choice). Under Local none of this runs: the whole
+    // insert, walk included, is [[insertLocal]].
     val loop = Rounds.session(spark, p)
     def reroot(df: DataFrame): DataFrame =
       if (p == Rounds.Narrow) {
@@ -486,5 +542,90 @@ object NnDescent {
       .select(col("vec_id"), col("rank"), col("n_id"), col("sim"))
 
     untouched.union(touchedLists).union(newLists)
+  }
+
+  /** The driver-local insert (Local profile). `graphRows` are the
+    * collected (vec_id, rank, n_id, sim) graph; `baseRows` and
+    * `batchRows` the collected (vec_id, embedding, nrm) tables, with
+    * the Spark-computed norms. Every step is the distributed one's, on
+    * its kernel:
+    *  1. cross edges are the [[GraphSearch.topKHier]] walk as
+    *     [[GraphSearch.walkLocal]] runs it — over the symmetrized graph,
+    *     from the same entry rules' driver forms — cut to k;
+    *  2. internal edges are each batch vector's brute top-min(k,
+    *     nBatch-1) by (sim desc, n_id) under [[Similarity.cosineLocal]]
+    *     or, when `descent` holds (overbuild, maxRounds, convergedFrac)
+    *     above bruteFloor, the build's own driver descent over the batch;
+    *  3. new-node and 4. touched-node lists are
+    *     [[graft.functions.TopKEdges.prune]](k) over the edge multisets
+    *     the distributed `rankTopK` aggregates see;
+    * and every untouched graph row passes through as collected. The
+    * result is one partition, like [[buildLocal]]'s. */
+  private def insertLocal(spark: org.apache.spark.sql.SparkSession,
+                          graphRows: Array[org.apache.spark.sql.Row],
+                          baseRows: Array[org.apache.spark.sql.Row],
+                          batchRows: Array[org.apache.spark.sql.Row],
+                          k: Int, beam: Int, fanout: Int, searchHops: Int,
+                          seed: Long, descent: Option[(Int, Int, Double)])
+      : DataFrame = {
+    import graft.functions.TopKEdges
+    import graft.functions.TopKEdges.Entry
+    import scala.collection.mutable
+    GraphSearch.requireWalk(k, beam, searchHops)
+    val base = new Similarity.LocalVecs(baseRows)
+    val batch = new Similarity.LocalVecs(batchRows)
+
+    // (1) cross edges: (new vector, its walk's top-k entries)
+    val (entry, fallback) = GraphSearch.hierEntries(beam, fanout, seed)
+    val searched = GraphSearch.walkLocal(
+        GraphSearch.adjacencyLocal(
+          graphRows.iterator.map(r => (r.getLong(0), r.getLong(2)))),
+        base, batch, entry, Some(fallback), beam, searchHops)._1
+      .flatMap { case (q, es) => es.take(k).map(e => (q, e)) }
+
+    // (2) batch-internal edges (id, nbr, sim)
+    val internal: Seq[(Long, Long, Double)] = descent match {
+      case Some((overbuild, maxRounds, convergedFrac)) =>
+        descendLocal(batchRows, k * overbuild, maxRounds, convergedFrac,
+          seed)._1.flatMap { case (a, es) => es.take(k).map(e => (a, e.nbr, e.sim)) }
+      case None =>
+        val kk = math.min(k, batch.ids.length - 1)
+        batch.ids.indices.flatMap { j =>
+          batch.ids.indices.filter(i => batch.ids(i) != batch.ids(j))
+            .map(i => Entry(batch.ids(i),
+              Similarity.cosineLocal(batch, j, batch, i), flag = false))
+            .sorted(TopKEdges.ord).take(kk)
+            .map(e => (batch.ids(j), e.nbr, e.sim))
+        }
+    }
+
+    // (3) new-node lists: best k of cross ∪ internal ∪ reversed internal
+    val newEdges = mutable.LinkedHashMap[Long, mutable.ArrayBuffer[Entry]]()
+    def offer(lists: mutable.Map[Long, mutable.ArrayBuffer[Entry]],
+              id: Long, nbr: Long, sim: Double): Unit = {
+      lists.getOrElseUpdate(id, mutable.ArrayBuffer[Entry]()) +=
+        Entry(nbr, sim, flag = false)
+      ()
+    }
+    searched.foreach { case (x, e) => offer(newEdges, x, e.nbr, e.sim) }
+    internal.foreach { case (x, y, s) =>
+      offer(newEdges, x, y, s)
+      offer(newEdges, y, x, s)
+    }
+
+    // (4) touched base nodes: their old lists plus the reverse
+    // proposals b→x; every other graph row passes through
+    val touchedEdges = mutable.LinkedHashMap[Long, mutable.ArrayBuffer[Entry]]()
+    searched.foreach { case (x, e) => offer(touchedEdges, e.nbr, x, e.sim) }
+    val (touchedOld, untouched) =
+      graphRows.partition(r => touchedEdges.contains(r.getLong(0)))
+    touchedOld.foreach(r =>
+      offer(touchedEdges, r.getLong(0), r.getLong(2), r.getDouble(3)))
+
+    def trimmed(lists: mutable.Map[Long, mutable.ArrayBuffer[Entry]]) =
+      lists.toSeq.map { case (id, es) => (id, TopKEdges.prune(es.toSeq, k)) }
+    GraphSearch.ranked(spark, "vec_id",
+      trimmed(touchedEdges) ++ trimmed(newEdges), k,
+      passthrough = untouched.toSeq).coalesce(1)
   }
 }

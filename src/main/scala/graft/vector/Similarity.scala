@@ -35,6 +35,24 @@ object Similarity {
     graft.functions.DotProduct.compute(a, b) / den
   }
 
+  /** [[cosineLocal]] between row `i` of `a` and row `j` of `b`. */
+  private[vector] def cosineLocal(a: LocalVecs, i: Int, b: LocalVecs,
+                                  j: Int): Double =
+    cosineLocal(a.emb(i), b.emb(j), a.nrm(i) * b.nrm(j))
+
+  /** A collected (id, embedding, norm) table for the driver twins, row
+    * order kept. The norms are the Spark-computed doubles, collected,
+    * never recomputed. */
+  private[vector] final class LocalVecs(rows: Array[org.apache.spark.sql.Row]) {
+    val ids: Array[Long] = rows.map(_.getLong(0))
+    val emb: Array[Array[Float]] = rows.map(_.getSeq[Float](1).toArray)
+    val nrm: Array[Double] = rows.map(_.getDouble(2))
+    private val pos = new java.util.HashMap[Long, Int]()
+    ids.indices.foreach(i => pos.put(ids(i), i))
+    /** The row of `id`, or -1 where an inner join would drop it. */
+    def indexOf(id: Long): Int = pos.getOrDefault(id, -1)
+  }
+
   /** Random-hyperplane LSH buckets: `tables` independent hash tables of
     * `planes` sign-projections each. Returns (vec_id, t, bucket).
     * Plane signs are deterministic ±1 from xxhash64 so buckets are

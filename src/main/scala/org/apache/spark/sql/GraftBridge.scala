@@ -23,6 +23,22 @@ object GraftBridge {
   def divideByZero(): ArithmeticException =
     org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
 
+  /** A new session of `spark`'s SparkContext — the shared caches, its
+    * own temp views, functions and listeners — that starts from every
+    * SQL conf entry `spark` holds. `newSession()` alone starts from the
+    * SparkConf defaults and drops the caller's runtime settings, such
+    * as `spark.sql.ansi.enabled=false`. */
+  def newSessionWithConf(spark: SparkSession): SparkSession = {
+    val s2 = spark.newSession()
+    val to = s2.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.getAllConfs.foreach { case (k, v) =>
+        to.setConfString(k, v)
+      }
+    s2
+  }
+
   /** Re-bind a DataFrame's logical plan to another session of the
     * SAME SparkContext (the execution-profile clones): the plan —
     * including any persisted cache, which lives in the shared

@@ -56,6 +56,22 @@ class GraphInsertSpec extends SparkSpec {
     merged.unpersist()
   }
 
+  test("a default-profile insert of 25 into 475 x 64-d vectors launches " +
+    "at most 6 jobs, the same count every rep") {
+    val rnd = new scala.util.Random(500)
+    val v = (0 until 500).map(i =>
+      (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
+    val b = v.filter(pmod(col("vec_id"), lit(20)) =!= 0)
+    val nb = v.filter(pmod(col("vec_id"), lit(20)) === 0)
+    val g = NnDescent.build(b, k = 10, maxRounds = 2).cache()
+    g.count()
+    val counts = (1 to 5).map(_ =>
+      JobCount.during(spark)(NnDescent.insert(g, b, nb, k = 10, beam = 30))._2)
+    assert(counts.head <= 6 && counts.distinct.size == 1, counts)
+    g.unpersist()
+  }
+
   test("the insert is bit-deterministic") {
     val g = NnDescent.build(base, 4, maxRounds = 2)
     val a = NnDescent.insert(g, base, batch, 4, beam = 12).collect()

@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftBridge
 
 /** The measurement harness: the bench rotation derived from the BENCH
   * artifacts, the noop timing routine's failure and cache contract, and
@@ -111,21 +108,12 @@ class HarnessSpec extends SparkSpec {
   }
 
   test("with the listener bus drained, a query's job count repeats exactly") {
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    val counts = (1 to 10).map { _ =>
+      val (t, jobs) = JobCount.during(spark)(Harness.noopTime(spark, "q_qc_track_hist")(
+        SparkEntry.queries("q_qc_track_hist")(spark, sfDir)))
+      assert(t >= 0.0)
+      jobs
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val counts = (1 to 10).map { _ =>
-        GraftBridge.drainListeners(spark)
-        jobs.set(0)
-        assert(Harness.noopTime(spark, "q_qc_track_hist")(
-          SparkEntry.queries("q_qc_track_hist")(spark, sfDir)) >= 0.0)
-        GraftBridge.drainListeners(spark)
-        jobs.get
-      }
-      assert(counts.head > 0 && counts.distinct.size === 1, counts)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(counts.head > 0 && counts.distinct.size === 1, counts)
   }
 }

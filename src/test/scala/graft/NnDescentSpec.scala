@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 
 import graft.operators.Rounds
@@ -45,21 +41,8 @@ class NnDescentSpec extends SparkSpec {
     val v = (0 until 475).map(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val counts = (1 to 5).map { _ =>
-        GraftBridge.drainListeners(spark)
-        jobs.set(0)
-        NnDescent.build(v, k = 10)
-        GraftBridge.drainListeners(spark)
-        jobs.get
-      }
-      assert(counts.head <= 3 && counts.distinct.size == 1, counts)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val counts = (1 to 5).map(_ => JobCount.during(spark)(NnDescent.build(v, k = 10))._2)
+    assert(counts.head <= 3 && counts.distinct.size == 1, counts)
   }
 
   test("recall@10 against brute force on the real embeddings") {

@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -46,19 +43,8 @@ class ParallelismFloorSpec extends SparkSpec {
     }.size
 
   /** The floor applied to `df`, with the jobs launched while it decides. */
-  private def floored(df: DataFrame): (DataFrame, Int) = {
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    GraftBridge.drainListeners(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = Ingest.parallelismFloor(df)
-      GraftBridge.drainListeners(spark)
-      (out, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def floored(df: DataFrame): (DataFrame, Int) =
+    JobCount.during(spark)(Ingest.parallelismFloor(df))
 
   test("a window-count-filtered single-split input gains no round-robin exchange, and no job runs") {
     val ev = Tables.events(spark, sfDir)

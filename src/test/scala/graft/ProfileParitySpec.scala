@@ -71,14 +71,16 @@ class ProfileParitySpec extends SparkSpec {
     }
   }
 
+  // 60 vectors, vec_id 7 all-zero (a zero norm)
+  private def zeroNorm = vecs(60).withColumn("embedding",
+    when(col("vec_id") === 7L, array((0 until 8).map(_ => lit(0.0f)): _*))
+      .otherwise(col("embedding")))
+
   test("NnDescent.build: a zero-norm vector and a corpus of at most " +
     "overbuild*k vectors fail alike on every profile") {
-    val zero = vecs(60).withColumn("embedding",
-      when(col("vec_id") === 7L, array((0 until 8).map(_ => lit(0.0f)): _*))
-        .otherwise(col("embedding")))
     for (p <- Seq(Local, Narrow, Wide)) {
       val e = intercept[ArithmeticException](Rounds.forcing(p)(
-        NnDescent.build(zero, k = 4, maxRounds = 2)))
+        NnDescent.build(zeroNorm, k = 4, maxRounds = 2)))
       assert(e.asInstanceOf[org.apache.spark.SparkThrowable].getCondition ==
         "DIVIDE_BY_ZERO", p)
       val small = intercept[IllegalArgumentException](Rounds.forcing(p)(
@@ -174,6 +176,70 @@ class ProfileParitySpec extends SparkSpec {
     val wide = run(Wide)
     assert(wide == narrow)
     assert(narrow.map(_._1) == (0L until 140L).toSet)
+  }
+
+  test("NnDescent.insert: local, narrow and wide are bit-identical") {
+    // six more exact copies of point 3, so a tie straddles every k = 4
+    // cut: a batch copy's brute list, its walk's beam, and point 3's
+    // reverse-link trim
+    val corpus = hubVecs.union(hubVecs.filter(col("vec_id") === 3L)
+      .crossJoin(spark.range(3000L, 3006L)).select(col("id").as("vec_id"),
+        col("embedding")))
+    val all = corpus.select("vec_id").as[Long].collect().toSet
+    // (case, batch ids, entryFanout, bruteFloor)
+    val cases = Seq(
+      // exact copies across base and batch (i and 2000+i; 5, 1005 and
+      // 2005; 3 and 3000-3005) and inside the batch: tied sims everywhere
+      ("ties", ((2000L until 2010L) ++ Seq(1005L) ++ (140L until 146L) ++
+        (3000L until 3006L)).toSet, 32, 10000),
+      // no node is in a 2^31-fanout layer, so the global-sample
+      // fallback seeds every walk
+      ("empty layer", (130L until 146L).toSet, Int.MaxValue, 10000),
+      ("one vector", Set(2003L), 32, 10000),
+      // above bruteFloor (and overbuild·k + 1) the batch's own descent
+      // makes the internal edges
+      ("descent", (120L until 140L).toSet, 32, 5))
+    for ((name, ids, fanout, floor) <- cases) {
+      val isBatch = col("vec_id").isin(ids.toSeq: _*)
+      val base = corpus.filter(!isBatch)
+      val batch = corpus.filter(isBatch)
+      val g = NnDescent.build(base, k = 4, maxRounds = 3)
+      def run(p: Rounds.Profile) = Rounds.forcing(p)(
+        NnDescent.insert(g, base, batch, k = 4, entryFanout = fanout,
+          bruteFloor = floor).as[(Long, Int, Long, Double)].collect().toSeq)
+      val local = run(Local)
+      def perNode(rows: Seq[(Long, Int, Long, Double)]) =
+        rows.groupBy(_._1).map { case (id, rs) => id -> rs.size }
+      for ((p, rows) <- Seq(Narrow -> run(Narrow), Wide -> run(Wide))) {
+        assert(rows.toSet == local.toSet, s"$name: $p")
+        assert(perNode(rows) == perNode(local), s"$name: $p")
+      }
+      assert(local.map(_._1).toSet == all, name)
+      if (name == "ties")
+        assert(local.groupBy(r => (r._1, r._4)).exists(_._2.size > 1), name)
+      if (name == "empty layer")
+        assert(base.filter(pmod(xxhash64(lit(43L), col("vec_id")),
+          lit(fanout)) === 0).isEmpty, name)
+    }
+  }
+
+  test("a Narrow loop keeps the caller's SQL conf: with ANSI off, " +
+    "narrow and wide builds over a zero-norm vector end alike") {
+    val key = "spark.sql.ansi.enabled"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      assert(Rounds.session(spark, Narrow).spark.conf.get(key) == "false")
+      def run(p: Rounds.Profile) = scala.util.Try(Rounds.forcing(p)(
+        NnDescent.build(zeroNorm, k = 4, maxRounds = 2)
+          .as[(Long, Int, Long, Double)].collect().toSet))
+      (run(Narrow), run(Wide)) match {
+        case (scala.util.Success(n), scala.util.Success(w)) => assert(n == w)
+        case (scala.util.Failure(n), scala.util.Failure(w)) =>
+          assert(n.getClass == w.getClass, s"$n vs $w")
+        case other => fail(s"profiles disagree: $other")
+      }
+    } finally spark.conf.set(key, before)
   }
 
   test("NnDescent.insert over a Local-built graph equals insert over a " +
