@@ -71,8 +71,8 @@ object Plans {
       "q_knn_ins" -> "graph-ANN incremental insert. When Rounds.profile picks Local (the largest state the driver twin holds — graph rows, base vectors, nBatch·(beam+2k) — within LocalRows, which covers sf0.001-sf0.1) the whole insert runs on the driver after ONE collect of the batch and ONE count plus ONE collect each of the graph and the base: the hierarchical walk (GraphSearch.walkLocal, entry rules in their driver form), the batch's brute or descent edges and every list trim (TopKEdges.prune) use the distributed kernels, bit-identical (ProfileParitySpec), so the plan shown is the merged LocalRelation, coalesced to one partition. Under Narrow or Wide: beam-searched cross edges over the persisted base graph + batch-local brute/descent edges; the batch/sliver-grain list trims run on the Narrow profile's clone and re-root on persisted RDDs (r18 — they were ~20 caller-width AQE stage-jobs of launch latency), while the corpus-scale passthrough stays a caller-width map-only broadcast anti join — every untouched base row rides through unshuffled, so the plan's cost scales with the batch, never the corpus",
       "q_url" -> "URL canonicalization + domain rollup: the six regex rules fuse into ONE map-only whole-stage-codegen select; the domain rollup is one hash aggregate joined back — nothing else exchanges",
       "q_qsk" -> "incremental quantile sketches: the bottom-k Aggregator's partial aggregation collapses every partition MAP-SIDE to <= k entries before each batch's one exchange; the union stage merges per-part ARRAYS (objectHashAggregate, no explode — sibling exact counts never fan out); the estimate is in-row array math",
-      "q_bm25c" -> "BM25 serving THROUGH compaction: the same query-term bucket PartitionFilters + broadcast term join as the incremental index, now over one-file buckets — compaction changed the file census, not one operator of the serving plan",
-      "q_bm25i" -> "incremental BM25 index serving (the r16 manifest-store lifecycle): the query terms' buckets select manifest LINES before any scan — the static prune is file-list construction, untouched buckets never reach the plan — then the pruned postings join the broadcast term table and the meta parts fold to the corpus stats; the scoring tail is the direct query's, which is why it reuses that oracle verbatim",
+      "q_bm25c" -> "BM25 serving THROUGH compaction: compaction re-files each fragmented bucket as one file and writes the meta rows' driver-side fold as one row; serving is the incremental index's shape over the one-file buckets — under Rounds.profile's Local band the meta rows and the query-term postings are two collects and the scoring runs on the driver, so the plan shown is the ranked LocalRelation; compaction changed the file census, not one served bit",
+      "q_bm25i" -> "incremental BM25 index serving (the r16 manifest-store lifecycle): the meta rows are collected and folded once, and the query terms' buckets are hashed on the driver (Spark's XXH64 of the UTF-8 term, floorMod), so manifest LINES are selected before any read — untouched buckets are never listed. When Rounds.profile picks Local (nDocs × distinct query terms within LocalRows, which covers sf0.001-sf0.1) the query-term postings are ONE collect and the scoring tail runs on the driver in the plan's own arithmetic (StrictMath.log idf, Decimal(28,8) sums, the (score desc, doc_id) rank), bit-identical (ProfileParitySpec), so the plan shown is the ranked LocalRelation: two jobs per call. Under Narrow or Wide the pruned postings join the broadcast term table with the stats as a one-row literal, and the scoring tail is the direct query's plan, which is why it reuses that oracle verbatim",
       "q_cdcm" -> "materialized CDC snapshot read: the committed bucket files resolve from ONE manifest read and scan directly — a merge REPLACES its buckets' lines, so every bucket is exactly one live file and the serve-time plan is a pruned file-list scan + op filter, with zero dedup or version-resolution work left to do",
       "q_rank2" -> "warm-started PageRank refresh. When Rounds.profile picks Local (r18 — such a graph is a few MB of longs and the distributed loop is pure launch latency) the identical integer fixed-point recurrence runs as one driver loop over the collected deduped edge list, bit-identical (ProfileParitySpec pins local == narrow == wide for cold and warm), so the served plan at this SF is the (node, rank) LocalRelation. Under Narrow or Wide the distributed round is unchanged: static edges+outdeg equi-joined to the RDD-re-rooted ranks, ONE dst hash aggregate, the dangling mass a broadcast one-row cross join — identical round shape to the cold recurrence, only the seed differs",
       "q_icorpus" -> "incremental corpus ASSEMBLY (the served output after the eager increment folded the batch into the artifacts): a map-side intrinsic filter (dflag) over exdocs, ONE dup-evidence-sized labels join for the canonical keep, and the map-only Lehmer sampling filter — corpus TEXT appears nowhere in the plan, because every text-grain stage was paid at ingest")

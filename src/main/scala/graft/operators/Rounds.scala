@@ -44,15 +44,18 @@ private[graft] object Rounds {
   /** Where an iterative loop runs — the ONE size policy the
     * iterative operators share (HostRank, GraphSearch's walk,
     * NnDescent's build and insert, CorpusIncrement's middle phase and
-    * touched-subgraph union-find). Each loop passes a row count it
-    * already holds (no extra job) to [[profile]]:
+    * touched-subgraph union-find), and the one launch-bound serving
+    * call that has a driver form, `Bm25Index.topK`. Each caller passes
+    * a row count it already holds (no extra job) to [[profile]]:
     *  - `Local`: at most [[LocalRows]] rows and the loop has a driver
     *    twin — the whole state is a few MB, while the distributed loop
     *    costs several scheduled jobs per round of pure launch latency.
     *    The twin runs the identical recurrence with the identical
-    *    kernels, so its rows are bit-identical. Loops with a twin:
-    *    HostRank, GraphSearch's walk, NnDescent's build and insert, and
-    *    CorpusIncrement's touched-subgraph union-find;
+    *    kernels, so its rows are bit-identical. Callers with a twin:
+    *    HostRank, GraphSearch's walk, NnDescent's build and insert,
+    *    CorpusIncrement's touched-subgraph union-find, and
+    *    `Bm25Index.topK` (sized by nDocs × distinct query terms, its
+    *    bound on the query postings; its Narrow form is its Wide plan);
     *  - `Narrow`: at most [[NarrowRows]] rows — the loop plans on a
     *    CLONED session (`newSession`: same SparkContext and caches,
     *    a copy of the caller's SQLConf) narrowed to 8 shuffle

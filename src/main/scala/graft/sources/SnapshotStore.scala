@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 
 /** MVCC-lite versioned-manifest store: the snapshot-isolation half of
   * an iceberg/delta-style table, at the engine's parts-store grain.
@@ -296,11 +296,8 @@ object SnapshotStore {
     * debugging for any generation still inside the grace window
     * (retired generations' manifests are gone and throw; generations
     * above the head never committed and throw). */
-  def read(spark: SparkSession, dir: String, asOfGen: Long): DataFrame = {
-    val (_, root) = fsOf(spark, dir)
-    spark.read.parquet(filesAsOf(spark, dir, asOfGen)
-      .map(f => new Path(root, f).toString): _*)
-  }
+  def read(spark: SparkSession, dir: String, asOfGen: Long): DataFrame =
+    readFiles(spark, dir, filesAsOf(spark, dir, asOfGen))
 
   /** Fold the current generation into one part (via `fold`, default
     * identity — pure file compaction; `numFiles` sizes the folded
@@ -432,12 +429,17 @@ object SnapshotStore {
 
   /** Plan over an exact store-relative file list (the reader's half:
     * resolve [[currentFiles]] once, select lines, read — the plan is
-    * pinned to those files for its lifetime). */
+    * pinned to those files for its lifetime). The schema comes from
+    * the first file's footer, read on the driver: every file a reader
+    * selects is one artifact written by one schema, and building the
+    * frame launches no job (inference would run one per read). */
   private[graft] def readFiles(spark: SparkSession, dir: String,
                                files: Seq[String]): DataFrame = {
     require(files.nonEmpty, s"no files to read under $dir")
     val (_, root) = fsOf(spark, dir)
-    spark.read.parquet(files.map(f => new Path(root, f).toString): _*)
+    val paths = files.map(f => new Path(root, f))
+    spark.read.schema(GraftBridge.parquetSchema(spark, paths.head))
+      .parquet(paths.map(_.toString): _*)
   }
 
   /** Age past which a file no manifest references is an orphan that

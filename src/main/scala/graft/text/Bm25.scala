@@ -42,6 +42,7 @@ object Bm25 {
   def topK(df: DataFrame, id: Column, text: Column,
            queries: Seq[(Int, String)], k: Int = 10,
            k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    requireParams(k1, b)
     val spark = df.sparkSession
     val qTerms = queryTerms(spark, queries)
     val terms = qTerms.select("term").distinct()
@@ -59,15 +60,26 @@ object Bm25 {
     scoreTf(tf, stats, qTerms, k, k1, b)
   }
 
-  /** (query_id, term) rows for a driver-sized query batch — the one
+  /** The scoring parameters' domain. Inside it every divisor of the
+    * scoring tail is at least 1 (tf >= 1, and k1 scales a non-negative
+    * length norm), so no score divides by zero. */
+  private[text] def requireParams(k1: Double, b: Double): Unit =
+    require(k1 >= 0 && !k1.isInfinite && b >= 0 && b <= 1,
+      s"BM25 needs a finite k1 >= 0 and 0 <= b <= 1, got k1 = $k1, b = $b")
+
+  /** (query_id, term) pairs of a driver-sized query batch — the one
     * tokenization of query text, shared with the index path. */
-  private[text] def queryTerms(spark: org.apache.spark.sql.SparkSession,
-                               queries: Seq[(Int, String)]): DataFrame = {
-    import spark.implicits._
+  private[text] def queryTermPairs(queries: Seq[(Int, String)]): Seq[(Int, String)] =
     queries.flatMap { case (qid, q) =>
       q.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct
         .map(t => (qid, t))
-    }.toDF("query_id", "term")
+    }
+
+  /** [[queryTermPairs]] as (query_id, term) rows. */
+  private[text] def queryTerms(spark: org.apache.spark.sql.SparkSession,
+                               queries: Seq[(Int, String)]): DataFrame = {
+    import spark.implicits._
+    queryTermPairs(queries).toDF("query_id", "term")
   }
 
   /** (doc_id, _tk, dl) — the one corpus tokenization, shared with the

@@ -49,6 +49,24 @@ object GraftBridge {
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       df.queryExecution.logical)
 
+  /** The Spark schema of one parquet file, read from its footer on the
+    * driver by the rule schema inference applies to the one file it
+    * samples when `mergeSchema` is off. Inference itself runs that
+    * footer read as a scheduled job on every `read.parquet` call. */
+  def parquetSchema(spark: SparkSession,
+                    file: org.apache.hadoop.fs.Path): types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState
+    val footer = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file,
+        state.newHadoopConf()),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file, footer),
+      new ParquetToSparkSchemaConverter(state.conf))
+  }
+
   /** Re-root a DataFrame plan on a materialized InternalRow RDD
     * (lineage/plan truncation for iterative algorithms, with the
     * persistence lifecycle under caller control — unlike

@@ -7,9 +7,9 @@ import graft.operators.Rounds.{Local, Narrow, Wide}
 import graft.text.CorpusIncrement
 import graft.vector.{GraphSearch, NnDescent}
 
-/** Pins for the execution profiles of the iterative operators: the
-  * driver loop, the narrowed-session loop and the caller-width loop
-  * ([[Rounds.profile]]) must produce BIT-IDENTICAL results — the
+/** Pins for the execution profiles of the iterative operators and of
+  * `Bm25Index.topK`: the driver loop, the narrowed-session loop and the
+  * caller-width loop ([[Rounds.profile]]) must produce BIT-IDENTICAL results — the
   * profile is a physical-execution choice only. Each test runs the
   * same small input under every profile the operator has, forced
   * through [[Rounds.forcing]], and compares exact row sets. */
@@ -291,5 +291,70 @@ class ProfileParitySpec extends SparkSpec {
     "distributed solves are bit-identical") {
     assert(increments(Local) == increments(Narrow))
     assert(increments(Local)._3.nonEmpty)
+  }
+
+  test("Bm25Index.topK: Local and Wide are bit-identical") {
+    import graft.text.Bm25Index
+    // ten texts over 40 docs whose ids do not follow the text: equal
+    // texts score equally, so doc_id decides ties, also across the cut
+    val texts = Seq("hash join hash", "window agg", "hash join",
+      "customer table scan", "table scan table", "join window", "scan",
+      "agg agg window hash", "customer join", "table")
+    val docs = (0 until 40).map(i =>
+      ((i * 17 % 101).toLong, texts(i % texts.length), i % 3)).toDF("doc_id", "text", "part")
+    val queries = Seq(1 -> "hash join hash", 2 -> "window JOIN window agg",
+      3 -> "table scan", 4 -> "hash", 5 -> "customer table scan hash")
+    def bits(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case x => x
+    }).toSet
+    def same(what: String)(serve: => org.apache.spark.sql.DataFrame) = {
+      val local = Rounds.forcing(Local)(serve)
+      val wide = Rounds.forcing(Wide)(serve)
+      assert(local.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation], what)
+      assert(local.schema == wide.schema, what)
+      val (l, w) = (bits(local), bits(wide))
+      assert(l == w, what)
+      local.collect().toSeq
+    }
+    def store(d: org.apache.spark.sql.DataFrame, nb: Int) = {
+      val dir = java.nio.file.Files.createTempDirectory("bm25_parity").toString
+      Bm25Index.build(d.filter(col("part") =!= 0), col("doc_id"), col("text"),
+        dir, nBuckets = nb)
+      Bm25Index.append(d.filter(col("part") === 0), col("doc_id"), col("text"), dir)
+      dir
+    }
+    val dir = store(docs, 64)
+    for ((k, k1, b) <- Seq((5, 1.2, 0.75), (3, 0.0, 1.0), (10, 2.0, 0.0))) {
+      val rows = same(s"k $k, k1 $k1, b $b")(
+        Bm25Index.topK(spark, dir, queries, k, k1, b))
+      assert(rows.map(_.getInt(0)).distinct.length == queries.length)
+      // a tie on score inside one query's top k
+      assert(rows.groupBy(r => (r.getInt(0), r.getDouble(3))).exists(_._2.size > 1))
+    }
+    // k1 = Double.MaxValue overflows scores past what the decimal cast
+    // holds: the driver form hands the call to the plan, so both forms
+    // end alike, in equal rows or the same error
+    def huge(p: Rounds.Profile) = scala.util.Try(Rounds.forcing(p) {
+      val df = Bm25Index.topK(spark, dir, queries, k1 = Double.MaxValue)
+      (df.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation], bits(df))
+    }).fold(e => Left(e.getClass), Right(_))
+    assert(huge(Local) == huge(Wide))
+    // a query whose only term hashes to a bucket with no file
+    val used = texts.flatMap(_.split(" ")).map(Bm25Index.bucketLocal(_, 64)).toSet
+    val absent = Iterator.from(0).map(i => s"absent$i")
+      .find(t => !used(Bm25Index.bucketLocal(t, 64))).get
+    assert(same("no postings file")(
+      Bm25Index.topK(spark, dir, Seq(1 -> absent))).isEmpty)
+    // a string doc_id keeps its type and orders as Spark orders strings
+    val sdir = store(docs.withColumn("doc_id", concat(lit("d"), col("doc_id"))), 8)
+    val srows = same("string doc_id")(Bm25Index.topK(spark, sdir, queries))
+    assert(srows.nonEmpty && srows.forall(_.get(1).isInstanceOf[String]))
+    // a pinned generation: the build alone, before the append
+    val pinned = same("as of generation 1")(Bm25Index.topKAsOf(spark, dir, 1L, queries))
+    assert(pinned.nonEmpty &&
+      pinned.toSet != Bm25Index.topK(spark, dir, queries).collect().toSet)
   }
 }

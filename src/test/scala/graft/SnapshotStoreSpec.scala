@@ -366,4 +366,58 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(rows(SnapshotStore.read(spark, dir)) ===
       (1L to 5L).map(i => (i, s"v$i")).toSet)
   }
+
+  test("readFiles takes each store artifact's schema from one footer: " +
+      "the inferred schema, and building the frame launches no job") {
+    import graft.streaming.{CdcEvent, ChangeLogStream}
+    import graft.text.{Bm25Index, CardStore, CorpusIncrement, LmStore}
+    import graft.vector.{IndexStore, IvfAnn}
+    val docs = Tables.load(spark, sfDir, "documents")
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val half = pmod(col("doc_id"), lit(2))
+    val bm25 = tmp("rf_bm25")
+    Bm25Index.build(docs.filter(half === 0), col("doc_id"), col("text"), bm25,
+      nBuckets = 4)
+    Bm25Index.append(docs.filter(half === 1), col("doc_id"), col("text"), bm25)
+    val index = tmp("rf_index")
+    val emb = Tables.embeddings(spark, sfDir)
+    val (assigned, cents) = IvfAnn.quantize(emb, nlist = 4)
+    IndexStore.saveIvf(index, emb, assigned, cents)
+    val cdc = tmp("rf_cdc")
+    Seq(Seq(CdcEvent(1L, 1L, 10L, "U", "a"), CdcEvent(2L, 1L, 20L, "U", "b")),
+        Seq(CdcEvent(2L, 5L, 21L, "D", "b"))).zipWithIndex.foreach { case (b, i) =>
+      ChangeLogStream.materializeBatch(cdc, 3)(
+        b.toDF().selectExpr("id", "ver1", "ver2", "op", "payload"), i.toLong)
+    }
+    val corpus = tmp("rf_corpus")
+    CorpusIncrement.build(CorpusIncrementSpec.base.toDF("doc_id", "text", "lang", "source"),
+      CorpusIncrementSpec.evalDocs.toDF("doc_id", "text", "lang", "source"), corpus,
+      threshold = 0.4, maxDf = 3L, rates = CorpusIncrementSpec.rates, nBuckets = 4)
+    val lm = tmp("rf_lm")
+    val card = tmp("rf_card")
+    Seq(0, 1).foreach { i =>
+      LmStore.append(docs.filter(half === i), col("text"), lm)
+      CardStore.append(docs.filter(half === i), col("doc_id"), col("text"),
+        col("lang"), card)
+    }
+    LmStore.compact(spark, lm)
+    for (dir <- Seq(bm25, index, cdc, corpus, lm, card)) {
+      // one artifact: the lines under one part-dir kind (uid dropped)
+      val kinds = SnapshotStore.currentFiles(spark, dir).groupBy(l =>
+        l.split("/").take(2).mkString("/").replaceAll("_[^_/]*$", ""))
+      assert(kinds.size >= 2 || dir == lm || dir == card, s"$dir: $kinds")
+      for ((kind, ls) <- kinds) {
+        val (df, jobs) = JobCount.during(spark)(SnapshotStore.readFiles(spark, dir, ls))
+        assert(jobs == 0, s"$dir $kind")
+        assert(df.schema == spark.read.parquet(ls.map(l => s"$dir/$l"): _*).schema,
+          s"$dir $kind")
+      }
+    }
+    for (dir <- Seq(lm, card)) {
+      val (df, jobs) = JobCount.during(spark)(SnapshotStore.read(spark, dir))
+      assert(jobs == 0, dir)
+      assert(df.schema == spark.read.parquet(SnapshotStore.currentFiles(spark, dir)
+        .map(l => s"$dir/$l"): _*).schema, dir)
+    }
+  }
 }
